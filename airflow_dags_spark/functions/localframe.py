@@ -30,7 +30,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import MapType, StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 
 def tiny_df(
@@ -44,11 +44,12 @@ def tiny_df(
     schema, same as ``createDataFrame([], schema)``.
 
     Raises ``ValueError`` on rows whose width differs from the schema's
-    and ``TypeError`` on struct/map fields (flat schemas only) — both
-    would otherwise fail silently or deep inside pyarrow."""
+    and ``TypeError`` on struct/map fields, also as the elements of
+    (nested) arrays (flat schemas only) — both would otherwise fail
+    silently or deep inside pyarrow."""
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     for f in st.fields:
-        if isinstance(f.dataType, (StructType, MapType)):
+        if _nests_struct_or_map(f.dataType):
             raise TypeError(
                 f"tiny_df supports flat schemas only; field {f.name!r} is "
                 f"{f.dataType.simpleString()} — use createDataFrame"
@@ -71,3 +72,9 @@ def tiny_df(
     return spark.createDataFrame(
         pa.Table.from_arrays(arrays, schema=pa_schema), schema=st
     )
+
+
+def _nests_struct_or_map(dt: DataType) -> bool:
+    while isinstance(dt, ArrayType):
+        dt = dt.elementType
+    return isinstance(dt, (StructType, MapType))

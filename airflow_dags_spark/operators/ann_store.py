@@ -198,7 +198,18 @@ class IvfIndexStore:
     the drift policy adds a ``refit`` flag. A legacy ledger is migrated
     in place on the first commit (tiny table, atomic swap) with its
     version-0 init marked as the fit — so ``last_fit_version`` on an
-    un-migrated store reads 0, which is exactly the fit it had."""
+    un-migrated store reads 0, which is exactly the fit it had.
+
+    **Excluded concurrent writers**: at most ONE writer (``init_from``,
+    ``add_batch``, ``maybe_refit``) per store path at a time; the caller
+    serializes them (one streaming query per sink checkpoint, an Airflow
+    DAG with ``max_active_runs=1``). Nothing detects a second writer: two
+    writers read the same ledger version, both write ``state/v{n+1}`` (the
+    later overwrite wins, so one batch's sums are lost while both batch
+    ids land in the ledger), and two replays of one ``batch_id`` can both
+    pass the applied check and append duplicate ledger rows. Readers are
+    safe beside the one writer: a version's state is written before its
+    ledger row, and a written version never changes."""
 
     def __init__(
         self,
@@ -596,6 +607,10 @@ class PqCodebookStore:
     per-(subspace, code, dim) partial aggregation; only m × n_codes ×
     (dim/m) = n_codes × dim partials reach the driver. A refit reads the
     bounded reservoir sample, never the corpus.
+
+    **Excluded concurrent writers**: the same rule and the same failure
+    modes as :class:`IvfIndexStore` — one writer per store path at a time,
+    serialized by the caller; readers beside it are safe.
     """
 
     def __init__(

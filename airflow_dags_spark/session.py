@@ -2,7 +2,11 @@
 
 The engine targets a 1000-executor cluster over ~100 TB; tests run on
 ``local[N]``. Every conf here is chosen for the big cluster and is harmless
-locally:
+locally. They come in two kinds.
+
+Runtime confs (``ENGINE_CONFS``) can be set on a live session, so
+``tune_session`` applies them to sessions the engine does not own (an
+external harness that imports the engine builds its own plain session):
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) so a
   fixed ``spark.sql.shuffle.partitions`` is a ceiling, not a bet.
@@ -10,6 +14,18 @@ locally:
 - UTC session timezone — the reference runs UTC
   (``scripts/airflow_home/airflow.cfg:43``) and the DuckDB correctness
   oracle is timezone-naive.
+
+Launch-only confs (``LAUNCH_CONFS`` plus the driver heap) are read once,
+when the JVM or its Python worker daemon starts, so only ``get_spark``'s
+builder path sets them; ``tune_session`` leaves them alone:
+
+- ``spark.python.daemon.module`` selects ``worker_daemon``, which forks the
+  Python workers like ``pyspark.daemon`` but stops each task from
+  re-reading the ``pyspark.zip`` directory (see that module). The package
+  root goes on the workers' ``PYTHONPATH`` so the daemon imports from any
+  working directory.
+- ``spark.sql.codegen.cache.maxEntries`` keeps every generated class of a
+  session's plans compiled once (sized below).
 """
 
 from __future__ import annotations
@@ -43,6 +59,22 @@ ENGINE_CONFS: dict[str, str] = {
     # on text-heavy corpora at similar scan speed — at 100 TB that is pure
     # storage + scan-I/O savings; decode stays JVM-native and vectorized.
     "spark.sql.parquet.compression.codec": "zstd",
+}
+
+# The directory holding this package, for the Python workers' PYTHONPATH.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Confs read only at JVM / worker-daemon start (see the module docstring).
+LAUNCH_CONFS: dict[str, str] = {
+    "spark.python.daemon.module": "airflow_dags_spark.worker_daemon",
+    # Spark's default of 100 generated classes thrashes: every repeat pass
+    # of perfbench's sweep_tail recompiled 76 of them through Janino (and
+    # the JIT), every pricepaid_cycle pass 105. Measured in one JVM with an
+    # unbounded cache: bench.py's 44 headline queries, one pass of each
+    # perfbench workload and a second headline round compile 994 distinct
+    # classes (741 + 115 + 112 + 26), after which repeat passes compile 0.
+    # 2048 is about twice that.
+    "spark.sql.codegen.cache.maxEntries": "2048",
 }
 
 
@@ -95,13 +127,18 @@ def get_spark(
     builder = builder.config(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     )
-    for key, value in ENGINE_CONFS.items():
-        builder = builder.config(key, value)
+    confs = {**LAUNCH_CONFS, **ENGINE_CONFS}
     if shuffle_partitions is not None:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    for key, value in (extra_confs or {}).items():
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    confs.update(extra_confs or {})
+    # Without the package root the daemon module is importable only when the
+    # JVM's working directory or PYTHONPATH happens to hold it, and every
+    # Python UDF fails otherwise.
+    paths = confs.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    confs["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [PACKAGE_ROOT] + [p for p in paths if p and p != PACKAGE_ROOT]
+    )
+    for key, value in confs.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     return tune_session(spark)
