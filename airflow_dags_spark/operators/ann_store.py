@@ -1,40 +1,36 @@
-"""Persistent, incrementally re-centered IVF coarse-quantizer index — the
-similarity-search analog of :class:`operators.ingest.MinhashSignatureStore`
-(VERDICT r7 §Next-round #6: "maintain the ANN index as the corpus grows").
+"""Persistent, incrementally re-centered ANN quantizers: the IVF coarse
+quantizer (:class:`IvfIndexStore`) and the PQ codebooks
+(:class:`PqCodebookStore`) — the similarity-search analog of
+:class:`operators.ingest.MinhashSignatureStore` (VERDICT r7 §Next-round
+#6: "maintain the ANN index as the corpus grows").
 
-An IVF index trained once degrades as the corpus drifts: new documents
+An ANN index trained once degrades as the corpus drifts: new documents
 cluster where no cell is dense, probe recall decays, and a full re-train
-re-scans the corpus. This store instead keeps the *sufficient statistics*
-of spherical k-means per cell — ``(cell, vec_sum[dim], n_members)`` over
-unit-normalized member vectors — so each arriving batch folds in with one
-distributed assignment pass plus a k×dim-bounded state update, and the
-current centroids are always ``normalize(vec_sum / n_members)``. This is
-the mini-batch k-means update of Sculley (WWW'10) with batch-grained
-steps, persisted.
+re-scans the corpus. These stores instead keep the *sufficient
+statistics* of spherical k-means per cell (per (subspace, code) for PQ) —
+``(…, vec_sum[dim], n_members)`` over unit-normalized member vectors — so
+each arriving batch folds in with one distributed assignment pass plus a
+k×dim-bounded state update, and the current model is always derived from
+``vec_sum / n_members``. This is the mini-batch k-means update of Sculley
+(WWW'10) with batch-grained steps, persisted.
 
-Replay safety (at-least-once ingestion, the MinhashSignatureStore
-discipline): state is VERSIONED. Each applied batch writes a full
-``state/v{n}`` parquet (k×dim rows — tiny) and then appends
-``(batch_id, version)`` to a keyed ledger via K3 insert-if-absent. The
-current state is the ledger's max version; a replayed ``batch_id`` is a
-no-op, and a crash between the state write and the ledger append leaves an
-orphan ``v{n}`` that the replay deterministically overwrites before the
-ledger lands. No partial state is ever observable.
+Replay safety is the versioned-state + batch-ledger protocol of
+:mod:`operators.versioned_store` (which also states the excluded
+concurrent writers): each applied batch writes a full ``state/v{n}``
+parquet (k×dim rows — tiny) and then appends ``(batch_id, version,
+refit)`` to the ledger.
 
 100 TB shape: the batch side does one shuffle-free Arrow-batched
-assignment (numpy matmul per batch against the broadcast k×dim centroid
-matrix — the `ivf_ann_topk` fast path) and one per-(cell, dim) partial
-aggregation; only k×dim (sum, count) partials ever reach the driver — the
-bounded-collect rule of ``operators/clustering.py``. The corpus is never
-re-scanned, mirroring the signature store's sign-once property.
+assignment (numpy matmul per batch against the broadcast k×dim model —
+the `ivf_ann_topk` fast path) and one per-cell partial aggregation; only
+k×dim (sum, count) partials ever reach the driver — the bounded-collect
+rule of ``operators/clustering.py``. The corpus is never re-scanned,
+mirroring the signature store's sign-once property.
 
-:class:`PqCodebookStore` (round 9) is the product-quantization sibling:
-same versioned-state + batch-ledger discipline over per-(subspace, code)
-sufficient statistics. BOTH stores carry the re-center-vs-re-train drift
-policy (round 10 backported it to the IVF store): a deterministic
+Both stores carry the re-center-vs-re-train drift policy: a deterministic
 md5-sampled vector reservoir feeds a seeded re-fit via ``maybe_refit``
-when the maintained centers have drifted past the caller's threshold —
-and both feed the SERVING path directly: ``ivf_ann_topk(centers=
+when the maintained model has drifted past the caller's threshold — and
+both feed the SERVING path directly: ``ivf_ann_topk(centers=
 store.centroids_matrix())`` / ``pq_ann_topk(books=store.codebooks())``
 search against the maintained artifacts with no per-call re-fit.
 
@@ -45,36 +41,15 @@ vector surface at all; this extends the engine's LLM-pipeline brief
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from airflow_dags_spark.functions.localframe import tiny_df
 from airflow_dags_spark.functions.vectors import as_double
 from airflow_dags_spark.operators.upsert import ParquetTable
-
-
-def _assign_cells(vec_col: str, centers: np.ndarray):
-    """Shuffle-free cell assignment: cosine argmax against the broadcast
-    centroid matrix, one BLAS matmul per Arrow batch (ties → lowest cell,
-    matching np.argmax)."""
-    from pyspark.sql.functions import pandas_udf
-
-    unit_centers = centers / np.where(
-        np.linalg.norm(centers, axis=1, keepdims=True) > 0,
-        np.linalg.norm(centers, axis=1, keepdims=True),
-        1.0,
-    )
-
-    @pandas_udf("int")
-    def _cell_of(v: pd.Series) -> pd.Series:
-        x = np.vstack(v.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(x, axis=1, keepdims=True)
-        x = x / np.where(norms > 0, norms, 1.0)
-        return pd.Series(np.argmax(x @ unit_centers.T, axis=1).astype("int32"))
-
-    return _cell_of(F.col(vec_col))
+from airflow_dags_spark.operators.versioned_store import VersionedStore
 
 
 def ivf_batch_stats(
@@ -179,37 +154,34 @@ def ivf_batch_stats(
     ]
 
 
-class IvfIndexStore:
-    """Parquet-backed IVF cell state with batch-grained incremental
-    re-centering. See the module docstring for the design contract.
+class _AnnStore(VersionedStore):
+    """Versioned quantizer statistics with the drift policy. The state's
+    last two columns are ``vec_sum, n_members``; the columns before them
+    key the cell. Subclasses supply the fit (``_fit``), the stats kernel
+    (``_batch_stats``), model-from-state (``_model_from``), the state
+    schema, and the names ``init_from`` / ``add_batch`` report the model
+    shape and shift under.
 
-    **Re-center vs re-train** (the drift policy, mirroring
-    :class:`PqCodebookStore`): incremental folding re-centers cells toward
-    their true member means but cannot move a vector across Voronoi
-    boundaries — after enough corpus drift the coarse PARTITION itself is
-    stale, and a stale coarse quantizer hurts probe recall more than any
-    codebook does. The store keeps a deterministic md5-sampled vector
-    reservoir and a ``refit`` ledger flag; :meth:`drift_since_fit`
-    measures how far the current centroids have re-centered away from the
-    last fit's, and :meth:`maybe_refit` re-trains the quantizer from the
-    reservoir (seeded Lloyd) only past the caller's threshold.
+    **Re-center vs re-train**: incremental folding re-centers the model
+    toward the true member means but cannot move a vector across Voronoi
+    boundaries — after enough corpus drift the PARTITION itself is stale.
+    The store therefore keeps (a) a deterministic md5-sampled VECTOR
+    RESERVOIR (parquet, keyed insert-if-absent — grows with the corpus at
+    the sample rate, replay-pure), and (b) a ``refit`` flag on ledger rows
+    marking which versions were (re)fits. :meth:`drift_since_fit`
+    measures how far the current model has re-centered away from the
+    last fit's; :meth:`maybe_refit` re-trains from the reservoir (seeded
+    Lloyd) only past the caller's threshold.
 
-    Ledger format note: rounds ≤ 9 wrote ``(batch_id, version)`` rows;
-    the drift policy adds a ``refit`` flag. A legacy ledger is migrated
-    in place on the first commit (tiny table, atomic swap) with its
-    version-0 init marked as the fit — so ``last_fit_version`` on an
-    un-migrated store reads 0, which is exactly the fit it had.
+    Ledger format note: IVF ledgers of rounds ≤ 9 wrote ``(batch_id,
+    version)`` rows. Such a ledger is migrated in place on its first
+    commit (tiny table, atomic swap) with its version-0 init marked as the
+    fit — so ``last_fit_version`` on an un-migrated store reads 0, which
+    is exactly the fit it had."""
 
-    **Excluded concurrent writers**: at most ONE writer (``init_from``,
-    ``add_batch``, ``maybe_refit``) per store path at a time; the caller
-    serializes them (one streaming query per sink checkpoint, an Airflow
-    DAG with ``max_active_runs=1``). Nothing detects a second writer: two
-    writers read the same ledger version, both write ``state/v{n+1}`` (the
-    later overwrite wins, so one batch's sums are lost while both batch
-    ids land in the ledger), and two replays of one ``batch_id`` can both
-    pass the applied check and append duplicate ledger rows. Readers are
-    safe beside the one writer: a version's state is written before its
-    ledger row, and a written version never changes."""
+    _ledger_schema = "batch_id string, version int, refit boolean"
+    _shape_keys: tuple[str, ...]
+    _shift_key: str
 
     def __init__(
         self,
@@ -219,58 +191,210 @@ class IvfIndexStore:
         key_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.key_col = key_col
+        super().__init__(spark, path, key_col=key_col)
         self.vec_col = vec_col
-        self._ledger = ParquetTable(spark, f"{self.path}/ledger", "batch_id")
         self._sample = ParquetTable(spark, f"{self.path}/sample", key_col)
-        # Version-keyed cache of the k×dim state rows this instance last
-        # wrote or collected. State versions are WRITE-ONCE (a replay
-        # overwriting an orphan version rewrites identical bytes), so the
-        # cache can never serve stale content for a version it holds.
-        # Per-instance/per-process only — every new invocation re-reads
-        # parquet, so this is NOT cross-run caching. The ledger, by
-        # contrast, is mutable and is re-collected ONCE per public method
-        # (rows threaded through the private checks) instead of cached —
-        # that one collect replaces the 3-4 separate Spark jobs the old
-        # exists/applied/version/migration checks each paid.
-        self._state_cache: tuple[int, list] | None = None
 
     # -- state access -------------------------------------------------------
 
-    def exists(self) -> bool:
-        return self._ledger.exists()
-
-    def _ledger_rows(self) -> list | None:
-        """The full (tiny) ledger as collected rows — ONE job per public
-        method serves exists/applied/version/migration checks (callers
-        thread the rows through instead of re-reading per check)."""
-        if not self._ledger.exists():
-            return None
-        return self._ledger.read().collect()
-
-    def current_version(self, _rows: list | None = None) -> int:
-        rows = self._ledger_rows() if _rows is None else _rows
-        if not rows:
-            return -1
-        return max(int(r["version"]) for r in rows)
-
-    def state(self) -> DataFrame:
-        """Current sufficient statistics: (cell, vec_sum, n_members)."""
-        v = self.current_version()
+    def _model(self, _rows: list | None = None) -> np.ndarray:
+        v = self.current_version(_rows)
         if v < 0:
-            raise ValueError(f"IVF index at {self.path} not initialized")
-        return self.spark.read.parquet(f"{self.path}/state/v{v}")
+            raise self._not_initialized()
+        return self._model_from(self._state_rows(v))
 
-    def _state_rows(self, version: int) -> list:
-        """Collected state rows for ``version`` — served from the
-        in-process cache when this instance just wrote or read them."""
-        if self._state_cache is not None and self._state_cache[0] == version:
-            return self._state_cache[1]
-        rows = self._state_at(version).collect()
-        self._state_cache = (version, rows)
-        return rows
+    @staticmethod
+    def _shift(a: np.ndarray, b: np.ndarray) -> float:
+        """Mean L2 distance between matching rows (centroids or codes)."""
+        d = a.reshape(-1, a.shape[-1]) - b.reshape(-1, b.shape[-1])
+        return float(np.linalg.norm(d, axis=1).mean())
+
+    def last_fit_version(self, _rows: list | None = None) -> int:
+        """Version of the last (re)train; a pre-drift-policy ledger (no
+        ``refit`` column yet) has exactly one fit — its version-0 init."""
+        rows = (self._ledger_rows() if _rows is None else _rows) or []
+        if not rows or "refit" not in rows[0].__fields__:
+            return 0
+        fits = [int(r["version"]) for r in rows if r["refit"]]
+        return max(fits) if fits else 0
+
+    def _drift(self, model: np.ndarray, ledger: list | None) -> float:
+        fit = self._state_at(self.last_fit_version(ledger)).collect()
+        return self._shift(model, self._model_from(fit))
+
+    def drift_since_fit(self) -> float:
+        """Mean L2 shift of the model rows between the last (re)fit
+        version's state and the current state — the observable that
+        drives the re-center-vs-re-train policy."""
+        ledger = self._ledger_rows()
+        return self._drift(self._model(ledger), ledger)
+
+    # -- writes -------------------------------------------------------------
+
+    def _commit(
+        self, batch_id: str, version: int, _rows: list | None, refit: bool
+    ) -> None:
+        if _rows and "refit" not in _rows[0].__fields__:
+            # one-time in-place schema migration of a pre-drift-policy
+            # ledger: its version-0 init was its one fit. Appending to the
+            # old schema would silently drop the flag instead.
+            self._ledger._atomic_overwrite(
+                self._ledger.read().withColumn("refit", F.col("version") == 0)
+            )
+        super()._commit(batch_id, version, _rows, refit)
+
+    def _reserve(self, vecs: DataFrame, sample_hex: str) -> None:
+        """Fold the batch's deterministic md5 sample into the reservoir
+        (keyed insert-if-absent → replay-pure, grows at the sample rate)."""
+        picked = vecs.where(
+            F.substring(F.md5(F.col(self.key_col).cast("string")), 1, 1)
+            < sample_hex
+        ).select(self.key_col, as_double(self.vec_col).alias("v"))
+        self._sample.insert_if_absent(picked, order_by=[self.key_col])
+
+    def _init_from(
+        self, vecs, shape, batch_id, fit_sample, max_iter, seed, sample_hex
+    ) -> dict:
+        ledger = self._ledger_rows()
+        if ledger is not None:
+            if self._applied(batch_id, ledger):
+                return {"applied": False, "version": self.current_version(ledger)}
+            raise ValueError("init_from on an already-initialized store")
+        clean = vecs.where(F.col(self.vec_col).isNotNull())
+        model = self._fit(clean, shape, fit_sample, max_iter, seed)
+        self._reserve(clean, sample_hex)
+        self._write_state(self._batch_stats(clean, model, shape), 0)
+        self._commit(batch_id, 0, None, True)
+        return {"applied": True, "version": 0, **dict(zip(self._shape_keys, shape))}
+
+    def add_batch(
+        self, vecs: DataFrame, batch_id: str, *, sample_hex: str = "4"
+    ) -> dict:
+        """Assign a new batch to the CURRENT model, fold its per-cell sums
+        into the state, persist as the next version. Replay of an applied
+        ``batch_id`` is a no-op (ledger check); a crash between the state
+        write and the ledger append is healed by the replay
+        deterministically overwriting the orphan version.
+
+        Manual batch ids should AVOID the bare ``b<digits>`` shape: the
+        streaming sinks' one-release legacy-migration check treats such
+        ledger keys as pre-namespace sink commits, so a store seeded
+        manually with ``b1`` and later attached to a sink would skip
+        stream micro-batch 1 (pass ``legacy_ledger_check=False`` to the
+        sink if a store already carries such keys)."""
+        ledger = self._ledger_rows()  # ONE ledger job: applied + version
+        if self._applied(batch_id, ledger):
+            return {"applied": False, "version": self.current_version(ledger)}
+        version0 = self.current_version(ledger)
+        if version0 < 0:
+            raise self._not_initialized()
+        # ONE state read serves both the model and the fold base (the
+        # streaming sinks run this per micro-batch)
+        state_rows = self._state_rows(version0)
+        model = self._model_from(state_rows)
+        clean = vecs.where(F.col(self.vec_col).isNotNull())
+        self._reserve(clean, sample_hex)
+        cur = {tuple(r[:-2]): (list(r[-2]), int(r[-1])) for r in state_rows}
+        merged = []
+        n_new = 0
+        for *key, dsum, dn in self._batch_stats(clean, model, model.shape[:-1]):
+            osum, on = cur[tuple(key)]
+            if dn == 0:
+                # empty delta carries no dimensions — keep the old sums
+                merged.append((*key, osum, on))
+                continue
+            if len(dsum) != len(osum):
+                raise ValueError(
+                    f"batch vector dim {len(dsum)} != store dim {len(osum)} "
+                    f"(cell {key}) — zip would silently truncate sums"
+                )
+            merged.append((*key, [a + b for a, b in zip(osum, dsum)], on + dn))
+            n_new += dn
+        version = version0 + 1
+        self._write_state(merged, version)
+        self._commit(batch_id, version, ledger, False)
+        # the new model comes from the cache _write_state just seeded: no
+        # state re-read on the per-micro-batch path
+        shift = self._shift(self._model_from(self._state_rows(version)), model)
+        return {
+            "applied": True,
+            "version": version,
+            # a PQ vector is counted once per subspace
+            "n_assigned": n_new // math.prod(model.shape[:-2]),
+            self._shift_key: round(shift, 9),
+        }
+
+    def maybe_refit(
+        self,
+        batch_id: str,
+        *,
+        drift_threshold: float,
+        fit_sample: int = 20000,
+        max_iter: int = 10,
+        seed: int = 42,
+    ) -> dict:
+        """The re-train arm of the drift policy: when the model has
+        re-centered further than ``drift_threshold`` from the last fit,
+        re-train it from the reservoir (seeded Lloyd on a DETERMINISTIC
+        md5-ordered subset — stable under reservoir growth order) and seed
+        the new version's statistics from the reservoir's assignment to
+        the new model. Below the threshold: no-op (incremental
+        re-centering is still adequate). Idempotent on ``batch_id`` — a
+        replayed refit never trains twice. An EMPTY reservoir (no key
+        sampled yet at the configured ``sample_hex`` rate) is a diagnosed
+        no-op, never a crash — the streaming sink must not die mid-batch
+        on a small corpus."""
+        ledger = self._ledger_rows()  # ONE ledger job for the whole call
+        if self._applied(batch_id, ledger):
+            return {"applied": False, "version": self.current_version(ledger)}
+        version0 = self.current_version(ledger)
+        cur = self._model_from(self._state_rows(version0))
+        drift = self._drift(cur, ledger)
+        if drift <= drift_threshold:
+            return {"applied": False, "refit": False, "drift": round(drift, 9)}
+        if not self._sample.exists() or self._sample.read().limit(1).count() == 0:
+            return {
+                "applied": False,
+                "refit": False,
+                "drift": round(drift, 9),
+                "reason": "empty_reservoir",
+            }
+        shape = cur.shape[:-1]
+        sample = (
+            self._sample.read()
+            .orderBy(
+                F.md5(F.col(self.key_col).cast("string")), F.col(self.key_col)
+            )
+            .limit(fit_sample)
+            .select(F.col("v").alias(self.vec_col))
+        )
+        model = self._fit(sample, shape, fit_sample, max_iter, seed)
+        stats = self._batch_stats(
+            self._sample.read().select(F.col("v").alias(self.vec_col)),
+            model,
+            shape,
+        )
+        version = version0 + 1
+        self._write_state(stats, version)
+        self._commit(batch_id, version, ledger, True)
+        return {
+            "applied": True,
+            "refit": True,
+            "version": version,
+            "drift": round(drift, 9),
+        }
+
+
+class IvfIndexStore(_AnnStore):
+    """Parquet-backed IVF cell state — ``(cell, vec_sum, n_members)`` per
+    version — with batch-grained incremental re-centering. A stale coarse
+    partition hurts probe recall more than any codebook does, which is
+    what the drift policy's re-train guards against."""
+
+    _label = "IVF index"
+    _state_schema = "cell int, vec_sum array<double>, n_members bigint"
+    _shape_keys = ("n_cells",)
+    _shift_key = "mean_centroid_shift"
 
     @staticmethod
     def _centers_from(state_rows) -> np.ndarray:
@@ -282,33 +406,24 @@ class IvfIndexStore:
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
         return mat / np.where(norms > 0, norms, 1.0)
 
+    _model_from = _centers_from
+
+    def _fit(self, vecs, shape, fit_sample, max_iter, seed) -> np.ndarray:
+        from airflow_dags_spark.operators.similarity import _fit_coarse_quantizer
+
+        return _fit_coarse_quantizer(
+            vecs, self.vec_col, *shape, fit_sample, max_iter, seed
+        )
+
+    def _batch_stats(self, vecs, centers, shape) -> list[tuple]:
+        # the fit can return fewer centers than cells on a tiny sample;
+        # the missing cells stay empty
+        return ivf_batch_stats(vecs, centers, shape[0], vec_col=self.vec_col)
+
     def centroids_matrix(self) -> np.ndarray:
         """Current centroids as a dense (k, dim) array — bounded k×dim
         driver-side, ordered by cell id."""
-        v = self.current_version()
-        if v < 0:
-            raise ValueError(f"IVF index at {self.path} not initialized")
-        return self._centers_from(self._state_rows(v))
-
-    def _state_at(self, version: int) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/state/v{version}")
-
-    def last_fit_version(self, _rows: list | None = None) -> int:
-        """Version of the last (re)train; a pre-drift-policy ledger (no
-        ``refit`` column yet) has exactly one fit — its version-0 init."""
-        rows = (self._ledger_rows() if _rows is None else _rows) or []
-        if not rows or "refit" not in rows[0].__fields__:
-            return 0
-        fits = [int(r["version"]) for r in rows if r["refit"]]
-        return max(fits) if fits else 0
-
-    def drift_since_fit(self) -> float:
-        """Mean L2 shift of unit centroids between the last (re)fit
-        version's state and the current state — the observable that
-        drives the re-center-vs-re-train policy."""
-        cur = self.centroids_matrix()
-        fit = self._centers_from(self._state_at(self.last_fit_version()).collect())
-        return float(np.linalg.norm(cur - fit, axis=1).mean())
+        return self._model()
 
     def centroids(self) -> DataFrame:
         """Current unit-normalized centroids as (cell, centroid) rows.
@@ -333,71 +448,6 @@ class IvfIndexStore:
         )
         return s.select("cell", unit.alias("centroid"), "n_members")
 
-    # -- writes -------------------------------------------------------------
-
-    def _write_state(self, stats: list[tuple], version: int) -> None:
-        # tiny_df: Arrow local relation — a pickled-list createDataFrame
-        # costs ~5 s of Python-worker round-trips per state version
-        df = tiny_df(
-            self.spark, stats, "cell int, vec_sum array<double>, n_members bigint"
-        )
-        # deterministic single tiny file: k×dim rows ≈ KBs
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.path}/state/v{version}"
-        )
-        self._state_cache = (
-            version,
-            [
-                {"cell": c, "vec_sum": s, "n_members": n}
-                for c, s, n in stats
-            ],
-        )
-
-    def _commit(
-        self,
-        batch_id: str,
-        version: int,
-        refit: bool,
-        _rows: list | None = None,
-    ) -> None:
-        """Append the ledger row. The caller threads the collected ledger
-        (``_rows``) through and has ALREADY verified that ``batch_id`` is
-        absent, so this is a plain one-row append — the anti-join re-read
-        ``insert_if_absent`` would do re-checks the same fact a second
-        time per commit, which is pure maintenance-path latency (the
-        streaming sinks commit once per micro-batch)."""
-        rows = self._ledger_rows() if _rows is None else _rows
-        if rows and "refit" not in rows[0].__fields__:
-            # one-time in-place schema migration of a pre-drift-policy
-            # ledger (tiny table, atomic swap): its version-0 init was
-            # its one fit. Appending to the old schema would silently
-            # drop the flag instead.
-            self._ledger._atomic_overwrite(
-                self._ledger.read().withColumn("refit", F.col("version") == 0)
-            )
-        row = tiny_df(
-            self.spark,
-            [(batch_id, version, refit)],
-            "batch_id string, version int, refit boolean",
-        )
-        if rows is None:
-            self._ledger._atomic_overwrite(row)
-        else:
-            self._ledger.append(row)
-
-    def _applied(self, batch_id: str, _rows: list | None = None) -> bool:
-        rows = self._ledger_rows() if _rows is None else _rows
-        return bool(rows) and any(r["batch_id"] == batch_id for r in rows)
-
-    def _reserve(self, vecs: DataFrame, sample_hex: str) -> None:
-        """Fold the batch's deterministic md5 sample into the reservoir
-        (keyed insert-if-absent → replay-pure, grows at the sample rate)."""
-        picked = vecs.where(
-            F.substring(F.md5(F.col(self.key_col).cast("string")), 1, 1)
-            < sample_hex
-        ).select(self.key_col, as_double(self.vec_col).alias("v"))
-        self._sample.insert_if_absent(picked, order_by=[self.key_col])
-
     def init_from(
         self,
         vecs: DataFrame,
@@ -412,259 +462,37 @@ class IvfIndexStore:
         """Train the initial quantizer (sampled, seeded — the
         `ivf_ann_topk` fit) and fold the full init corpus into cell
         statistics. Idempotent on ``batch_id``."""
-        from airflow_dags_spark.operators.similarity import _fit_coarse_quantizer
-
-        if self.exists():
-            rows = self._ledger_rows()
-            if self._applied(batch_id, rows):
-                return {"applied": False, "version": self.current_version(rows)}
-            raise ValueError("init_from on an already-initialized store")
-        clean = vecs.where(F.col(self.vec_col).isNotNull())
-        centers = _fit_coarse_quantizer(
-            clean, self.vec_col, n_cells, fit_sample, max_iter, seed
+        return self._init_from(
+            vecs, (n_cells,), batch_id, fit_sample, max_iter, seed, sample_hex
         )
-        self._reserve(clean, sample_hex)
-        stats = self._batch_stats(clean, centers, n_cells)
-        self._write_state(stats, 0)
-        self._commit(batch_id, 0, refit=True, _rows=None)
-        return {"applied": True, "version": 0, "n_cells": n_cells}
-
-    def _batch_stats(
-        self, vecs: DataFrame, centers: np.ndarray, n_cells: int
-    ) -> list[tuple]:
-        return ivf_batch_stats(vecs, centers, n_cells, vec_col=self.vec_col)
-
-    def add_batch(
-        self, vecs: DataFrame, batch_id: str, *, sample_hex: str = "4"
-    ) -> dict:
-        """Assign a new batch to the CURRENT centroids, fold its per-cell
-        sums into the state, persist as the next version. Replay of an
-        applied ``batch_id`` is a no-op (ledger check); a crash between
-        the state write and the ledger append is healed by the replay
-        deterministically overwriting the orphan version.
-
-        Manual batch ids should AVOID the bare ``b<digits>`` shape: the
-        streaming sinks' one-release legacy-migration check treats such
-        ledger keys as pre-namespace sink commits, so a store seeded
-        manually with ``b1`` and later attached to a sink would skip
-        stream micro-batch 1 (pass ``legacy_ledger_check=False`` to the
-        sink if a store already carries such keys)."""
-        ledger = self._ledger_rows()  # ONE ledger job: applied + version
-        if self._applied(batch_id, ledger):
-            return {"applied": False, "version": self.current_version(ledger)}
-        vecs = vecs.where(F.col(self.vec_col).isNotNull())
-        self._reserve(vecs, sample_hex)
-        # ONE state read serves both the centroid matrix and the fold base
-        # (this runs per micro-batch in ivf_index_sink — redundant collects
-        # of the same bounded frame are hot-path driver round-trips)
-        version0 = self.current_version(ledger)
-        if version0 < 0:
-            raise ValueError(f"IVF index at {self.path} not initialized")
-        state_rows = self._state_rows(version0)
-        centers = self._centers_from(state_rows)
-        cur = {
-            r["cell"]: (list(r["vec_sum"]), int(r["n_members"]))
-            for r in state_rows
-        }
-        n_cells = len(cur)
-        delta = self._batch_stats(vecs, centers, n_cells)
-        merged = []
-        n_new = 0
-        for cell, dsum, dn in delta:
-            osum, on = cur[cell]
-            if dn == 0:
-                # empty delta carries no dimensions — keep the old sums
-                merged.append((cell, osum, on))
-                continue
-            if len(dsum) != len(osum):
-                raise ValueError(
-                    f"batch vector dim {len(dsum)} != store dim {len(osum)} "
-                    f"(cell {cell}) — zip would silently truncate sums"
-                )
-            merged.append(
-                (cell, [a + b for a, b in zip(osum, dsum)], on + dn)
-            )
-            n_new += dn
-        version = version0 + 1
-        self._write_state(merged, version)
-        self._commit(batch_id, version, refit=False, _rows=ledger)
-        # mean centroid shift — the observable re-centering magnitude,
-        # derived from `merged` in memory (no state re-read: the streaming
-        # sink calls this per micro-batch and extra Spark jobs here are
-        # hot-path latency), same normalization as centroids_matrix
-        mat = np.asarray([s for _, s, _ in merged], dtype=np.float64)
-        n = np.asarray([m for _, _, m in merged], dtype=np.float64)
-        mat = mat / np.where(n > 0, n, 1.0)[:, None]
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        new_centers = mat / np.where(norms > 0, norms, 1.0)
-        shift = float(np.linalg.norm(new_centers - centers, axis=1).mean())
-        return {
-            "applied": True,
-            "version": version,
-            "n_assigned": n_new,
-            "mean_centroid_shift": round(shift, 9),
-        }
-
-    def maybe_refit(
-        self,
-        batch_id: str,
-        *,
-        drift_threshold: float,
-        fit_sample: int = 20000,
-        max_iter: int = 10,
-        seed: int = 42,
-    ) -> dict:
-        """The re-train arm of the drift policy (mirrors
-        :meth:`PqCodebookStore.maybe_refit`): when the centroids have
-        re-centered further than ``drift_threshold`` from the last fit,
-        re-train the coarse quantizer from the reservoir (seeded Lloyd on
-        a DETERMINISTIC md5-ordered subset) and seed the new version's
-        cell statistics from the reservoir's assignment to the new
-        quantizer. Below the threshold: no-op. Idempotent on
-        ``batch_id``; an empty reservoir is a diagnosed no-op, never a
-        crash (the streaming sink must not die mid-batch)."""
-        from airflow_dags_spark.operators.similarity import _fit_coarse_quantizer
-
-        ledger = self._ledger_rows()  # ONE ledger job for the whole call
-        if self._applied(batch_id, ledger):
-            return {"applied": False, "version": self.current_version(ledger)}
-        version0 = self.current_version(ledger)
-        state_rows = self._state_rows(version0)
-        cur = self._centers_from(state_rows)
-        fit = self._centers_from(
-            self._state_at(self.last_fit_version(ledger)).collect()
-        )
-        n_cells = len(state_rows)
-        drift = float(np.linalg.norm(cur - fit, axis=1).mean())
-        if drift <= drift_threshold:
-            return {"applied": False, "refit": False, "drift": round(drift, 9)}
-        if not self._sample.exists() or self._sample.read().limit(1).count() == 0:
-            return {
-                "applied": False,
-                "refit": False,
-                "drift": round(drift, 9),
-                "reason": "empty_reservoir",
-            }
-        sample = (
-            self._sample.read()
-            .orderBy(
-                F.md5(F.col(self.key_col).cast("string")), F.col(self.key_col)
-            )
-            .limit(fit_sample)
-            .select(F.col("v").alias(self.vec_col))
-        )
-        centers = _fit_coarse_quantizer(
-            sample, self.vec_col, n_cells, fit_sample, max_iter, seed
-        )
-        stats = self._batch_stats(
-            self._sample.read().select(F.col("v").alias(self.vec_col)),
-            centers,
-            n_cells,
-        )
-        version = version0 + 1
-        self._write_state(stats, version)
-        self._commit(batch_id, version, refit=True, _rows=ledger)
-        return {
-            "applied": True,
-            "refit": True,
-            "version": version,
-            "drift": round(drift, 9),
-        }
 
 
-class PqCodebookStore:
-    """Persistent, incrementally re-centered PQ codebooks — the
-    product-quantization analog of :class:`IvfIndexStore` (VERDICT r8
-    §Next-round #5), completing the ANN-maintenance story: the IVF store
-    maintains the COARSE quantizer, this maintains the m per-subspace
-    codebooks that ``similarity.pq_ann_topk`` encodes against.
+class PqCodebookStore(_AnnStore):
+    """Persistent, incrementally re-centered PQ codebooks (VERDICT r8
+    §Next-round #5): the m per-subspace codebooks that
+    ``similarity.pq_ann_topk`` encodes against.
 
-    State per version: sufficient statistics per (subspace, code) —
-    ``(subspace, code, vec_sum[dim/m], n_members)`` over unit-normalized
-    member SUB-vectors, so the current codebook entry is always
-    ``vec_sum / n_members`` (zero vector for a code that never attracted
-    members — consistent with the IVF empty-cell contract). Each arriving
-    batch is encoded against the CURRENT codebooks (Arrow-batched argmin,
-    shuffle-free), folded in as one new version, and committed through the
-    same K3 batch ledger — replayed batch ids are no-ops, orphan versions
-    heal deterministically.
-
-    **Re-center vs re-train** (the drift policy): incremental folding
-    RE-CENTERS codes toward the true member means, but cannot move a code
-    across Voronoi boundaries — after enough corpus drift the partition
-    itself is stale. The store therefore keeps (a) a deterministic
-    md5-sampled VECTOR RESERVOIR (parquet, keyed insert-if-absent — grows
-    with the corpus at the sample rate, replay-pure), and (b) a ``refit``
-    flag on ledger rows marking which versions were (re)fits.
-    :meth:`drift_since_fit` measures how far the current code centers have
-    re-centered away from the last fit's centers; :meth:`maybe_refit`
-    re-trains the codebooks from the reservoir (seeded Lloyd — the
-    ``_fit_pq_codebooks`` fit) only when that drift exceeds the caller's
-    threshold, and seeds the new version's statistics from the
-    reservoir's assignment to the new books.
+    State per version: ``(subspace, code, vec_sum[dim/m], n_members)``
+    over unit-normalized member SUB-vectors, so the current codebook
+    entry is always ``vec_sum / n_members`` (zero vector for a code that
+    never attracted members — consistent with the IVF empty-cell
+    contract). Each arriving batch is encoded against the CURRENT
+    codebooks (Arrow-batched argmin, shuffle-free).
 
     100 TB shape: per-batch cost is one narrow encode pass + one
     per-(subspace, code, dim) partial aggregation; only m × n_codes ×
     (dim/m) = n_codes × dim partials reach the driver. A refit reads the
-    bounded reservoir sample, never the corpus.
+    bounded reservoir sample, never the corpus."""
 
-    **Excluded concurrent writers**: the same rule and the same failure
-    modes as :class:`IvfIndexStore` — one writer per store path at a time,
-    serialized by the caller; readers beside it are safe.
-    """
+    _label = "PQ store"
+    _state_schema = (
+        "subspace int, code int, vec_sum array<double>, n_members bigint"
+    )
+    _shape_keys = ("m", "n_codes")
+    _shift_key = "mean_code_shift"
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        *,
-        key_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.key_col = key_col
-        self.vec_col = vec_col
-        self._ledger = ParquetTable(spark, f"{self.path}/ledger", "batch_id")
-        self._sample = ParquetTable(spark, f"{self.path}/sample", key_col)
-        # same protocol batching as IvfIndexStore (see its __init__ note):
-        # version-keyed write-once state cache; ledger re-collected ONCE
-        # per public method and threaded through the private checks.
-        self._state_cache: tuple[int, list] | None = None
-
-    # -- state access -------------------------------------------------------
-
-    def exists(self) -> bool:
-        return self._ledger.exists()
-
-    def _ledger_rows(self) -> list | None:
-        if not self._ledger.exists():
-            return None
-        return self._ledger.read().collect()
-
-    def current_version(self, _rows: list | None = None) -> int:
-        rows = self._ledger_rows() if _rows is None else _rows
-        if not rows:
-            return -1
-        return max(int(r["version"]) for r in rows)
-
-    def state(self) -> DataFrame:
-        v = self.current_version()
-        if v < 0:
-            raise ValueError(f"PQ store at {self.path} not initialized")
-        return self.spark.read.parquet(f"{self.path}/state/v{v}")
-
-    def _state_at(self, version: int) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/state/v{version}")
-
-    def _state_rows(self, version: int) -> list:
-        if self._state_cache is not None and self._state_cache[0] == version:
-            return self._state_cache[1]
-        rows = self._state_at(version).collect()
-        self._state_cache = (version, rows)
-        return rows
-
-    def _books_from(self, state_rows) -> np.ndarray:
+    @staticmethod
+    def _books_from(state_rows) -> np.ndarray:
         """(m, n_codes, sub) codebook array from state rows: entry = mean
         of member sub-vectors; zero vector for empty codes."""
         by = {(r["subspace"], r["code"]): r for r in state_rows}
@@ -678,112 +506,21 @@ class PqCodebookStore:
                 books[j, c] = np.asarray(r["vec_sum"], dtype=np.float64) / n
         return books
 
-    def codebooks(self) -> np.ndarray:
-        """Current (m, n_codes, dim/m) codebooks — bounded driver-side."""
-        v = self.current_version()
-        if v < 0:
-            raise ValueError(f"PQ store at {self.path} not initialized")
-        return self._books_from(self._state_rows(v))
+    _model_from = _books_from
 
-    def last_fit_version(self, _rows: list | None = None) -> int:
-        rows = (self._ledger_rows() if _rows is None else _rows) or []
-        fits = [int(r["version"]) for r in rows if r["refit"]]
-        if not fits:
-            raise ValueError(f"PQ store at {self.path} has no fit version")
-        return max(fits)
-
-    def drift_since_fit(self) -> float:
-        """Mean L2 shift of code centers between the last (re)fit version's
-        state and the current state — the observable that drives the
-        re-center-vs-re-train policy."""
-        cur = self.codebooks()
-        fit = self._books_from(self._state_at(self.last_fit_version()).collect())
-        m, n_codes = cur.shape[0], cur.shape[1]
-        return float(
-            np.linalg.norm(
-                cur.reshape(m * n_codes, -1) - fit.reshape(m * n_codes, -1),
-                axis=1,
-            ).mean()
-        )
-
-    # -- writes -------------------------------------------------------------
-
-    def _write_state(self, stats: list[tuple], version: int) -> None:
-        df = tiny_df(
-            self.spark,
-            stats,
-            "subspace int, code int, vec_sum array<double>, n_members bigint",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.path}/state/v{version}"
-        )
-        self._state_cache = (
-            version,
-            [
-                {"subspace": j, "code": c, "vec_sum": s, "n_members": n}
-                for j, c, s, n in stats
-            ],
-        )
-
-    def _commit(
-        self,
-        batch_id: str,
-        version: int,
-        refit: bool,
-        _rows: list | None = None,
-    ) -> None:
-        """One-row ledger append; absence of ``batch_id`` was already
-        checked against the SAME collected ledger threaded through this
-        method call (see IvfIndexStore._commit — the insert_if_absent
-        anti-join re-read was pure per-commit latency)."""
-        rows = self._ledger_rows() if _rows is None else _rows
-        row = tiny_df(
-            self.spark,
-            [(batch_id, version, refit)],
-            "batch_id string, version int, refit boolean",
-        )
-        if rows is None:
-            self._ledger._atomic_overwrite(row)
-        else:
-            self._ledger.append(row)
-
-    def _applied(self, batch_id: str, _rows: list | None = None) -> bool:
-        rows = self._ledger_rows() if _rows is None else _rows
-        return bool(rows) and any(r["batch_id"] == batch_id for r in rows)
-
-    def _reserve(self, vecs: DataFrame, sample_hex: str) -> None:
-        """Fold the batch's deterministic md5 sample into the reservoir
-        (keyed insert-if-absent → replay-pure, grows at the sample rate)."""
-        picked = vecs.where(
-            F.substring(F.md5(F.col(self.key_col).cast("string")), 1, 1)
-            < sample_hex
-        ).select(self.key_col, as_double(self.vec_col).alias("v"))
-        self._sample.insert_if_absent(picked, order_by=[self.key_col])
-
-    def _fit_from_reservoir(
-        self, m: int, n_codes: int, fit_sample: int, max_iter: int, seed: int
-    ) -> np.ndarray:
-        """Seeded Lloyd on a DETERMINISTIC reservoir subset (ordered by
-        md5(key) — stable under reservoir growth order)."""
+    def _fit(self, vecs, shape, fit_sample, max_iter, seed) -> np.ndarray:
         from airflow_dags_spark.operators.similarity import _fit_pq_codebooks
 
-        sample = self._sample.read().orderBy(
-            F.md5(F.col(self.key_col).cast("string")), F.col(self.key_col)
-        ).limit(fit_sample)
         return _fit_pq_codebooks(
-            sample.select(F.col("v").alias(self.vec_col)),
-            self.vec_col,
-            m,
-            n_codes,
-            fit_sample,
-            max_iter,
-            seed,
+            vecs, self.vec_col, *shape, fit_sample, max_iter, seed
         )
 
-    def _batch_stats(
-        self, vecs: DataFrame, books: np.ndarray
-    ) -> list[tuple]:
+    def _batch_stats(self, vecs, books, shape) -> list[tuple]:
         return pq_batch_stats(vecs, books, vec_col=self.vec_col)
+
+    def codebooks(self) -> np.ndarray:
+        """Current (m, n_codes, dim/m) codebooks — bounded driver-side."""
+        return self._model()
 
     def init_from(
         self,
@@ -799,141 +536,9 @@ class PqCodebookStore:
     ) -> dict:
         """Train the initial codebooks (sampled, seeded) and fold the full
         init corpus into code statistics. Idempotent on ``batch_id``."""
-        from airflow_dags_spark.operators.similarity import _fit_pq_codebooks
-
-        if self.exists():
-            rows = self._ledger_rows()
-            if self._applied(batch_id, rows):
-                return {"applied": False, "version": self.current_version(rows)}
-            raise ValueError("init_from on an already-initialized store")
-        clean = vecs.where(F.col(self.vec_col).isNotNull())
-        books = _fit_pq_codebooks(
-            clean, self.vec_col, m, n_codes, fit_sample, max_iter, seed
+        return self._init_from(
+            vecs, (m, n_codes), batch_id, fit_sample, max_iter, seed, sample_hex
         )
-        self._reserve(clean, sample_hex)
-        stats = self._batch_stats(clean, books)
-        self._write_state(stats, 0)
-        self._commit(batch_id, 0, refit=True, _rows=None)
-        return {"applied": True, "version": 0, "m": m, "n_codes": n_codes}
-
-    def add_batch(
-        self, vecs: DataFrame, batch_id: str, *, sample_hex: str = "4"
-    ) -> dict:
-        """Encode a batch against the CURRENT codebooks, fold its
-        per-(subspace, code) sums into the state, persist as the next
-        version. Same replay contract as :meth:`IvfIndexStore.add_batch`."""
-        ledger = self._ledger_rows()  # ONE ledger job: applied + version
-        if self._applied(batch_id, ledger):
-            return {"applied": False, "version": self.current_version(ledger)}
-        # ONE state read serves both the codebooks and the fold base (this
-        # runs per micro-batch in pq_codebook_sink — redundant collects of
-        # the same bounded frame are hot-path driver round-trips), and ONE
-        # ledger read serves the version arithmetic
-        version0 = self.current_version(ledger)
-        if version0 < 0:
-            raise ValueError(f"PQ store at {self.path} not initialized")
-        state_rows = self._state_rows(version0)
-        books = self._books_from(state_rows)
-        m, n_codes, sub = books.shape
-        clean = vecs.where(F.col(self.vec_col).isNotNull())
-        self._reserve(clean, sample_hex)
-        cur = {
-            (r["subspace"], r["code"]): (list(r["vec_sum"]), int(r["n_members"]))
-            for r in state_rows
-        }
-        delta = self._batch_stats(clean, books)
-        merged = []
-        n_new = 0
-        for j, c, dsum, dn in delta:
-            # dsum is always padded to the BOOKS' sub-dim by _batch_stats
-            # (a genuinely mis-dimensioned batch fails earlier, inside the
-            # encode UDF's vstack/matmul), so no per-cell length check here
-            osum, on = cur[(j, c)]
-            if dn == 0:
-                merged.append((j, c, osum, on))
-                continue
-            merged.append((j, c, [a + b for a, b in zip(osum, dsum)], on + dn))
-            if j == 0:
-                n_new += dn  # each vector contributes once per subspace
-        version = version0 + 1
-        self._write_state(merged, version)
-        self._commit(batch_id, version, refit=False, _rows=ledger)
-        new_books = np.zeros_like(books)
-        for j, c, s, n in merged:
-            if n > 0:
-                new_books[j, c] = np.asarray(s, dtype=np.float64) / n
-        shift = float(
-            np.linalg.norm(
-                new_books.reshape(m * n_codes, -1)
-                - books.reshape(m * n_codes, -1),
-                axis=1,
-            ).mean()
-        )
-        return {
-            "applied": True,
-            "version": version,
-            "n_assigned": n_new,
-            "mean_code_shift": round(shift, 9),
-        }
-
-    def maybe_refit(
-        self,
-        batch_id: str,
-        *,
-        drift_threshold: float,
-        fit_sample: int = 20000,
-        max_iter: int = 10,
-        seed: int = 42,
-    ) -> dict:
-        """The re-train arm of the drift policy: when the codes have
-        re-centered further than ``drift_threshold`` from the last fit,
-        re-train the codebooks from the reservoir (seeded Lloyd) and seed
-        the new version's statistics from the reservoir's assignment to
-        the new books. Below the threshold: no-op (incremental
-        re-centering is still adequate). Idempotent on ``batch_id`` —
-        a replayed refit never trains twice. An EMPTY reservoir (no key
-        sampled yet at the configured ``sample_hex`` rate) is a
-        diagnosed no-op, never a crash — the streaming sink must not die
-        mid-batch on a small corpus."""
-        ledger = self._ledger_rows()  # ONE ledger job for the whole call
-        if self._applied(batch_id, ledger):
-            return {"applied": False, "version": self.current_version(ledger)}
-        # one state read serves drift, shape, and the version base
-        version0 = self.current_version(ledger)
-        cur_books = self._books_from(self._state_rows(version0))
-        fit_books = self._books_from(
-            self._state_at(self.last_fit_version(ledger)).collect()
-        )
-        m, n_codes, _sub = cur_books.shape
-        drift = float(
-            np.linalg.norm(
-                cur_books.reshape(m * n_codes, -1)
-                - fit_books.reshape(m * n_codes, -1),
-                axis=1,
-            ).mean()
-        )
-        if drift <= drift_threshold:
-            return {"applied": False, "refit": False, "drift": round(drift, 9)}
-        if not self._sample.exists() or self._sample.read().limit(1).count() == 0:
-            return {
-                "applied": False,
-                "refit": False,
-                "drift": round(drift, 9),
-                "reason": "empty_reservoir",
-            }
-        books = self._fit_from_reservoir(m, n_codes, fit_sample, max_iter, seed)
-        stats = self._batch_stats(
-            self._sample.read().select(F.col("v").alias(self.vec_col)), books
-        )
-        version = version0 + 1
-        self._write_state(stats, version)
-        self._commit(batch_id, version, refit=True, _rows=ledger)
-        return {
-            "applied": True,
-            "refit": True,
-            "version": version,
-            "drift": round(drift, 9),
-        }
 
 
 def pq_batch_stats(

@@ -47,9 +47,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from airflow_dags_spark.functions.localframe import tiny_df
-
 from airflow_dags_spark.functions.text import token_count
+from airflow_dags_spark.operators.versioned_store import VersionedStore
 
 __all__ = [
     "TokenStreamStore",
@@ -179,24 +178,22 @@ def token_window_spans(
     )
 
 
-class TokenStreamStore:
-    """Persistent cursor for INCREMENTAL sequence packing — the packing
-    analog of :class:`operators.ann_store.IvfIndexStore`: a corpus that
+class TokenStreamStore(VersionedStore):
+    """Persistent cursor for INCREMENTAL sequence packing: a corpus that
     arrives in batches extends the concatenated token stream instead of
     re-packing it, so dataloader layouts stay stable for already-shipped
     data and packing cost is a function of ARRIVING data only.
 
-    State is the stream CURSOR (``next_offset``, one row), versioned per
-    applied batch under ``state/v{n}``; each batch's doc→[start, end)
+    State is the stream CURSOR (``next_offset``, one row), one version per
+    applied batch (:mod:`operators.versioned_store` — replay and crash
+    contract, excluded concurrent writers); each batch's doc→[start, end)
     assignments land in their own ``assignments/<md5(batch_id)[:16]>``
-    directory; a keyed ledger (K3 insert-if-absent on ``batch_id``)
-    commits the version. The write order (assignments → state → ledger)
-    makes replays safe under at-least-once delivery: a committed batch
-    is a ledger no-op; a crash before the ledger lands leaves an orphan
-    state/assignment set that the replay deterministically overwrites
-    (same cursor base → bit-identical offsets). Batch order defines
-    stream order ACROSS batches; within a batch, ascending key — both
-    deterministic, which is what makes the whole store oracle-checkable.
+    directory BEFORE its state version, so a crash before the ledger
+    commit leaves an orphan assignment set that no reader sees and the
+    replay deterministically overwrites (same cursor base → bit-identical
+    offsets). Batch order defines stream order ACROSS batches; within a
+    batch, ascending key — both deterministic, which is what makes the
+    whole store oracle-checkable.
 
     100 TB shape: per batch, one two-phase prefix scan of the BATCH
     (:func:`token_stream_offsets` — never the corpus), a one-row cursor
@@ -204,40 +201,29 @@ class TokenStreamStore:
     the historical stream is never re-read.
     """
 
-    def __init__(self, spark, path: str, *, key_col: str = "doc_id") -> None:
-        from airflow_dags_spark.operators.upsert import ParquetTable
+    _label = "token stream store"
+    _state_schema = "next_offset bigint"
 
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.key_col = key_col
-        self._ledger = ParquetTable(spark, f"{self.path}/ledger", "batch_id")
+    def __init__(self, spark, path: str, *, key_col: str = "doc_id") -> None:
+        super().__init__(spark, path, key_col=key_col)
 
     # -- state access -------------------------------------------------------
 
-    def exists(self) -> bool:
-        return self._ledger.exists()
-
-    def current_version(self) -> int:
-        if not self.exists():
-            return -1
-        row = self._ledger.read().agg(F.max("version").alias("v")).collect()[0]
-        return int(row["v"])
+    def _offset_at(self, version: int) -> int:
+        if version < 0:
+            return 0
+        return int(self._state_rows(version)[0]["next_offset"])
 
     def next_offset(self) -> int:
         """Stream position the next batch starts at (0 for a fresh store)."""
-        v = self.current_version()
-        if v < 0:
-            return 0
-        row = self.spark.read.parquet(f"{self.path}/state/v{v}").collect()[0]
-        return int(row["next_offset"])
+        return self._offset_at(self.current_version())
 
     def assignments(self) -> DataFrame:
         """All committed doc→span assignments:
         ``(key, start, end, batch_id)``. Reads ledger-committed batch
         directories only — an orphan from a crashed append is invisible
         until its replay commits."""
-        led = [r["batch_id"] for r in self._ledger.read().select("batch_id").collect()]
-        paths = [self._assign_dir(b) for b in led]
+        paths = [self._assign_dir(r["batch_id"]) for r in self._ledger_rows() or []]
         if not paths:
             raise ValueError(f"token stream store at {self.path} is empty")
         return self.spark.read.parquet(*paths)
@@ -248,12 +234,6 @@ class TokenStreamStore:
         return (
             f"{self.path}/assignments/"
             f"{hashlib.md5(batch_id.encode()).hexdigest()[:16]}"
-        )
-
-    def _applied(self, batch_id: str) -> bool:
-        return (
-            self.exists()
-            and self._ledger.read().where(F.col("batch_id") == batch_id).count() > 0
         )
 
     # -- writes -------------------------------------------------------------
@@ -269,9 +249,11 @@ class TokenStreamStore:
         """Pack one batch onto the end of the stream. ``counts`` is a
         ``(key, n_tokens)`` frame (pair with
         ``token_count(text_col)`` upstream). Idempotent on ``batch_id``."""
-        if self._applied(batch_id):
-            return {"applied": False, "version": self.current_version()}
-        base = self.next_offset()
+        ledger = self._ledger_rows()
+        if self._applied(batch_id, ledger):
+            return {"applied": False, "version": self.current_version(ledger)}
+        version = self.current_version(ledger) + 1
+        base = self._offset_at(version - 1)
         # at-least-once sources can deliver a doc twice WITHIN one batch;
         # duplicate keys would make the within-bucket cumsum tie-order
         # dependent — nondeterministic offsets, breaking the replay
@@ -294,16 +276,6 @@ class TokenStreamStore:
         written = self.spark.read.parquet(adir)
         row = written.agg(F.max("end").alias("m")).collect()[0]
         nxt = int(row["m"]) if row["m"] is not None else base
-        version = self.current_version() + 1
-        tiny_df(
-            self.spark, [(nxt,)], "next_offset bigint"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{self.path}/state/v{version}"
-        )
-        self._ledger.insert_if_absent(
-            tiny_df(
-                self.spark, [(batch_id, version)], "batch_id string, version int"
-            ),
-            order_by=["version"],
-        )
+        self._write_state([(nxt,)], version)
+        self._commit(batch_id, version, ledger)
         return {"applied": True, "version": version, "next_offset": nxt}

@@ -375,7 +375,10 @@ def sim_pq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve = lambda books: pq_ann_topk(  # noqa: E731
         emb, 10, query_filter=F.col("vec_id") < 8, refine=50, books=books
     )
-    return _served_matches(emb, serve(store.codebooks()), serve(direct_books))
+    # a FRESH instance serves the store arm: the writer's in-memory state
+    # cache cannot answer, so the parquet round-trip is what gets checked
+    fresh = PqCodebookStore(spark, store.path)
+    return _served_matches(emb, serve(fresh.codebooks()), serve(direct_books))
 
 
 @register("sim_ivf_store_topk", STORE_EQUIV_ORACLE)
@@ -441,8 +444,9 @@ def sim_ivf_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve = lambda centers: ivf_ann_topk(  # noqa: E731
         emb, 10, query_filter=F.col("vec_id") < 8, nprobe=4, centers=centers
     )
+    fresh = IvfIndexStore(spark, store.path)  # see sim_pq_store_topk
     return _served_matches(
-        emb, serve(store.centroids_matrix()), serve(direct_centers)
+        emb, serve(fresh.centroids_matrix()), serve(direct_centers)
     )
 
 

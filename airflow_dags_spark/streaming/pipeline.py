@@ -815,6 +815,69 @@ def _legacy_applied(store, batch_id: int, memo: dict | None = None) -> bool:
     return legacy.where(F.col("batch_id") == f"b{batch_id}").count() > 0
 
 
+def _ann_store_sink(
+    store_cls,
+    shape: tuple,
+    vec_stream: DataFrame,
+    store_path: str,
+    checkpoint_dir: str,
+    *,
+    key_col: str,
+    vec_col: str,
+    fit_sample: int,
+    seed: int,
+    sample_hex: str,
+    refit_drift_threshold: float | None,
+    legacy_ledger_check: bool,
+    available_now: bool,
+) -> StreamingQuery:
+    """The shared body of :func:`ivf_index_sink` and
+    :func:`pq_codebook_sink`: per micro-batch, init the store with
+    ``shape`` (its ``init_from`` model-shape arguments) or fold the batch
+    in, then optionally refit."""
+    ledger_ns = _ledger_namespace(checkpoint_dir)
+    legacy_memo: dict = {} if legacy_ledger_check else {"no_legacy": True}
+
+    def fold_batch(batch: DataFrame, batch_id: int) -> None:
+        # null vectors carry no assignment signal, and an all-null FIRST
+        # batch would otherwise crash the fit on an empty sample and kill
+        # the streaming query
+        batch = batch.where(F.col(vec_col).isNotNull())
+        if batch.isEmpty():
+            return
+        store = store_cls(
+            batch.sparkSession, store_path, key_col=key_col, vec_col=vec_col
+        )
+        if _legacy_applied(store, batch_id, legacy_memo):
+            return  # committed pre-upgrade under the bare-key format
+        bid = f"{ledger_ns}:b{batch_id}"
+        if not store.exists():
+            store.init_from(
+                batch,
+                *shape,
+                batch_id=bid,
+                fit_sample=fit_sample,
+                seed=seed,
+                sample_hex=sample_hex,
+            )
+            return
+        store.add_batch(batch, bid, sample_hex=sample_hex)
+        if refit_drift_threshold is not None:
+            store.maybe_refit(
+                f"{bid}:refit",
+                drift_threshold=refit_drift_threshold,
+                fit_sample=fit_sample,
+                seed=seed,
+            )
+
+    writer = vec_stream.writeStream.foreachBatch(fold_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def ivf_index_sink(
     vec_stream: DataFrame,
     store_path: str,
@@ -863,47 +926,12 @@ def ivf_index_sink(
     maintenance cost is a function of ARRIVING data only."""
     from airflow_dags_spark.operators.ann_store import IvfIndexStore
 
-    ledger_ns = _ledger_namespace(checkpoint_dir)
-    legacy_memo: dict = {} if legacy_ledger_check else {"no_legacy": True}
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        # null vectors carry no assignment signal, and an all-null FIRST
-        # batch would otherwise crash the quantizer fit on an empty
-        # sample and kill the streaming query
-        batch = batch.where(F.col(vec_col).isNotNull())
-        if batch.isEmpty():
-            return
-        store = IvfIndexStore(
-            batch.sparkSession, store_path, key_col=key_col, vec_col=vec_col
-        )
-        if _legacy_applied(store, batch_id, legacy_memo):
-            return  # committed pre-upgrade under the bare-key format
-        bid = f"{ledger_ns}:b{batch_id}"
-        if not store.exists():
-            store.init_from(
-                batch,
-                n_cells,
-                batch_id=bid,
-                fit_sample=fit_sample,
-                seed=seed,
-                sample_hex=sample_hex,
-            )
-            return
-        store.add_batch(batch, bid, sample_hex=sample_hex)
-        if refit_drift_threshold is not None:
-            store.maybe_refit(
-                f"{bid}:refit",
-                drift_threshold=refit_drift_threshold,
-                fit_sample=fit_sample,
-                seed=seed,
-            )
-
-    writer = vec_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _ann_store_sink(
+        IvfIndexStore, (n_cells,), vec_stream, store_path, checkpoint_dir,
+        key_col=key_col, vec_col=vec_col, fit_sample=fit_sample, seed=seed,
+        sample_hex=sample_hex, refit_drift_threshold=refit_drift_threshold,
+        legacy_ledger_check=legacy_ledger_check, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def pq_codebook_sink(
@@ -943,45 +971,12 @@ def pq_codebook_sink(
     refit reads the bounded reservoir, never the corpus."""
     from airflow_dags_spark.operators.ann_store import PqCodebookStore
 
-    ledger_ns = _ledger_namespace(checkpoint_dir)
-    legacy_memo: dict = {} if legacy_ledger_check else {"no_legacy": True}
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.where(F.col(vec_col).isNotNull())
-        if batch.isEmpty():
-            return
-        store = PqCodebookStore(
-            batch.sparkSession, store_path, key_col=key_col, vec_col=vec_col
-        )
-        if _legacy_applied(store, batch_id, legacy_memo):
-            return  # committed pre-upgrade under the bare-key format
-        bid = f"{ledger_ns}:b{batch_id}"
-        if not store.exists():
-            store.init_from(
-                batch,
-                m,
-                n_codes,
-                batch_id=bid,
-                fit_sample=fit_sample,
-                seed=seed,
-                sample_hex=sample_hex,
-            )
-            return
-        store.add_batch(batch, bid, sample_hex=sample_hex)
-        if refit_drift_threshold is not None:
-            store.maybe_refit(
-                f"{bid}:refit",
-                drift_threshold=refit_drift_threshold,
-                fit_sample=fit_sample,
-                seed=seed,
-            )
-
-    writer = vec_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _ann_store_sink(
+        PqCodebookStore, (m, n_codes), vec_stream, store_path, checkpoint_dir,
+        key_col=key_col, vec_col=vec_col, fit_sample=fit_sample, seed=seed,
+        sample_hex=sample_hex, refit_drift_threshold=refit_drift_threshold,
+        legacy_ledger_check=legacy_ledger_check, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def pack_stream_sink(

@@ -83,35 +83,6 @@ def test_replay_same_batch_id_is_noop(spark, emb, tmp_path):
     assert not store.init_from(emb, n_cells=4)["applied"]
 
 
-def test_orphan_version_healed_by_replay(spark, emb, tmp_path):
-    """Crash between the state write and the ledger append leaves an
-    orphan v{n} — the replay recomputes it deterministically from v{n-1}
-    and lands the ledger row; state content is identical either way."""
-    store = IvfIndexStore(spark, str(tmp_path / "ivf"))
-    store.init_from(emb.where(F.col("vec_id") < 40), n_cells=4, fit_sample=40)
-    b = emb.where((F.col("vec_id") >= 40) & (F.col("vec_id") < 90))
-    # simulate the crash: write the next state version WITHOUT the ledger
-    centers = store.centroids_matrix()
-    cur = {
-        r["cell"]: (list(r["vec_sum"]), int(r["n_members"]))
-        for r in store.state().collect()
-    }
-    delta = store._batch_stats(b, centers, len(cur))
-    orphan = [
-        (c, [a + x for a, x in zip(cur[c][0], s)], cur[c][1] + n)
-        for c, s, n in delta
-    ]
-    store._write_state(orphan, 1)
-    assert store.current_version() == 0  # ledger still at v0: orphan invisible
-    out = store.add_batch(b, "batch-A")  # the replay
-    assert out["applied"] and out["version"] == 1
-    got = sorted(
-        (r["cell"], r["n_members"], tuple(r["vec_sum"]))
-        for r in store.state().collect()
-    )
-    assert got == sorted((c, n, tuple(s)) for c, s, n in orphan)
-
-
 def test_centroids_frame_matches_matrix(spark, emb, tmp_path):
     store = IvfIndexStore(spark, str(tmp_path / "ivf"))
     store.init_from(emb.where(F.col("vec_id") < 50), n_cells=4, fit_sample=50)
@@ -338,46 +309,6 @@ def test_pq_add_batch_matches_numpy_reference(spark, emb, tmp_path):
         exp_n = state0[(j, c)][1] + int(d_counts[j, c])
         assert r["n_members"] == exp_n, (j, c)
         np.testing.assert_allclose(np.array(r["vec_sum"]), exp_sum, rtol=1e-9)
-
-
-def test_pq_replay_and_orphan_heal(spark, emb, tmp_path):
-    from airflow_dags_spark.operators.ann_store import PqCodebookStore
-
-    store = PqCodebookStore(spark, str(tmp_path / "pq"))
-    store.init_from(emb.where(F.col("vec_id") < 40), m=4, n_codes=8, fit_sample=40)
-    b = emb.where((F.col("vec_id") >= 40) & (F.col("vec_id") < 80))
-    r1 = store.add_batch(b, "batch-A")
-    snap = sorted(
-        (r["subspace"], r["code"], r["n_members"], tuple(r["vec_sum"]))
-        for r in store.state().collect()
-    )
-    r2 = store.add_batch(b, "batch-A")
-    assert r1["applied"] and not r2["applied"]
-    assert snap == sorted(
-        (r["subspace"], r["code"], r["n_members"], tuple(r["vec_sum"]))
-        for r in store.state().collect()
-    )
-    # orphan heal: state written without ledger -> replay overwrites it
-    books = store.codebooks()
-    cur = {
-        (r["subspace"], r["code"]): (list(r["vec_sum"]), int(r["n_members"]))
-        for r in store.state().collect()
-    }
-    b2 = emb.where((F.col("vec_id") >= 80) & (F.col("vec_id") < 120))
-    delta = store._batch_stats(b2, books)
-    orphan = [
-        (j, c, [a + x for a, x in zip(cur[(j, c)][0], s)], cur[(j, c)][1] + n)
-        for j, c, s, n in delta
-    ]
-    store._write_state(orphan, 2)
-    assert store.current_version() == 1  # orphan invisible
-    out = store.add_batch(b2, "batch-B")
-    assert out["applied"] and out["version"] == 2
-    got = sorted(
-        (r["subspace"], r["code"], r["n_members"], tuple(r["vec_sum"]))
-        for r in store.state().collect()
-    )
-    assert got == sorted((j, c, n, tuple(s)) for j, c, s, n in orphan)
 
 
 def test_pq_drift_policy_refit_only_past_threshold(spark, emb, tmp_path):

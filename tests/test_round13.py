@@ -229,38 +229,6 @@ def test_token_stream_store_resumes_and_replays(spark, tmp_path):
     assert [(s, e) for _, s, e in got] == [(s, e) for _, s, e in ref]
 
 
-def test_token_stream_store_orphan_heals(spark, tmp_path):
-    """A crash between the state/assignment writes and the ledger append
-    leaves an orphan the committed view never sees; the replay overwrites
-    it deterministically and commits."""
-    import pytest as _pytest
-
-    from airflow_dags_spark.operators.packing import TokenStreamStore
-
-    store = TokenStreamStore(spark, str(tmp_path / "ts"))
-    store.append_batch(_counts(spark, [(1, 10)]), "n", "b0")
-
-    orig = store._ledger.insert_if_absent
-
-    def boom(*a, **k):
-        raise RuntimeError("crash before ledger")
-
-    store._ledger.insert_if_absent = boom
-    with _pytest.raises(RuntimeError, match="crash"):
-        store.append_batch(_counts(spark, [(2, 5)]), "n", "b1")
-    store._ledger.insert_if_absent = orig
-
-    # committed view: only b0 — the orphan assignment dir is invisible
-    assert store.current_version() == 0
-    assert store.next_offset() == 10
-    assert {r.batch_id for r in store.assignments().collect()} == {"b0"}
-
-    healed = store.append_batch(_counts(spark, [(2, 5)]), "n", "b1")
-    assert healed == {"applied": True, "version": 1, "next_offset": 15}
-    got = sorted((r.doc_id, r.start, r.end) for r in store.assignments().collect())
-    assert got == [(1, 0, 10), (2, 10, 15)]
-
-
 def test_token_stream_store_empty_batch_commits_without_moving(spark, tmp_path):
     from airflow_dags_spark.operators.packing import TokenStreamStore
 
