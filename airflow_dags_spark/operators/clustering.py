@@ -15,6 +15,14 @@
   cluster fits executor memory (the paper's k=50k over 5B docs ⇒ ~100k-row
   clusters); the cross-cluster miss rate is the standard SemDeDup trade.
 
+One spherical k-means step serves ``kmeans_fit``, the two-level sub-fit,
+the IVF quantizer fit (``similarity._fit_coarse_quantizer``) and the IVF
+store's batch statistics (``ann_store.ivf_batch_stats``): the executor
+kernel ``_partials`` (unit-normalize, argmax, per-(group, cluster)
+``(cnt, vsum)``), the total-order fold ``_fold`` and the Lloyd loop
+``_lloyd``, fed in memory by ``_local_partials`` or by one Spark pass per
+round through ``_spark_partials``. An ungrouped fit is group 0.
+
 Complements the lexical dedup family (operators/dedup.py): MinHash catches
 token overlap, SimHash bit similarity, this catches SEMANTIC duplicates
 (paraphrases, translations, re-encodings) that shared-token methods miss.
@@ -25,7 +33,7 @@ against the public SemDeDup recipe + FAISS-style quantizer practice.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -44,10 +52,160 @@ from pyspark.sql.types import (
 
 from airflow_dags_spark.functions.vectors import as_double
 
+# Past this k an extra (group, cluster)-keyed shuffle reduces the partials
+# executor-side, so the driver collects one row per cluster (the
+# treeAggregate shape); below it the shuffle costs more than the collect it
+# saves (measured 2.6× on the sf0.1 semantic-dedup drive).
+_REDUCE_ABOVE_K = 8192
+
+_PARTIALS = StructType(
+    [
+        StructField("grp", IntegerType()),
+        StructField("cluster", IntegerType()),
+        StructField("cnt", LongType()),
+        StructField("vsum", ArrayType(DoubleType())),
+    ]
+)
+
+# (grp, cluster, cnt, vsum) partial rows, from memory or from a Spark pass
+_Partials = Callable[[dict[int, np.ndarray]], list]
+
 
 def _unit(x: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     return x / np.where(norms > 0, norms, 1.0)
+
+
+def _seeded_init(x: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """k seeded draws without replacement from the rows of ``x``."""
+    rng = np.random.RandomState(seed)
+    return x[rng.choice(len(x), size=min(k, len(x)), replace=False)].copy()
+
+
+def _assign_sums(x: np.ndarray, centers: np.ndarray) -> Iterator[tuple]:
+    """(cluster, cnt, vsum) of unit rows ``x`` under their nearest center;
+    ties break to the lowest cluster id."""
+    assign = np.argmax(x @ centers.T, axis=1)
+    for j in np.unique(assign):
+        m = x[assign == j]
+        yield int(j), len(m), m.sum(axis=0)
+
+
+def _partials(centers: dict[int, np.ndarray]):
+    """The executor kernel, a ``mapInPandas`` function over ``(grp, v)``
+    batches: each task accumulates its WHOLE partition into one
+    ``(grp, cluster, cnt, vsum)`` row per key — ≤ Σk rows per task however
+    many Arrow batches it holds. Groups absent from ``centers`` (converged)
+    are skipped. ``centers`` must already be unit rows."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict[tuple[int, int], list] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = _unit(np.vstack(pdf["v"].to_numpy()).astype(np.float64))
+            grp = pdf["grp"].to_numpy()
+            for g in np.unique(grp):
+                c = centers.get(int(g))
+                if c is None:
+                    continue
+                for j, n, s in _assign_sums(x[grp == g], c):
+                    key = (int(g), j)
+                    if key in acc:
+                        acc[key][0] += n
+                        acc[key][1] += s
+                    else:
+                        acc[key] = [n, s]
+        if acc:
+            yield pd.DataFrame(
+                [(g, j, n, s.tolist()) for (g, j), (n, s) in sorted(acc.items())],
+                columns=_PARTIALS.names,
+            )
+
+    return run
+
+
+def _fold(rows: list) -> dict[tuple[int, int], list]:
+    """Sum ``(grp, cluster, cnt, vsum)`` partials per (grp, cluster) in the
+    TOTAL order (grp, cluster, cnt, vsum): the same bits for any shuffle or
+    collect arrival order. Returns ``{(grp, cluster): [cnt, vsum]}``."""
+    dim = max((len(r[3]) for r in rows), default=0)
+    out: dict[tuple[int, int], list] = {}
+    for g, j, n, v in sorted(rows, key=lambda r: (r[0], r[1], r[2], tuple(r[3]))):
+        if len(v) != dim:
+            raise ValueError(
+                "heterogeneous vector lengths in batch: partial sums "
+                f"disagree on dim for cell {j} ({len(v)} vs {dim})"
+            )
+        key = (int(g), int(j))
+        if key in out:
+            out[key][0] += int(n)
+            out[key][1] += np.asarray(v, dtype=np.float64)
+        else:
+            out[key] = [int(n), np.array(v, dtype=np.float64)]
+    return out
+
+
+def _reduce_partials(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Executor-side fold of one (grp, cluster)'s partials, in ``_fold``'s
+    order — so the reduced path returns the driver fold's bits."""
+    [((g, j), (n, s))] = _fold(list(pdf.itertuples(index=False, name=None))).items()
+    return pd.DataFrame([(g, j, n, s.tolist())], columns=_PARTIALS.names)
+
+
+def _spark_partials(vecs: DataFrame, *, reduce: bool = False) -> _Partials:
+    """One Spark pass per call over ``vecs`` (columns ``grp``, ``v``)."""
+
+    def run(centers: dict[int, np.ndarray]) -> list:
+        part = vecs.mapInPandas(_partials(centers), _PARTIALS)
+        if reduce:
+            part = part.groupBy("grp", "cluster").applyInPandas(
+                _reduce_partials, _PARTIALS
+            )
+        return part.collect()  # bounded: ≤ tasks × Σk rows
+
+    return run
+
+
+def _local_partials(xs: dict[int, np.ndarray]) -> _Partials:
+    """The same partials from unit rows held on the driver: zero Spark jobs."""
+    return lambda centers: [
+        (g, *p) for g, c in centers.items() for p in _assign_sums(xs[g], c)
+    ]
+
+
+def _lloyd(
+    partials: _Partials,
+    centers: dict[int, np.ndarray],
+    *,
+    max_iter: int,
+    tol: float | None,
+) -> dict[int, np.ndarray]:
+    """Spherical Lloyd rounds for independent groups of unit centers. Each
+    round folds ``partials`` of the active groups and moves every center
+    with members to its unit mean. A group converges, and drops out of
+    later rounds, when no center moved more than ``tol`` (cosine of
+    successive centers ≥ 1 - tol); ``tol=None`` runs every round."""
+    centers = dict(centers)
+    active = sorted(centers)
+    for _ in range(max_iter):
+        if not active:
+            break
+        stats = {
+            g: (np.zeros(len(centers[g])), np.zeros_like(centers[g])) for g in active
+        }
+        for (g, j), (n, s) in _fold(partials({g: centers[g] for g in active})).items():
+            stats[g][0][j], stats[g][1][j] = n, s
+        for g in list(active):
+            counts, sums = stats[g]
+            new = centers[g].copy()
+            nz = counts > 0
+            new[nz] = _unit(sums[nz] / counts[nz, None])
+            shift = 1.0 - np.min(np.sum(new * centers[g], axis=1))
+            centers[g] = new
+            if tol is not None and shift < tol:
+                active.remove(g)
+    return centers
 
 
 def kmeans_fit(
@@ -60,7 +218,6 @@ def kmeans_fit(
     tol: float = 1e-6,
     seed: int = 42,
     init_sample: int = 4096,
-    distributed_reduce: bool | None = None,
 ) -> np.ndarray:
     """Fit k spherical-k-means centroids (unit vectors) distributed.
 
@@ -69,141 +226,41 @@ def kmeans_fit(
     shuffle-free executor pass in which every TASK accumulates its whole
     partition into ≤ k (cluster, cnt, vsum) partial rows (across Arrow
     batches, not per batch) — the map-side combine. The driver then folds
-    ≤ partitions × k rows. When k is large (default: k > 8192, or
-    ``distributed_reduce=True``) an extra k-key shuffle reduces partials
-    per cluster executor-side first, so the driver collects exactly k rows
-    — the treeAggregate shape; at small k that shuffle costs more than the
-    collect it saves (measured 2.6× on the sf0.1 semantic-dedup drive), so
-    it is off. Convergence when no centroid moves more than ``tol``
-    (cosine of successive centroids ≥ 1 - tol).
+    ≤ partitions × k rows. When k > ``_REDUCE_ABOVE_K`` an extra k-key
+    shuffle reduces partials per cluster executor-side first, so the
+    driver collects exactly k rows. Convergence when no centroid moves
+    more than ``tol`` (cosine of successive centroids ≥ 1 - tol).
 
     Determinism: partials are folded in a TOTAL sort order
-    (cluster, cnt, vsum bytes), removing shuffle/collect-arrival
-    nondeterminism — refits are bit-identical for a fixed partitioning.
+    (cluster, cnt, vsum), on the driver and in the executor-side reduce
+    alike, removing shuffle/collect-arrival nondeterminism — refits are
+    bit-identical for a fixed partitioning, with or without the reduce.
     Across DIFFERENT partitionings the partial-sum boundaries themselves
     differ, so centers agree only to float-accumulation order (ulp)."""
+    vecs = df.where(F.col(vec_col).isNotNull())
     sample = [
         r[0]
-        for r in df.where(F.col(vec_col).isNotNull())
-        .orderBy(F.md5(F.col(key_col).cast("string")))
+        for r in vecs.orderBy(F.md5(F.col(key_col).cast("string")))
         .select(as_double(vec_col))
         .limit(init_sample)
         .collect()
     ]
     x0 = _unit(np.asarray(sample, dtype=np.float64))
-    rng = np.random.RandomState(seed)
-    centers = x0[rng.choice(len(x0), size=min(k, len(x0)), replace=False)].copy()
-
     if len(sample) < init_sample:
         # The md5-ordered sample did not hit its cap, i.e. it IS the whole
         # non-null corpus: every distributed Lloyd round would scan exactly
-        # these rows to fold ≤ k×dim partials back to the driver. Run the
-        # rounds in numpy instead — ZERO Spark jobs per round (was one
-        # full mapInPandas pass + collect per round, the dominant cost of
-        # a small-corpus fit: ~10 × 0.25 s at sf0.1). At production scale
-        # the corpus exceeds ``init_sample`` and the distributed path below
-        # engages unchanged. Centers agree with the distributed fold to
-        # float-accumulation order (ulp) — the same envelope different
-        # partitionings already have (see determinism note above); this
-        # path is itself bit-deterministic (fixed md5 collect order).
-        for _ in range(max_iter):
-            assign = np.argmax(x0 @ centers.T, axis=1)
-            sums = np.zeros_like(centers)
-            counts = np.zeros(len(centers))
-            for j in np.unique(assign):
-                m = x0[assign == j]
-                sums[j] = m.sum(axis=0)
-                counts[j] = len(m)
-            new = centers.copy()
-            nz = counts > 0
-            new[nz] = _unit(sums[nz] / counts[nz, None])
-            shift = 1.0 - np.min(np.sum(new * centers, axis=1))
-            centers = new
-            if shift < tol:
-                break
-        return centers
-
-    partial_schema = StructType(
-        [
-            StructField("cluster", IntegerType()),
-            StructField("cnt", LongType()),
-            StructField("vsum", ArrayType(DoubleType())),
-        ]
-    )
-    vecs = df.where(F.col(vec_col).isNotNull()).select(as_double(vec_col).alias("v"))
-    if distributed_reduce is None:
-        distributed_reduce = k > 8192
-
-    for _ in range(max_iter):
-        c = centers  # rebind for closure capture of THIS round's centers
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # accumulate the WHOLE partition before emitting: ≤ k rows per
-            # task regardless of how many Arrow batches it holds
-            counts: dict[int, int] = {}
-            sums: dict[int, np.ndarray] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = _unit(np.vstack(pdf["v"].to_numpy()).astype(np.float64))
-                assign = np.argmax(x @ c.T, axis=1)
-                for j in np.unique(assign):
-                    m = x[assign == j]
-                    j = int(j)
-                    if j in counts:
-                        counts[j] += len(m)
-                        sums[j] += m.sum(axis=0)
-                    else:
-                        counts[j] = len(m)
-                        sums[j] = m.sum(axis=0)
-            if counts:
-                out = [
-                    (j, counts[j], sums[j].tolist()) for j in sorted(counts)
-                ]
-                yield pd.DataFrame(out, columns=["cluster", "cnt", "vsum"])
-
-        folded = vecs.mapInPandas(partials, partial_schema)
-        if distributed_reduce:
-
-            def reduce_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-                # total-order fold: same sum for any shuffle arrival order
-                v = np.vstack(pdf["vsum"].to_numpy()).astype(np.float64)
-                order = sorted(
-                    range(len(pdf)),
-                    key=lambda i: (int(pdf["cnt"].iloc[i]), v[i].tobytes()),
-                )
-                acc = np.zeros(v.shape[1])
-                for i in order:
-                    acc += v[i]
-                return pd.DataFrame(
-                    {
-                        "cluster": [int(pdf["cluster"].iloc[0])],
-                        "cnt": [int(pdf["cnt"].sum())],
-                        "vsum": [acc.tolist()],
-                    }
-                )
-
-            folded = folded.groupBy("cluster").applyInPandas(
-                reduce_cluster, partial_schema
-            )
-        rows = folded.collect()
-        sums = np.zeros_like(centers)
-        counts = np.zeros(len(centers))
-        # total-order driver fold: deterministic for any collect order
-        for r in sorted(
-            rows,
-            key=lambda r: (r["cluster"], r["cnt"], tuple(r["vsum"])),
-        ):
-            sums[r["cluster"]] += np.asarray(r["vsum"])
-            counts[r["cluster"]] += r["cnt"]
-        new = centers.copy()
-        nz = counts > 0
-        new[nz] = _unit(sums[nz] / counts[nz, None])
-        shift = 1.0 - np.min(np.sum(new * centers, axis=1))
-        centers = new
-        if shift < tol:
-            break
-    return centers
+        # these rows, so the rounds run in numpy — ZERO Spark jobs per
+        # round (a distributed round costs ~0.25 s at sf0.1). Centers agree
+        # with the distributed fold to float-accumulation order (ulp) — the
+        # envelope different partitionings already have.
+        partials = _local_partials({0: x0})
+    else:
+        partials = _spark_partials(
+            vecs.select(F.lit(0).alias("grp"), as_double(vec_col).alias("v")),
+            reduce=k > _REDUCE_ABOVE_K,
+        )
+    centers = {0: _seeded_init(x0, k, seed)}
+    return _lloyd(partials, centers, max_iter=max_iter, tol=tol)[0]
 
 
 def assign_clusters(
@@ -340,13 +397,12 @@ def _batched_sub_kmeans(
     init_sample: int = 4096,
 ) -> dict[int, np.ndarray]:
     """Fit one sub-quantizer PER oversized coarse cell with ALL cells
-    advancing together: every Lloyd round is ONE Arrow-batched pass over
-    the combined frame keyed by cell (per-task partials bounded by
-    Σ k₂ rows), folded on the driver in a total order per (cell, cluster).
-    Same init recipe as ``kmeans_fit`` (seeded draw from the md5-ordered
-    per-cell head — here computed for every cell in ONE window job).
-    Converged cells drop out of later rounds; the loop ends when all
-    converge or ``max_iter`` is hit."""
+    advancing together: each cell is a group of ``_lloyd``, so every
+    distributed round is ONE Arrow-batched pass over the combined frame
+    (per-task partials bounded by Σ k₂ rows). Same init recipe as
+    ``kmeans_fit`` (seeded draw from the md5-ordered per-cell head — here
+    computed for every cell in ONE window job). Converged cells drop out of
+    later rounds; the loop ends when all converge or ``max_iter`` is hit."""
     from pyspark.sql import Window as W
 
     md5k = F.md5(F.col(key_col).cast("string"))
@@ -365,113 +421,25 @@ def _batched_sub_kmeans(
     by_cell: dict[int, list] = {}
     for r in sorted(head, key=lambda r: (r["cluster"], r["__m"])):
         by_cell.setdefault(int(r["cluster"]), []).append(r["__v"])
-    centers: dict[int, np.ndarray] = {}
-    for c in sorted(oversized):
-        k2 = max(2, int(sizes[c] / max(target_cluster_size, 1)) + 1)
-        x0 = _unit(np.asarray(by_cell[c], dtype=np.float64))
-        rng = np.random.RandomState(seed + 1 + c)
-        centers[c] = x0[
-            rng.choice(len(x0), size=min(k2, len(x0)), replace=False)
-        ].copy()
-
+    xs = {c: _unit(np.asarray(by_cell[c], dtype=np.float64)) for c in oversized}
+    centers = {
+        c: _seeded_init(
+            xs[c], max(2, int(sizes[c] / max(target_cluster_size, 1)) + 1), seed + 1 + c
+        )
+        for c in sorted(oversized)
+    }
     if all(sizes[c] <= init_sample for c in oversized):
         # Every oversized cell's md5-ordered head IS the whole cell (the
-        # caller's ``sizes`` are exact counts), so each distributed round
-        # would fold exactly these rows — run the sub-Lloyd loops in numpy
-        # instead: ZERO Spark jobs (was ≤ max_iter mapInPandas+collect
-        # rounds). Cells past ``init_sample`` take the distributed path
-        # below unchanged; same ulp-order envelope as ``kmeans_fit``.
-        for c in sorted(oversized):
-            x = _unit(np.asarray(by_cell[c], dtype=np.float64))
-            cc = centers[c]
-            for _ in range(max_iter):
-                assign = np.argmax(x @ cc.T, axis=1)
-                sums = np.zeros_like(cc)
-                counts = np.zeros(len(cc))
-                for j in np.unique(assign):
-                    m = x[assign == j]
-                    sums[j] = m.sum(axis=0)
-                    counts[j] = len(m)
-                new = cc.copy()
-                nz = counts > 0
-                new[nz] = _unit(sums[nz] / counts[nz, None])
-                shift = 1.0 - np.min(np.sum(new * cc, axis=1))
-                cc = new
-                if shift < tol:
-                    break
-            centers[c] = cc
-        return centers
-
-    partial_schema = StructType(
-        [
-            StructField("cell", IntegerType()),
-            StructField("cluster", IntegerType()),
-            StructField("cnt", LongType()),
-            StructField("vsum", ArrayType(DoubleType())),
-        ]
-    )
-    vecs = cells_df.select(
-        F.col("cluster").alias("cell"), as_double(vec_col).alias("v")
-    )
-    active = set(centers)
-    for _ in range(max_iter):
-        cmap = {c: centers[c] for c in active}  # this round's snapshot
-
-        def partials(
-            batches: Iterator[pd.DataFrame], cmap=cmap
-        ) -> Iterator[pd.DataFrame]:
-            counts: dict[tuple[int, int], int] = {}
-            sums: dict[tuple[int, int], np.ndarray] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                for c, grp in pdf.groupby("cell"):
-                    cc = cmap.get(int(c))
-                    if cc is None:  # converged cell: frozen, skip
-                        continue
-                    x = _unit(np.vstack(grp["v"].to_numpy()).astype(np.float64))
-                    assign = np.argmax(x @ cc.T, axis=1)
-                    for j in np.unique(assign):
-                        m = x[assign == j]
-                        key = (int(c), int(j))
-                        if key in counts:
-                            counts[key] += len(m)
-                            sums[key] += m.sum(axis=0)
-                        else:
-                            counts[key] = len(m)
-                            sums[key] = m.sum(axis=0)
-            if counts:
-                out = [
-                    (c, j, counts[(c, j)], sums[(c, j)].tolist())
-                    for c, j in sorted(counts)
-                ]
-                yield pd.DataFrame(
-                    out, columns=["cell", "cluster", "cnt", "vsum"]
-                )
-
-        rows = vecs.mapInPandas(partials, partial_schema).collect()
-        sums_d = {c: np.zeros_like(centers[c]) for c in active}
-        cnts_d = {c: np.zeros(len(centers[c])) for c in active}
-        # total-order driver fold: deterministic for any collect order
-        for r in sorted(
-            rows,
-            key=lambda r: (r["cell"], r["cluster"], r["cnt"], tuple(r["vsum"])),
-        ):
-            sums_d[r["cell"]][r["cluster"]] += np.asarray(r["vsum"])
-            cnts_d[r["cell"]][r["cluster"]] += r["cnt"]
-        done = []
-        for c in sorted(active):
-            new = centers[c].copy()
-            nz = cnts_d[c] > 0
-            new[nz] = _unit(sums_d[c][nz] / cnts_d[c][nz, None])
-            shift = 1.0 - np.min(np.sum(new * centers[c], axis=1))
-            centers[c] = new
-            if shift < tol:
-                done.append(c)
-        active -= set(done)
-        if not active:
-            break
-    return centers
+        # caller's ``sizes`` are exact counts): the rounds run in numpy,
+        # ZERO Spark jobs — the same trade as ``kmeans_fit``.
+        partials = _local_partials(xs)
+    else:
+        partials = _spark_partials(
+            cells_df.select(
+                F.col("cluster").alias("grp"), as_double(vec_col).alias("v")
+            )
+        )
+    return _lloyd(partials, centers, max_iter=max_iter, tol=tol)
 
 
 def semantic_dedup_two_level(

@@ -33,6 +33,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from airflow_dags_spark.functions.vectors import as_double, cosine_pre, l2_norm
+from airflow_dags_spark.operators.clustering import (
+    _local_partials,
+    _lloyd,
+    _seeded_init,
+    _unit,
+)
 
 
 def _stage_vec(df: DataFrame, vec_col, v_alias: str, n_alias: str) -> DataFrame:
@@ -233,27 +239,15 @@ def _fit_coarse_quantizer(
     centroid quality saturates long before full-corpus scans pay off, and at
     100 TB a distributed k-means per index build is a non-starter. The sample
     is small by construction (fit_sample × dim doubles), the fit is seeded
-    numpy Lloyd iterations on unit vectors → fully deterministic."""
-    import numpy as np
-
+    numpy Lloyd iterations on unit vectors (``clustering._lloyd``, every
+    round, no early stop) → fully deterministic."""
     sample = [
         r[0] for r in embeddings.select(as_double(vec_col)).limit(fit_sample).collect()
         if r[0] is not None
     ]
-    x = np.asarray(sample, dtype=np.float64)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = x / np.where(norms > 0, norms, 1.0)
-    rng = np.random.RandomState(seed)
-    centers = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-    for _ in range(max_iter):
-        assign = np.argmax(x @ centers.T, axis=1)  # cosine on unit vectors
-        for j in range(len(centers)):
-            members = x[assign == j]
-            if len(members):
-                c = members.mean(axis=0)
-                n = np.linalg.norm(c)
-                centers[j] = c / n if n > 0 else centers[j]
-    return centers
+    x = _unit(np.asarray(sample, dtype=np.float64))
+    centers = {0: _seeded_init(x, n_cells, seed)}
+    return _lloyd(_local_partials({0: x}), centers, max_iter=max_iter, tol=None)[0]
 
 
 def ivf_ann_topk(

@@ -177,7 +177,11 @@ def _bench_trend_frame(spark: SparkSession, repo_dir: str, pin: int) -> DataFram
         F.col("cur.query").alias("query"),
         F.col("prev.sec").alias("prev_s"),
         F.col("cur.sec").alias("cur_s"),
-        F.round(F.col("cur.sec") / F.col("prev.sec"), 2).alias("ratio"),
+        # round(x * 100) / 100, not round(x, 2): Spark rounds the shortest
+        # decimal string of x half-up (0.41 / 0.4 = 1.02499999999999991…
+        # prints as "1.025" → 1.03), DuckDB's ROUND rounds the double's
+        # value (→ 1.02); the scaled form agrees with DuckDB's ROUND(x, 2)
+        (F.round(F.col("cur.sec") / F.col("prev.sec") * 100) / 100).alias("ratio"),
         (
             (F.col("cur.sec") > F.col("prev.sec") * 1.5)
             & (F.col("cur.sec") - F.col("prev.sec") > 0.3)

@@ -55,33 +55,103 @@ def test_kmeans_recovers_separated_blobs(spark):
     assert len({assign[i] for i in assign}) == 3
 
 
-def test_kmeans_matches_numpy_lloyd_reference(spark):
-    """Same deterministic init → the distributed fold must reproduce a
-    plain numpy Lloyd loop (modulo float-sum order, hence allclose)."""
+def _md5_head(ids, n):
+    """The ids' md5-ordered head — the init sample the engine draws."""
     import hashlib
 
-    x, _ = _blobs(seed=11, n_per=30)
-    df = _df_from(spark, x)
-    k, seed, init_sample, iters = 4, 3, 4096, 8
-    centers = kmeans_fit(
-        df, "embedding", k, key_col="vec_id", seed=seed, max_iter=iters, tol=0.0
-    )
+    return sorted(ids, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())[:n]
 
-    # reference: identical init (md5-ordered head + seeded choice), full loop
-    order = sorted(range(len(x)), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
-    x0 = _unit(x[order[:init_sample]])
+
+def _lloyd_reference(xu, init_rows, k, seed, iters):
+    """Plain numpy spherical Lloyd from the engine's seeded init."""
     rng = np.random.RandomState(seed)
-    ref = x0[rng.choice(len(x0), size=min(k, len(x0)), replace=False)].copy()
-    xu = _unit(x)
+    pick = rng.choice(len(init_rows), size=min(k, len(init_rows)), replace=False)
+    ref = init_rows[pick].copy()
     for _ in range(iters):
         assign = np.argmax(xu @ ref.T, axis=1)
         new = ref.copy()
-        for j in range(k):
+        for j in range(len(ref)):
             m = xu[assign == j]
             if len(m):
                 new[j] = _unit(m.sum(axis=0, keepdims=True) / len(m))[0]
         ref = new
+    return ref
+
+
+@pytest.mark.parametrize("init_sample", [4096, 16])
+def test_kmeans_matches_numpy_lloyd_reference(spark, init_sample):
+    """Same deterministic init → both fits — in numpy when the corpus fits
+    in ``init_sample``, distributed when it does not — must reproduce a
+    plain numpy Lloyd loop (modulo float-sum order, hence allclose)."""
+    x, _ = _blobs(seed=11, n_per=30)
+    df = _df_from(spark, x).repartition(3)
+    k, seed, iters = 4, 3, 8
+    centers = kmeans_fit(
+        df,
+        "embedding",
+        k,
+        key_col="vec_id",
+        seed=seed,
+        max_iter=iters,
+        tol=0.0,
+        init_sample=init_sample,
+    )
+    x0 = _unit(x[_md5_head(range(len(x)), init_sample)])
+    ref = _lloyd_reference(_unit(x), x0, k, seed, iters)
     assert np.allclose(centers, ref, atol=1e-9)
+
+
+def test_kmeans_executor_reduce_matches_driver_fold(spark, monkeypatch):
+    """Past ``_REDUCE_ABOVE_K`` the partials are reduced per cluster
+    executor-side before the collect. That fold uses the driver fold's
+    total order, so both paths return the same bits."""
+    from airflow_dags_spark.operators import clustering
+
+    x, _ = _blobs(seed=11, n_per=30)
+    # six partitions: several partials per cluster, some with tied
+    # counts, so the order past ``cnt`` decides the bits
+    df = _df_from(spark, x).repartition(6)
+    kw = dict(key_col="vec_id", seed=3, max_iter=6, init_sample=16)
+    default = kmeans_fit(df, "embedding", 4, **kw)
+    monkeypatch.setattr(clustering, "_REDUCE_ABOVE_K", 0)
+    reduced = kmeans_fit(df, "embedding", 4, **kw)
+    assert np.array_equal(reduced, default)
+
+
+def test_batched_sub_kmeans_distributed_matches_per_cell_lloyd(spark):
+    """With ``init_sample`` below every cell size the sub-fit takes the
+    distributed path: all cells advance in one Spark pass per round, and
+    each cell must still equal its own numpy Lloyd loop."""
+    from airflow_dags_spark.operators.clustering import _batched_sub_kmeans
+
+    x, _ = _blobs(seed=5, n_per=30, noise=0.3)  # 90 rows
+    cell_of = {i: (7 if i % 3 else 2) for i in range(len(x))}  # 60 / 30 rows
+    rows = [(i, cell_of[i], [float(v) for v in x[i]]) for i in range(len(x))]
+    cells = spark.createDataFrame(
+        rows, "vec_id bigint, cluster int, embedding array<double>"
+    ).repartition(3)
+    sizes = {7: 60, 2: 30}
+    seed, iters, init_sample, target = 8, 6, 10, 10
+    got = _batched_sub_kmeans(
+        cells,
+        sizes,
+        [2, 7],
+        "embedding",
+        "vec_id",
+        target_cluster_size=target,
+        seed=seed,
+        max_iter=iters,
+        tol=0.0,
+        init_sample=init_sample,
+    )
+    assert sorted(got) == [2, 7]
+    for c, n in sizes.items():
+        ids = [i for i in range(len(x)) if cell_of[i] == c]
+        x0 = _unit(x[_md5_head(ids, init_sample)])
+        k2 = max(2, int(n / target) + 1)
+        ref = _lloyd_reference(_unit(x[ids]), x0, k2, seed + 1 + c, iters)
+        assert got[c].shape == ref.shape
+        assert np.allclose(got[c], ref, atol=1e-9)
 
 
 def test_semantic_dedup_drops_duplicates_min_key_survives(spark):

@@ -88,6 +88,23 @@ def test_pin_hides_rounds_above_it_on_both_engines(spark, tmp_path):
     assert {r["round"] for r in df.collect()} == {2}
 
 
+def test_bench_trend_ratio_rounds_like_duckdb(spark, tmp_path):
+    """0.41 / 0.4 is the double 1.02499999999999991…: DuckDB's ROUND(x, 2)
+    gives 1.02, and Spark's round(x, 2) (half-up on the shortest decimal
+    string "1.025") gave 1.03. The engine must give the oracle's rows."""
+    _write_bench(tmp_path, 1, {"q1": 0.4})
+    _write_bench(tmp_path, 2, {"q1": 0.41})
+
+    sql = _bench_trend_oracle(str(tmp_path), 2)
+    oracle = duckdb.connect().execute(sql).fetchdf()
+    df = _bench_trend_frame(spark, str(tmp_path), 2)
+    assert not compare(df, oracle)
+    got = [tuple(r) for r in df.collect()]
+    want = [tuple(r) for r in oracle.itertuples(index=False)]
+    assert got == want
+    assert got[0][4] == 1.02
+
+
 def test_compute_meta_max_round_requires_both_sidecar_kinds(tmp_path):
     """The pin is the highest round with BOTH sidecars parseable, floor 7:
     corrupt BENCH files must pull a round OUT of the intersection even
