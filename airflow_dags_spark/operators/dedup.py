@@ -36,6 +36,7 @@ from airflow_dags_spark.functions.text import (
     tokens,
     tokens_cased,
 )
+from airflow_dags_spark.operators.iterate import IterationState
 
 DEFAULT_SALTS = ["b0:", "b1:", "b2:", "b3:"]
 
@@ -656,15 +657,6 @@ def minhash_lsh_pairs(
     )
 
 
-def _delete_path(spark, path: str) -> None:
-    """Remove a path through the JVM Hadoop FS (works for file:/, s3a:/,
-    hdfs:/ alike — ``shutil`` would only handle local paths)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    fs.delete(hpath, True)
-
-
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -686,99 +678,51 @@ def connected_components(
     label's label (``comp[comp]``, well-defined because labels are always
     node ids). Propagation alone needs O(diameter) rounds; pointer jumping
     halves label-chain distance per round → O(log diameter) rounds total.
-    Convergence is detected by the exact total-label sum (strictly
-    decreasing while any label changes), one tiny aggregate per round
-    instead of a change-count self-join.
+    Labels only decrease, so the loop stops after the first round that
+    changes no label, counted by an aggregate observed on that round's
+    state write. Raises ``RuntimeError`` when labels are still changing
+    after ``max_iter`` rounds: the labels would not be minimal.
 
-    Per-round label state is double-buffered through PARQUET (``state_dir``,
-    default: the session checkpoint dir, else a driver-local temp dir —
-    cluster deployments must pass a shared path or call
-    ``sc.setCheckpointDir``, the same contract GraphFrames uses). A fresh
-    parquet read is the only reliable way to truncate ALL lineage: both
-    ``localCheckpoint`` and reliable ``checkpoint`` wrap the result in a
-    LogicalRDD that retains the ORIGIN plan for constraint/stats
-    propagation, and with three references to the previous round's labels
-    per iteration that hidden origin tree grows geometrically — measured
-    ~2.5× driver planning time per round from round ~17 (and the stats
-    visitor walking it OOMs small driver heaps). The parquet relation
-    carries no origin, so every round plans in constant time. At 100 TB
-    scale: labels/edges co-partition on the join key across rounds, and the
-    per-round state write is |nodes| rows — the standard Pregel-style
-    iteration cost.
+    Runs on ``operators/iterate.py``, which owns ``state_dir`` (default:
+    the session checkpoint dir, else a driver-local temp dir), the parquet
+    double buffer that truncates lineage each round, and the cleanup.
     """
-    spark = nodes.sparkSession
-    self_created_state_dir = False
-    if state_dir is None:
-        state_dir = spark.sparkContext.getCheckpointDir()
-    if state_dir is None:
-        import tempfile
-
-        state_dir = tempfile.mkdtemp(prefix="spark_graft_cc_")
-        self_created_state_dir = True
-    import uuid
-
-    base = state_dir.rstrip("/") + "/cc-" + uuid.uuid4().hex
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        path = f"{base}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    sym = _materialize(
-        edges.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
-        .unionByName(
-            edges.select(F.col(key_b).alias("src"), F.col(key_a).alias("dst"))
-        ),
-        "sym",
-    )
-    labels = _materialize(
-        nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("comp")),
-        "labels-0",
-    )
-
-    def total(df: DataFrame) -> object:
-        # exact (decimal) sum — a bigint sum could overflow at extreme scale
-        return df.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
-
-    prev_total = total(labels)
-    for i in range(max_iter):
-        neigh = (
-            sym.join(labels, sym.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("comp").alias("nmin"))
-        )
-        jump = labels.select(
-            F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
-        )
-        labels = _materialize(
-            labels.join(neigh, labels.node == F.col("node2"), "left")
-            .join(jump, labels.comp == F.col("jnode"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"),
-                    F.coalesce(F.col("nmin"), F.col("comp")),
-                    F.coalesce(F.col("jcomp"), F.col("comp")),
-                ).alias("comp"),
+    with IterationState(nodes.sparkSession, state_dir, "cc") as it:
+        sym = it.materialize(
+            edges.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
+            .unionByName(
+                edges.select(F.col(key_b).alias("src"), F.col(key_a).alias("dst"))
             ),
-            f"labels-{(i + 1) % 2}",
+            "sym",
         )
-        new_total = total(labels)
-        if new_total == prev_total:
-            break
-        prev_total = new_total
-    # detach the result from the state dir before cleaning it up; a single
-    # checkpoint of a flat parquet read has a constant-size origin plan
-    result = labels.select(
-        F.col("node").alias(node_col), F.col("comp").alias("component")
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    try:
-        # remove the whole mkdtemp dir when we created it, not just the
-        # cc-<uuid> subdir — otherwise every call leaks an empty tempdir
-        _delete_path(spark, state_dir if self_created_state_dir else base)
-    except Exception:
-        pass  # leaked state dir is recoverable; the result no longer needs it
-    return result
+
+        def step(labels: DataFrame):
+            neigh = (
+                sym.join(labels, sym.src == labels.node)
+                .groupBy(F.col("dst").alias("node2"))
+                .agg(F.min("comp").alias("nmin"))
+            )
+            jump = labels.toDF("jnode", "jcomp")
+            comp = F.col("comp")
+            lowest = F.least(comp, F.coalesce("nmin", comp), F.coalesce("jcomp", comp))
+            staged = (
+                labels.join(neigh, labels.node == F.col("node2"), "left")
+                .join(jump, labels.comp == F.col("jnode"), "left")
+                .select("node", comp.alias("__old"), lowest.alias("comp"))
+            )
+            return staged, F.count_if(F.col("comp") != F.col("__old"))
+
+        labels, converged = it.run(
+            nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("comp")),
+            step,
+            lambda changed: changed == 0,
+            max_iter,
+        )
+        if not converged:
+            raise RuntimeError(
+                f"connected_components: labels still changing after {max_iter=} rounds"
+            )
+    return labels.toDF(node_col, "component")
 
 
 # SimHash ---------------------------------------------------------------------

@@ -5,16 +5,13 @@ near-dup candidate edges) ranks entities by link structure — the
 importance/centrality signal a curation pipeline uses to weight sources or
 pick canonical cluster representatives.
 
-Same scale discipline as ``dedup.connected_components``:
+It runs on the same bulk-synchronous loop as
+``dedup.connected_components``: ``operators/iterate.py`` owns the state
+dir, the parquet double buffer (and why parquet, not ``localCheckpoint``,
+truncates lineage), the one action per round and the cleanup. Here:
 
-- per-round rank state is double-buffered through parquet, which truncates
-  ALL lineage each round (localCheckpoint retains the origin plan and its
-  hidden tree grows geometrically with three references per iteration —
-  measured on cc, documented at ``dedup.py:connected_components``);
 - each round is ONE contribution shuffle (edges ⋈ ranks on src, grouped on
-  dst) plus a tiny 1-row aggregate for dangling mass and convergence; at
-  100 TB ranks/edges co-partition on the join key across rounds — the
-  standard Pregel iteration cost;
+  dst) plus a tiny 1-row aggregate for dangling mass;
 - dangling (sink) mass is redistributed uniformly each round so total rank
   stays 1 (the textbook correction; dropping it makes ranks leak).
 
@@ -25,15 +22,12 @@ power iteration at 1e-9 L1.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from airflow_dags_spark.functions.localframe import tiny_df
-
-from airflow_dags_spark.operators.dedup import _delete_path
+from airflow_dags_spark.operators.iterate import IterationState
 
 
 def pagerank(
@@ -49,118 +43,64 @@ def pagerank(
     state_dir: str | None = None,
 ) -> DataFrame:
     """PageRank of ``nodes`` over directed ``edges``. Returns
-    ``(node_col, rank)`` summing to 1. Converges when the L1 delta between
-    rounds drops under ``tol`` (checked with one scalar aggregate per
-    round, never a driver-side rank collect)."""
-    spark = nodes.sparkSession
-    self_created = False
-    if state_dir is None:
-        state_dir = spark.sparkContext.getCheckpointDir()
-    if state_dir is None:
-        import tempfile
-
-        state_dir = tempfile.mkdtemp(prefix="spark_graft_pr_")
-        self_created = True
-    base = state_dir.rstrip("/") + "/pr-" + uuid.uuid4().hex
-
-    def materialize(df: DataFrame, name: str) -> DataFrame:
-        path = f"{base}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
+    ``(node_col, rank)`` summing to 1. Stops early when the L1 delta
+    between rounds drops under ``tol`` (observed on the state write, never
+    a driver-side rank collect); ``max_iter`` caps the rounds."""
     n_nodes = nodes.count()
     if n_nodes == 0:
-        _cleanup(spark, base, state_dir, self_created)
-        return nodes.select(
-            F.col(node_col).alias(node_col), F.lit(0.0).alias("rank")
-        )
-
-    e = materialize(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct(),
-        "edges",
-    )
-    # out-degrees once; nodes with no out-edges are dangling sinks
-    deg = materialize(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "deg"
-    )
-    ranks = materialize(
-        nodes.select(
-            F.col(node_col).alias("node"),
-            F.lit(1.0 / n_nodes).alias("rank"),
-        ),
-        "ranks-0",
-    )
-
-    from pyspark.sql import Observation
-
+        return nodes.select(F.col(node_col).alias(node_col), F.lit(0.0).alias("rank"))
     teleport = (1.0 - damping) / n_nodes
-    for i in range(max_iter):
-        # ONE driver action per iteration (r10 verdict #4; was three —
-        # dangling-mass aggregate, state write, delta aggregate):
-        # - the dangling mass rides along as a 1-row aggregate cross-joined
-        #   (broadcast) into the rank expression instead of a driver
-        #   ``first()`` — same F.sum over the same rows, same division;
-        # - the L1 convergence delta is a DataFrame Observation filled by
-        #   the state write itself (old rank is already on the joined row,
-        #   so |new − old| needs no second pass over the parquet buffers).
-        # Float caveat: the observed delta folds partials in partition
-        # order like the old join-aggregate did; it gates EARLY STOP only
-        # (tolerance heuristic) — ranks themselves are bit-identical to
-        # the three-action form.
-        with_deg = ranks.join(deg, ranks.node == deg.src, "left")
-        dangling_df = (
-            with_deg.where(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling"))
+
+    with IterationState(nodes.sparkSession, state_dir, "pr") as it:
+        e = it.materialize(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .distinct(),
+            "edges",
         )
-        contribs = (
-            e.join(ranks, e.src == ranks.node)
-            .join(deg, "src")
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
+        # out-degrees once; nodes with no out-edges are dangling sinks
+        deg = it.materialize(
+            e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "deg"
         )
-        new_rank = (
-            F.lit(teleport)
-            + F.lit(damping)
-            * (
-                F.coalesce(F.col("inflow"), F.lit(0.0))
-                + F.col("__dangling") / F.lit(float(n_nodes))
+
+        def step(ranks: DataFrame):
+            # The dangling mass is a 1-row aggregate broadcast-joined into
+            # the rank expression, so it needs no driver action; the old
+            # rank stays on the joined row for the observed L1 delta. That
+            # delta folds partials in partition order, so it gates the
+            # early stop only; the ranks do not depend on it.
+            with_deg = ranks.join(deg, ranks.node == deg.src, "left")
+            dangling_df = (
+                with_deg.where(F.col("deg").isNull())
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling"))
             )
-        )
-        obs = Observation(f"pr-delta-{i}")
-        staged = (
-            ranks.join(contribs, ranks.node == contribs.dst, "left")
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "node",
-                F.col("rank").alias("__old"),
-                new_rank.alias("rank_new"),
+            contribs = (
+                e.join(ranks, e.src == ranks.node)
+                .join(deg, "src")
+                .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("inflow"))
             )
-            .observe(obs, F.sum(F.abs(F.col("rank_new") - F.col("__old"))).alias("delta"))
+            inflow = F.coalesce(F.col("inflow"), F.lit(0.0))
+            dangling = F.col("__dangling") / F.lit(float(n_nodes))
+            new_rank = F.lit(teleport) + F.lit(damping) * (inflow + dangling)
+            staged = (
+                ranks.join(contribs, ranks.node == contribs.dst, "left")
+                .crossJoin(F.broadcast(dangling_df))
+                .select("node", F.col("rank").alias("__old"), new_rank.alias("rank"))
+            )
+            return staged, F.sum(F.abs(F.col("rank") - F.col("__old")))
+
+        ranks, _ = it.run(
+            nodes.select(
+                F.col(node_col).alias("node"),
+                F.lit(1.0 / n_nodes).alias("rank"),
+            ),
+            step,
+            lambda delta: delta is not None and delta < tol,
+            max_iter,
         )
-        new_ranks = materialize(
-            staged.select("node", F.col("rank_new").alias("rank")),
-            f"ranks-{(i + 1) % 2}",
-        )
-        delta = obs.get["delta"]
-        ranks = new_ranks
-        if delta is not None and delta < tol:
-            break
-
-    result = ranks.select(
-        F.col("node").alias(node_col), F.col("rank")
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    _cleanup(spark, base, state_dir, self_created)
-    return result
-
-
-def _cleanup(spark, base: str, state_dir: str, self_created: bool) -> None:
-    try:
-        _delete_path(spark, state_dir if self_created else base)
-    except Exception:
-        pass  # leaked state dir is recoverable
+    return ranks.toDF(node_col, "rank")
 
 
 def co_occurrence_edges(

@@ -272,6 +272,20 @@ def test_connected_components_chain_converges(spark):
     assert {(r["node"], r["component"]) for r in rows} == {(i, 0) for i in range(n)}
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """Two rounds cannot settle the 60-node chain: returning its labels
+    would silently give clusters whose ids are not the minimum."""
+    from airflow_dags_spark.operators.dedup import connected_components
+
+    n = 60
+    nodes_df = spark.createDataFrame([(i,) for i in range(n)], "node bigint")
+    edges_df = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "key_a bigint, key_b bigint"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(nodes_df, edges_df, max_iter=2)
+
+
 def _reference_pack(tokens_by_key: list[tuple[int, int]], budget: int):
     """Pure-python greedy first-fit in key order: (key, n) -> seq index."""
     out, seq, used = {}, 0, 0
