@@ -319,25 +319,17 @@ def main(argv: list[str] | None = None) -> None:
         )
         print(stats)
     elif args.cmd == "zorder":
-        from airflow_dags_spark.operators.maintenance import (
-            _hadoop_fs,
-            zorder_layout,
-        )
+        from airflow_dags_spark.operators import commit
+        from airflow_dags_spark.operators.maintenance import zorder_layout
 
+        commit.recover(spark, args.table_path)
         cols = args.columns.split(",")
         df = spark.read.parquet(args.table_path)
         clustered = zorder_layout(df, cols, n_files=args.n_files)
-        # same stage-and-swap discipline as compact()
-        import uuid as _uuid
-
-        jvm, fs = _hadoop_fs(spark)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        stage = f"{args.table_path}.zorder-{_uuid.uuid4().hex[:8]}"
-        backup = f"{args.table_path}.old-{_uuid.uuid4().hex[:8]}"
-        clustered.write.mode("overwrite").parquet(stage)
-        fs.rename(hpath(args.table_path), hpath(backup))
-        fs.rename(hpath(stage), hpath(args.table_path))
-        fs.delete(hpath(backup), True)
+        # same recovering stage-and-swap as compact()
+        commit.swap(
+            spark, args.table_path, clustered.write.mode("overwrite").parquet, "zorder"
+        )
     elif args.cmd == "pack-sequences":
         from airflow_dags_spark.functions.text import token_count
         from airflow_dags_spark.operators.export import pack_sequences

@@ -16,9 +16,9 @@ k×dim-bounded state update, and the current model is always derived from
 
 Replay safety is the versioned-state + batch-ledger protocol of
 :mod:`operators.versioned_store` (which also states the excluded
-concurrent writers): each applied batch writes a full ``state/v{n}``
-parquet (k×dim rows — tiny) and then appends ``(batch_id, version,
-refit)`` to the ledger.
+concurrent writers): each applied batch stages a full state parquet
+(k×dim rows — tiny) and then commits its ledger entry ``(batch_id,
+version, state, refit)``.
 
 100 TB shape: the batch side is one shuffle-free Arrow-batched pass of
 the spherical k-means kernel in ``operators/clustering.py`` (numpy matmul
@@ -92,19 +92,12 @@ class _AnnStore(VersionedStore):
     boundaries — after enough corpus drift the PARTITION itself is stale.
     The store therefore keeps (a) a deterministic md5-sampled VECTOR
     RESERVOIR (parquet, keyed insert-if-absent — grows with the corpus at
-    the sample rate, replay-pure), and (b) a ``refit`` flag on ledger rows
-    marking which versions were (re)fits. :meth:`drift_since_fit`
+    the sample rate, replay-pure), and (b) a ``refit`` flag on ledger
+    entries marking which versions were (re)fits. :meth:`drift_since_fit`
     measures how far the current model has re-centered away from the
     last fit's; :meth:`maybe_refit` re-trains from the reservoir (seeded
-    Lloyd) only past the caller's threshold.
+    Lloyd) only past the caller's threshold."""
 
-    Ledger format note: IVF ledgers of rounds ≤ 9 wrote ``(batch_id,
-    version)`` rows. Such a ledger is migrated in place on its first
-    commit (tiny table, atomic swap) with its version-0 init marked as the
-    fit — so ``last_fit_version`` on an un-migrated store reads 0, which
-    is exactly the fit it had."""
-
-    _ledger_schema = "batch_id string, version int, refit boolean"
     _shape_keys: tuple[str, ...]
     _shift_key: str
 
@@ -123,10 +116,11 @@ class _AnnStore(VersionedStore):
     # -- state access -------------------------------------------------------
 
     def _model(self, _rows: list | None = None) -> np.ndarray:
-        v = self.current_version(_rows)
+        rows = self._ledger_rows() if _rows is None else _rows
+        v = self.current_version(rows)
         if v < 0:
             raise self._not_initialized()
-        return self._model_from(self._state_rows(v))
+        return self._model_from(self._state_rows(v, rows))
 
     @staticmethod
     def _shift(a: np.ndarray, b: np.ndarray) -> float:
@@ -135,16 +129,13 @@ class _AnnStore(VersionedStore):
         return float(np.linalg.norm(d, axis=1).mean())
 
     def last_fit_version(self, _rows: list | None = None) -> int:
-        """Version of the last (re)train; a pre-drift-policy ledger (no
-        ``refit`` column yet) has exactly one fit — its version-0 init."""
+        """Version of the last (re)train."""
         rows = (self._ledger_rows() if _rows is None else _rows) or []
-        if not rows or "refit" not in rows[0].__fields__:
-            return 0
         fits = [int(r["version"]) for r in rows if r["refit"]]
         return max(fits) if fits else 0
 
     def _drift(self, model: np.ndarray, ledger: list | None) -> float:
-        fit = self._state_at(self.last_fit_version(ledger)).collect()
+        fit = self._state_at(self.last_fit_version(ledger), ledger).collect()
         return self._shift(model, self._model_from(fit))
 
     def drift_since_fit(self) -> float:
@@ -155,18 +146,6 @@ class _AnnStore(VersionedStore):
         return self._drift(self._model(ledger), ledger)
 
     # -- writes -------------------------------------------------------------
-
-    def _commit(
-        self, batch_id: str, version: int, _rows: list | None, refit: bool
-    ) -> None:
-        if _rows and "refit" not in _rows[0].__fields__:
-            # one-time in-place schema migration of a pre-drift-policy
-            # ledger: its version-0 init was its one fit. Appending to the
-            # old schema would silently drop the flag instead.
-            self._ledger._atomic_overwrite(
-                self._ledger.read().withColumn("refit", F.col("version") == 0)
-            )
-        super()._commit(batch_id, version, _rows, refit)
 
     def _reserve(self, vecs: DataFrame, sample_hex: str) -> None:
         """Fold the batch's deterministic md5 sample into the reservoir
@@ -188,8 +167,7 @@ class _AnnStore(VersionedStore):
         clean = vecs.where(F.col(self.vec_col).isNotNull())
         model = self._fit(clean, shape, fit_sample, max_iter, seed)
         self._reserve(clean, sample_hex)
-        self._write_state(self._batch_stats(clean, model, shape), 0)
-        self._commit(batch_id, 0, None, True)
+        self._commit(batch_id, 0, self._batch_stats(clean, model, shape), refit=True)
         return {"applied": True, "version": 0, **dict(zip(self._shape_keys, shape))}
 
     def add_batch(
@@ -198,16 +176,9 @@ class _AnnStore(VersionedStore):
         """Assign a new batch to the CURRENT model, fold its per-cell sums
         into the state, persist as the next version. Replay of an applied
         ``batch_id`` is a no-op (ledger check); a crash between the state
-        write and the ledger append is healed by the replay
-        deterministically overwriting the orphan version.
-
-        Manual batch ids should AVOID the bare ``b<digits>`` shape: the
-        streaming sinks' one-release legacy-migration check treats such
-        ledger keys as pre-namespace sink commits, so a store seeded
-        manually with ``b1`` and later attached to a sink would skip
-        stream micro-batch 1 (pass ``legacy_ledger_check=False`` to the
-        sink if a store already carries such keys)."""
-        ledger = self._ledger_rows()  # ONE ledger job: applied + version
+        write and the ledger commit leaves an orphan state dir no reader
+        sees, and the replay commits afresh."""
+        ledger = self._ledger_rows()  # ONE ledger read: applied + version
         if self._applied(batch_id, ledger):
             return {"applied": False, "version": self.current_version(ledger)}
         version0 = self.current_version(ledger)
@@ -215,7 +186,7 @@ class _AnnStore(VersionedStore):
             raise self._not_initialized()
         # ONE state read serves both the model and the fold base (the
         # streaming sinks run this per micro-batch)
-        state_rows = self._state_rows(version0)
+        state_rows = self._state_rows(version0, ledger)
         model = self._model_from(state_rows)
         clean = vecs.where(F.col(self.vec_col).isNotNull())
         self._reserve(clean, sample_hex)
@@ -236,11 +207,10 @@ class _AnnStore(VersionedStore):
             merged.append((*key, [a + b for a, b in zip(osum, dsum)], on + dn))
             n_new += dn
         version = version0 + 1
-        self._write_state(merged, version)
-        self._commit(batch_id, version, ledger, False)
-        # the new model comes from the cache _write_state just seeded: no
-        # state re-read on the per-micro-batch path
-        shift = self._shift(self._model_from(self._state_rows(version)), model)
+        # the new model comes from the rows _commit returns: no state
+        # re-read on the per-micro-batch path
+        new_rows = self._commit(batch_id, version, merged, refit=False)
+        shift = self._shift(self._model_from(new_rows), model)
         return {
             "applied": True,
             "version": version,
@@ -269,11 +239,11 @@ class _AnnStore(VersionedStore):
         sampled yet at the configured ``sample_hex`` rate) is a diagnosed
         no-op, never a crash — the streaming sink must not die mid-batch
         on a small corpus."""
-        ledger = self._ledger_rows()  # ONE ledger job for the whole call
+        ledger = self._ledger_rows()  # ONE ledger read for the whole call
         if self._applied(batch_id, ledger):
             return {"applied": False, "version": self.current_version(ledger)}
         version0 = self.current_version(ledger)
-        cur = self._model_from(self._state_rows(version0))
+        cur = self._model_from(self._state_rows(version0, ledger))
         drift = self._drift(cur, ledger)
         if drift <= drift_threshold:
             return {"applied": False, "refit": False, "drift": round(drift, 9)}
@@ -300,8 +270,7 @@ class _AnnStore(VersionedStore):
             shape,
         )
         version = version0 + 1
-        self._write_state(stats, version)
-        self._commit(batch_id, version, ledger, True)
+        self._commit(batch_id, version, stats, refit=True)
         return {
             "applied": True,
             "refit": True,

@@ -41,11 +41,12 @@ from airflow_dags_spark.functions.probabilistic import (
     bloom_might_contain,
 )
 from airflow_dags_spark.operators.upsert import ParquetTable
-from airflow_dags_spark.sources.tables import table_exists
 
 
-def _bloom_path(table: ParquetTable) -> str:
-    return f"{table.path}.bloom"
+def _bloom_table(table: ParquetTable) -> ParquetTable:
+    """The persisted seen-list ``<path>.bloom``, keyed on word_idx: every
+    rewrite of it is the recovering stage-and-swap."""
+    return ParquetTable(table.spark, f"{table.path}.bloom", "word_idx")
 
 
 def _bloom_keys(table: ParquetTable, df: DataFrame, key: str) -> DataFrame:
@@ -62,9 +63,9 @@ def _bloom_keys(table: ParquetTable, df: DataFrame, key: str) -> DataFrame:
 def _load_or_build_bloom(
     table: ParquetTable, key: str, m_bits: int, k: int
 ) -> DataFrame:
-    path = _bloom_path(table)
-    if table_exists(table.spark, path):
-        return table.spark.read.parquet(path)
+    bloom = _bloom_table(table)
+    if bloom.exists():
+        return bloom.read()
     # backfill: one pass over the existing corpus (only ever paid once)
     if table.exists():
         return bloom_build(_bloom_keys(table, table.read(), key), key, m_bits, k)
@@ -91,9 +92,9 @@ def bloom_screened_insert_if_absent(
     if not table.exists():
         table._atomic_overwrite(clean)
         n = table.read().count()
-        bloom_build(_bloom_keys(table, table.read(), key), key, m_bits, k).write.mode(
-            "overwrite"
-        ).parquet(_bloom_path(table))
+        _bloom_table(table)._atomic_overwrite(
+            bloom_build(_bloom_keys(table, table.read(), key), key, m_bits, k)
+        )
         return {
             "n_batch": n,
             "n_definite_new": n,
@@ -129,12 +130,10 @@ def bloom_screened_insert_if_absent(
     n_inserted = to_insert.count()
     if n_inserted:
         table.append(to_insert.select(*table.read().columns))
-        new_bloom = bloom_merge(
-            bloom, bloom_build(_bloom_keys(table, to_insert, key), key, m_bits, k)
-        )
-        # stage-and-swap via a ParquetTable keyed on word_idx for atomicity
-        ParquetTable(table.spark, _bloom_path(table), "word_idx")._atomic_overwrite(
-            new_bloom
+        _bloom_table(table)._atomic_overwrite(
+            bloom_merge(
+                bloom, bloom_build(_bloom_keys(table, to_insert, key), key, m_bits, k)
+            )
         )
     return {
         "n_batch": n_batch,

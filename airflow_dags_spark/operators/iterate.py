@@ -46,14 +46,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    """Remove a path through the JVM Hadoop FS (works for file:/, s3a:/,
-    hdfs:/ alike — ``shutil`` would only handle local paths)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    fs.delete(hpath, True)
+from airflow_dags_spark.operators.commit import remove
 
 
 class IterationState:
@@ -75,7 +68,7 @@ class IterationState:
 
     def __exit__(self, *exc: object) -> None:
         try:
-            _delete_path(self.spark, self._owned or self.base)
+            remove(self.spark, self._owned or self.base)
         except Py4JError:
             pass  # a leaked state dir is recoverable; the result no longer needs it
 

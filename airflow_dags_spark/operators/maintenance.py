@@ -29,11 +29,12 @@ inside whole-stage codegen.
 from __future__ import annotations
 
 import math
-import uuid
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from airflow_dags_spark.operators import commit
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -109,12 +110,6 @@ def table_diff(
 # Small-file compaction -------------------------------------------------------
 
 
-def _hadoop_fs(spark: SparkSession):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return jvm, jvm.org.apache.hadoop.fs.FileSystem.get(conf)
-
-
 def _data_files(jvm, fs, path: str) -> list:
     """Recursively list data files (skips _SUCCESS/metadata)."""
     out = []
@@ -138,17 +133,18 @@ def compact(
     Skips (no-op) when the table already has fewer files than
     ``min_files_to_compact`` or every file is already at target size —
     compaction must be safe to schedule unconditionally (idempotent, like
-    every reference write: SURVEY.md §5.1). The rewrite is stage-and-swap
-    (same discipline as ``ParquetTable._atomic_overwrite``): readers never
-    observe a partial table.
+    every reference write: SURVEY.md §5.1). The rewrite is the recovering
+    stage-and-swap of ``commit.swap`` (stage ``<path>.compact-*``), run
+    after settling any crashed swap of ``path``: readers never observe a
+    partial table.
 
     At 100 TB the global ``repartition(n)`` here is the *point*, not a
     cost: it is one shuffle that replaces millions of per-file opens on
     every subsequent scan. Returns ``{files_before, files_after,
     bytes, skipped}``.
     """
-    jvm, fs = _hadoop_fs(spark)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    commit.recover(spark, path)
+    jvm, fs = commit.hadoop_fs(spark, path)
     files = _data_files(jvm, fs, path)
     total = sum(f.getLen() for f in files)
     n_target = max(1, math.ceil(total / target_file_bytes))
@@ -160,12 +156,7 @@ def compact(
             "skipped": True,
         }
     df = spark.read.parquet(path).repartition(n_target)
-    stage = f"{path}.compact-{uuid.uuid4().hex[:8]}"
-    backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(stage)
-    fs.rename(hpath(path), hpath(backup))
-    fs.rename(hpath(stage), hpath(path))
-    fs.delete(hpath(backup), True)
+    commit.swap(spark, path, df.write.mode("overwrite").parquet, "compact")
     after = len(_data_files(jvm, fs, path))
     return {
         "files_before": len(files),

@@ -44,6 +44,8 @@ boundary-straddling docs.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -187,10 +189,10 @@ class TokenStreamStore(VersionedStore):
     State is the stream CURSOR (``next_offset``, one row), one version per
     applied batch (:mod:`operators.versioned_store` — replay and crash
     contract, excluded concurrent writers); each batch's doc→[start, end)
-    assignments land in their own ``assignments/<md5(batch_id)[:16]>``
-    directory BEFORE its state version, so a crash before the ledger
-    commit leaves an orphan assignment set that no reader sees and the
-    replay deterministically overwrites (same cursor base → bit-identical
+    assignments land in their own ``assignments/v{n}-<uuid8>``
+    directory BEFORE its ledger entry, which names it, so a crash before
+    the commit leaves an orphan assignment set that no reader sees, and
+    the replay writes a fresh one (same cursor base → bit-identical
     offsets). Batch order defines stream order ACROSS batches; within a
     batch, ascending key — both deterministic, which is what makes the
     whole store oracle-checkable.
@@ -209,32 +211,24 @@ class TokenStreamStore(VersionedStore):
 
     # -- state access -------------------------------------------------------
 
-    def _offset_at(self, version: int) -> int:
+    def _offset_at(self, version: int, _rows: list | None = None) -> int:
         if version < 0:
             return 0
-        return int(self._state_rows(version)[0]["next_offset"])
+        return int(self._state_rows(version, _rows)[0]["next_offset"])
 
     def next_offset(self) -> int:
         """Stream position the next batch starts at (0 for a fresh store)."""
-        return self._offset_at(self.current_version())
+        rows = self._ledger_rows()
+        return self._offset_at(self.current_version(rows), rows)
 
     def assignments(self) -> DataFrame:
         """All committed doc→span assignments:
-        ``(key, start, end, batch_id)``. Reads ledger-committed batch
-        directories only — an orphan from a crashed append is invisible
-        until its replay commits."""
-        paths = [self._assign_dir(r["batch_id"]) for r in self._ledger_rows() or []]
+        ``(key, start, end, batch_id)``. Reads the directories the ledger
+        names only — an orphan from a crashed append is invisible."""
+        paths = [r["assignments"] for r in self._ledger_rows() or []]
         if not paths:
             raise ValueError(f"token stream store at {self.path} is empty")
         return self.spark.read.parquet(*paths)
-
-    def _assign_dir(self, batch_id: str) -> str:
-        import hashlib
-
-        return (
-            f"{self.path}/assignments/"
-            f"{hashlib.md5(batch_id.encode()).hexdigest()[:16]}"
-        )
 
     # -- writes -------------------------------------------------------------
 
@@ -253,7 +247,7 @@ class TokenStreamStore(VersionedStore):
         if self._applied(batch_id, ledger):
             return {"applied": False, "version": self.current_version(ledger)}
         version = self.current_version(ledger) + 1
-        base = self._offset_at(version - 1)
+        base = self._offset_at(version - 1, ledger)
         # at-least-once sources can deliver a doc twice WITHIN one batch;
         # duplicate keys would make the within-bucket cumsum tie-order
         # dependent — nondeterministic offsets, breaking the replay
@@ -271,11 +265,10 @@ class TokenStreamStore(VersionedStore):
             (F.col("end") + F.lit(base)).alias("end"),
             F.lit(batch_id).alias("batch_id"),
         )
-        adir = self._assign_dir(batch_id)
-        offs.write.mode("overwrite").parquet(adir)
+        adir = f"{self.path}/assignments/v{version}-{uuid.uuid4().hex[:8]}"
+        offs.write.mode("errorifexists").parquet(adir)
         written = self.spark.read.parquet(adir)
         row = written.agg(F.max("end").alias("m")).collect()[0]
         nxt = int(row["m"]) if row["m"] is not None else base
-        self._write_state([(nxt,)], version)
-        self._commit(batch_id, version, ledger)
+        self._commit(batch_id, version, [(nxt,)], adir, assignments=adir)
         return {"applied": True, "version": version, "next_offset": nxt}

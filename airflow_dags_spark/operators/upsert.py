@@ -17,10 +17,19 @@ Semantics decisions (documented, tested):
   (matching the reference's seen-set dedup A1); required, not optional —
   nondeterministic survivors don't survive a correctness gate.
 - null source keys: rejected (the reference's keys are NOT NULL PKs).
-- atomicity: new data is staged to ``<path>/.stage-<uuid>``, then swapped in
-  with two renames. Non-ACID window ≈ one rename; a crash mid-swap leaves
-  the stage dir (self-healing on next run). At 100 TB the same API would sit
-  on a table format (Delta/Iceberg MERGE) — the call sites don't change.
+- atomicity: full rewrites go through ``commit.swap``: the new data is
+  staged to ``<path>.stage-<uuid8>``, then swapped in with two renames
+  (live → ``<path>.old-<uuid8>``, stage → live). Recovery rule: every swap,
+  and ``exists()``/``read()`` when ``<path>`` is missing, first settles a
+  crashed swap — a backup beside a live ``<path>`` is deleted, a backup
+  with no live ``<path>`` is renamed back (the old view). A reader thus
+  sees the old table or the new one, and a crash leaves at most an orphan
+  stage for ``vacuum_orphans``. Partition-pruned rewrites (dynamic
+  partition overwrite) inherit Spark's own commit protocol instead: a
+  crash mid-write can leave some touched partitions rewritten and others
+  not; replaying the same call repairs it. At 100 TB the same API would
+  sit on a table format (Delta/Iceberg MERGE) — the call sites don't
+  change.
 
 Scale notes:
 - the join is the whole cost: source⋈target on the key. Small source
@@ -35,8 +44,11 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession, Window
 from pyspark.sql import functions as F
+
+from airflow_dags_spark.operators import commit
 
 
 class ParquetTable:
@@ -59,18 +71,20 @@ class ParquetTable:
 
     # -- filesystem helpers (Hadoop FS so s3a:///hdfs:// paths work too) ----
 
-    def _fs(self):
-        sc = self.spark.sparkContext
-        jvm = sc._jvm
-        conf = sc._jsc.hadoopConfiguration()
-        return jvm, jvm.org.apache.hadoop.fs.Path(self.path).getFileSystem(conf)
-
     def exists(self) -> bool:
-        jvm, fs = self._fs()
-        return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(self.path)))
+        return commit.exists(self.spark, self.path)
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        try:
+            return self.spark.read.parquet(self.path)
+        except AnalysisException:
+            if not commit.recover(self.spark, self.path):
+                raise
+            return self.spark.read.parquet(self.path)
+
+    def _writer(self, df: DataFrame, mode: str) -> DataFrameWriter:
+        writer = df.write.mode(mode)
+        return writer.partitionBy(*self.partition_by) if self.partition_by else writer
 
     # -- key handling -------------------------------------------------------
 
@@ -109,44 +123,28 @@ class ParquetTable:
     # -- atomic commit ------------------------------------------------------
 
     def _atomic_overwrite(self, df: DataFrame) -> None:
-        """Stage → swap. Parquet writes aren't in-place-updatable; reading
-        and rewriting into the live path would corrupt the source of the
-        read, so stage to a sibling dir and rename."""
-        jvm, fs = self._fs()
-        hpath = jvm.org.apache.hadoop.fs.Path
-        stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
-        backup = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(stage)
-        if fs.exists(hpath(self.path)):
-            fs.rename(hpath(self.path), hpath(backup))
-        fs.rename(hpath(stage), hpath(self.path))
-        if fs.exists(hpath(backup)):
-            fs.delete(hpath(backup), True)
+        """Stage → swap (``commit.swap``). Parquet writes aren't
+        in-place-updatable; reading and rewriting into the live path would
+        corrupt the source of the read, so stage to a sibling dir and
+        rename."""
+        commit.swap(self.spark, self.path, self._writer(df, "overwrite").parquet)
 
     # -- write disciplines ---------------------------------------------------
 
     def create_if_not_exists(self, df: DataFrame) -> bool:
         """K1 — idempotent typed create: write only if the path is absent
         (ref: CREATE TABLE IF NOT EXISTS, dags/pull_new_sales_list.py:73-81).
-        Returns True if created."""
+        Returns True if created. Staged and swapped in, so a crashed
+        create leaves no half-written table."""
         if self.exists():
             return False
-        writer = df.write.mode("errorifexists")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
+        self._atomic_overwrite(df)
         return True
 
     def append(self, df: DataFrame) -> None:
         """K2 — bulk append, no conflict handling (initial load only;
         ref: execute_values batches, dags/initial_price_paid_data.py:136-142)."""
-        writer = df.write.mode("append")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
+        self._writer(df, "append").parquet(self.path)
 
     def insert_if_absent(self, src: DataFrame, order_by: list[str]) -> None:
         """K3 — ``ON CONFLICT DO NOTHING``: append only keys absent from the
@@ -225,50 +223,26 @@ class ParquetTable:
         merge, stage the result, then dynamically overwrite just those
         partitions. Untouched partition directories are never read or
         rewritten."""
-        jvm, fs = self._fs()
-        hpath = jvm.org.apache.hadoop.fs.Path
         # the touched-partition set is bounded by construction (the batch's
         # distinct partition values); collect it and filter the target with
         # LITERALS — static partition pruning at planning time (PartitionFilters
         # on the scan), no reliance on runtime dynamic pruning of a semi-join
         touched_rows = clean.select(*self.partition_by).distinct().collect()
         tgt = self.read().where(self._partition_pred(touched_rows))
-        merged = self._merged_frame(tgt, clean, update_cols)
-        # stage first: the merged plan reads the very partitions the dynamic
-        # overwrite replaces, and Spark (correctly) refuses read-write cycles
-        stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(stage)
-        try:
-            (
-                self.spark.read.parquet(stage)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self.partition_by)
-                .parquet(self.path)
-            )
-        finally:
-            fs.delete(hpath(stage), True)
+        self._overwrite_partitions(self._merged_frame(tgt, clean, update_cols))
 
     def vacuum_orphans(self) -> list[str]:
-        """Remove leftover ``.stage-*`` / ``.old-*`` sibling dirs from
-        crashed mid-swap writes (the documented self-healing path of
-        ``_atomic_overwrite``). Safe anytime: live data never lives in a
-        stage dir — a crash before the swap leaves the target untouched,
-        a crash after it leaves only the disposable backup."""
-        jvm, fs = self._fs()
-        hpath = jvm.org.apache.hadoop.fs.Path
-        me = hpath(self.path)
-        parent = me.getParent()
-        if parent is None or not fs.exists(parent):
-            return []
-        name = me.getName()
-        removed: list[str] = []
-        for st in fs.listStatus(parent):
-            n = st.getPath().getName()
-            if n.startswith(f"{name}.stage-") or n.startswith(f"{name}.old-"):
-                fs.delete(st.getPath(), True)
-                removed.append(n)
-        return removed
+        """Settle what crashed writes left beside the table: first the
+        ``commit.recover`` rule for ``.old-*`` backups (deleted beside a
+        live table, renamed back when the table is missing — then it is
+        the only copy), then every stage dir a swap writes (``.stage-*``,
+        ``.compact-*``, ``.zorder-*``), which no reader ever sees. Returns
+        the names removed or restored."""
+        settled = commit.recover(self.spark, self.path)
+        stages = commit.siblings(self.spark, self.path, commit.STAGE_TAGS)
+        for st in stages:
+            commit.remove(self.spark, st)
+        return settled + [st.rsplit("/", 1)[-1] for st in stages]
 
     def delete_where(self, predicate: Column) -> None:
         """Keyed DELETE by predicate — the missing verb of the reference's
@@ -295,7 +269,7 @@ class ParquetTable:
         if not touched:
             return
         remaining = self.read().where(self._partition_pred(touched)).where(keep)
-        self._rewrite_touched_partitions(remaining, touched)
+        self._overwrite_partitions(remaining, touched)
 
     def delete_keys(self, keys_df: DataFrame) -> None:
         """Keyed DELETE by key set (anti-join form): remove every row whose
@@ -318,7 +292,7 @@ class ParquetTable:
             return
         scoped = self.read().where(self._partition_pred(touched))
         remaining = scoped.join(keys, self._join_cond(scoped, keys), "left_anti")
-        self._rewrite_touched_partitions(remaining, touched)
+        self._overwrite_partitions(remaining, touched)
 
     # -- deletion vectors (logical delete) ----------------------------------
 
@@ -403,39 +377,37 @@ class ParquetTable:
         n = dv.count()
         if n:
             self.delete_keys(dv)
-        jvm, fs = self._fs()
-        fs.delete(jvm.org.apache.hadoop.fs.Path(self._dv_path()), True)
+        commit.remove(self.spark, self._dv_path())
         return n
 
-    def _rewrite_touched_partitions(self, remaining: DataFrame, touched) -> None:
-        """Stage → dynamic overwrite of partitions that still have rows;
-        partitions the operation left EMPTY get their directories removed
-        (dynamic overwrite alone cannot express an empty partition)."""
-        jvm, fs = self._fs()
-        hpath = jvm.org.apache.hadoop.fs.Path
+    def _overwrite_partitions(self, df: DataFrame, touched=()) -> None:
+        """Stage → dynamic overwrite of the partitions ``df`` holds → drop
+        the stage. Staging first: ``df`` reads the very partitions the
+        overwrite replaces, and Spark (correctly) refuses read-write
+        cycles. Partitions in ``touched`` that ``df`` left EMPTY get their
+        directories removed (dynamic overwrite alone cannot express an
+        empty partition)."""
         stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
-        remaining.write.mode("overwrite").parquet(stage)
-        staged = self.spark.read.parquet(stage)
         try:
-            (
-                staged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self.partition_by)
-                .parquet(self.path)
-            )
-            still = {
-                tuple(r[p] for p in self.partition_by)
-                for r in staged.select(*self.partition_by).distinct().collect()
-            }
-            for r in touched:
-                vals = tuple(r[p] for p in self.partition_by)
-                if vals not in still:
-                    sub = "/".join(
-                        f"{p}={v}" for p, v in zip(self.partition_by, vals)
-                    )
-                    fs.delete(hpath(f"{self.path}/{sub}"), True)
+            df.write.mode("overwrite").parquet(stage)
+            staged = self.spark.read.parquet(stage)
+            self._writer(staged, "overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).parquet(self.path)
+            if touched:
+                still = {
+                    tuple(r)
+                    for r in staged.select(*self.partition_by).distinct().collect()
+                }
+                for r in touched:
+                    vals = tuple(r[p] for p in self.partition_by)
+                    if vals not in still:
+                        sub = "/".join(
+                            f"{p}={v}" for p, v in zip(self.partition_by, vals)
+                        )
+                        commit.remove(self.spark, f"{self.path}/{sub}")
         finally:
-            fs.delete(hpath(stage), True)
+            commit.remove(self.spark, stage)
 
     def _partition_pred(self, touched_rows) -> Column:
         """Literal partition predicate → static pruning at planning time."""

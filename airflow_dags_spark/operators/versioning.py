@@ -8,25 +8,35 @@ Spark-first:
 
 Layout::
 
-    <path>/_manifest.json      {"current": N, "versions": [...]}
-    <path>/v=000001/           immutable snapshot data (parquet)
-    <path>/v=000002/
+    <path>/_log/00000000000000000000.json   {"current": N, "versions": [...]}
+    <path>/_log/00000000000000000001.json   the next manifest
+    <path>/v=000001-<uuid8>/                immutable snapshot data (parquet)
+    <path>/v=000002-<uuid8>/
     ...
 
-- ``write(df, op)``      — stage the new snapshot dir, then commit by
-  atomically replacing the manifest (tmp-write + rename). Readers resolve
-  the manifest first, so they see the old version until the rename lands —
-  snapshot isolation with a single-file commit point, no locks.
+The manifest is the highest entry of a ``commit.CommitLog``; every write,
+``rollback`` and ``vacuum`` puts the next entry.
+
+- ``write(df, op)``      — stage the new snapshot under a dir unique to
+  the attempt, then commit by putting the next manifest entry. Readers
+  resolve the manifest first, so they see the old version until the entry
+  lands — snapshot isolation with a single-file commit point, no locks.
 - ``read(version=None)`` — current or any retained historical version
   (time travel). A plain parquet scan: pushdown/pruning intact.
-- ``rollback(to)``       — O(1): rewrite the manifest pointer. No data
+- ``rollback(to)``       — O(1): a new entry pointing back. No data
   copied, no rewrite — the disaster-recovery path after a bad merge.
-- ``vacuum(keep_last)``  — delete snapshot dirs no longer reachable
-  (always keeps the current pointer), bounding storage.
+- ``vacuum(keep_last)``  — a new entry without the dropped versions, then
+  deletes the snapshot dirs no retained version reads (always keeps the
+  current pointer), bounding storage.
 
-Concurrency contract: single-writer (the reference's Airflow DAGs are
-serialized per-table by scheduling, SURVEY §3); multi-writer would need a
-compare-and-swap on the manifest — noted, out of scope.
+Concurrency contract: one writer per table is the contract (the
+reference's Airflow DAGs are serialized per-table by scheduling, SURVEY
+§3). A second writer is detected at its commit: two writers that read the
+same head both put entry ``n + 1``; the second put raises
+``FileExistsError``, the first writer's version stays as committed, and
+the loser deletes its staged snapshot. That is exact on HDFS; on the
+local filesystem it catches a sequential conflict but not a true race
+(see ``CommitLog``).
 
 At 100 TB, full-snapshot versions are only sane for dimensions; for fact
 tables the same manifest trick records per-version FILE LISTS (append =
@@ -38,114 +48,82 @@ rewriting prior data.
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from airflow_dags_spark.operators.commit import CommitLog, remove
 
 
 class VersionedParquetTable:
     """Manifest-pointer versioned table (single writer)."""
 
-    MANIFEST = "_manifest.json"
-
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
+        self._log = CommitLog(
+            spark, f"{self.path}/_log", supersedes=f"{self.path}/_manifest.json"
+        )
 
-    # -- filesystem plumbing (Hadoop FS → works on s3a:// and hdfs:// too) --
-
-    def _fs(self):
-        sc = self.spark.sparkContext
-        jvm = sc._jvm
-        conf = sc._jsc.hadoopConfiguration()
-        return jvm, jvm.org.apache.hadoop.fs.Path(self.path).getFileSystem(conf)
-
-    def _read_manifest(self) -> dict:
-        jvm, fs = self._fs()
-        p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{self.MANIFEST}")
-        if not fs.exists(p):
-            return {"current": 0, "versions": []}
-        stream = fs.open(p)
-        try:
-            # commons-io ships with Spark; py4j byte[] copy-back semantics
-            # make manual buffered reads unreliable, this is the plain path
-            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            return json.loads(text)
-        finally:
-            stream.close()
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        """Atomic commit: write a tmp manifest, rename over the live one.
-        The rename IS the transaction — a reader sees either the old or the
-        new manifest, never a torn write."""
-        jvm, fs = self._fs()
-        hpath = jvm.org.apache.hadoop.fs.Path
-        tmp = hpath(f"{self.path}/.{self.MANIFEST}.{uuid.uuid4().hex[:8]}")
-        out = fs.create(tmp, True)
-        try:
-            out.write(json.dumps(manifest, indent=1).encode("utf-8"))
-        finally:
-            out.close()
-        live = hpath(f"{self.path}/{self.MANIFEST}")
-        if fs.exists(live):
-            fs.delete(live, False)
-        fs.rename(tmp, live)
-
-    def _vdir(self, n: int) -> str:
-        return f"{self.path}/v={n:06d}"
+    def _head(self) -> tuple[int, dict]:
+        """``(n, manifest)`` of the log head; ``(-1, empty)`` before the
+        first commit."""
+        return self._log.head() or (-1, {"current": 0, "versions": []})
 
     # -- public API ---------------------------------------------------------
 
     def current_version(self) -> int:
-        return int(self._read_manifest()["current"])
+        return int(self._head()[1]["current"])
 
     @staticmethod
     def _next_version(m: dict) -> int:
         """Next unused version number. Allocated off the MAX ever committed,
         not ``current + 1`` — after ``rollback(to)`` the pointer moves back
-        but earlier snapshot dirs still exist, and ``current + 1`` would
-        collide with one of them (errorifexists raise / duplicate manifest
-        entry). Rollback-then-repair must be able to commit."""
+        but earlier versions still exist, and ``current + 1`` would collide
+        with one of them. Rollback-then-repair must be able to commit."""
         if not m["versions"]:
             return 1
         return max(int(v["version"]) for v in m["versions"]) + 1
 
     def history(self) -> list[dict]:
-        return list(self._read_manifest()["versions"])
+        return list(self._head()[1]["versions"])
+
+    def _write_version(self, df: DataFrame, op: str, incremental: bool) -> int:
+        """Stage ``df`` as the next version's own dir, then put the
+        manifest entry listing it (after the current version's paths when
+        ``incremental``). The staged dir is deleted when the entry does
+        not land."""
+        n, m = self._head()
+        v = self._next_version(m)
+        prev = [
+            p
+            for x in m["versions"]
+            if incremental and x["version"] == m["current"]
+            for p in x["paths"]
+        ]
+        vdir = f"{self.path}/v={v:06d}-{uuid.uuid4().hex[:8]}"
+        try:
+            df.write.mode("errorifexists").parquet(vdir)
+            entry = {"version": v, "op": op, "paths": prev + [vdir]}
+            self._log.commit(n + 1, {"current": v, "versions": m["versions"] + [entry]})
+        except BaseException:
+            remove(self.spark, vdir)
+            raise
+        return v
 
     def write(self, df: DataFrame, op: str = "overwrite") -> int:
         """Commit ``df`` as the next full snapshot; returns its version."""
-        m = self._read_manifest()
-        n = self._next_version(m)
-        df.write.mode("errorifexists").parquet(self._vdir(n))
-        m["versions"].append({"version": n, "op": op, "paths": [self._vdir(n)]})
-        m["current"] = n
-        self._commit_manifest(m)
-        return n
+        return self._write_version(df, op, incremental=False)
 
     def write_incremental(self, df: DataFrame, op: str = "append") -> int:
         """Commit ``df`` as NEW FILES joining the current file list — the
         fact-table path: prior snapshots' data is never rewritten; the new
         version's path list = previous list + the new directory."""
-        m = self._read_manifest()
-        cur = int(m["current"])
-        prev_paths: list[str] = []
-        for v in m["versions"]:
-            if v["version"] == cur:
-                prev_paths = list(v["paths"])
-        n = self._next_version(m)
-        df.write.mode("errorifexists").parquet(self._vdir(n))
-        m["versions"].append(
-            {"version": n, "op": op, "paths": prev_paths + [self._vdir(n)]}
-        )
-        m["current"] = n
-        self._commit_manifest(m)
-        return n
+        return self._write_version(df, op, incremental=True)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Scan the current (default) or a historical version."""
-        m = self._read_manifest()
+        m = self._head()[1]
         want = int(m["current"]) if version is None else int(version)
         for v in m["versions"]:
             if v["version"] == want:
@@ -181,40 +159,27 @@ class VersionedParquetTable:
 
     def rollback(self, to: int) -> None:
         """Point the table back at a prior version — O(1), no data moved."""
-        m = self._read_manifest()
+        n, m = self._head()
         if to not in [v["version"] for v in m["versions"]]:
             raise ValueError(f"cannot roll back to missing version {to}")
-        m["current"] = to
-        self._commit_manifest(m)
+        self._log.commit(n + 1, {**m, "current": to})
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop snapshot dirs beyond the ``keep_last`` most recent versions
-        (the current version is always kept). Returns removed versions.
+        """Drop versions beyond the ``keep_last`` most recent (the current
+        version is always kept). Returns removed versions.
 
-        A version's DIRECTORY is removed only when no retained version's
-        file list references it (incremental versions share directories)."""
-        jvm, fs = self._fs()
-        hpath = jvm.org.apache.hadoop.fs.Path
-        m = self._read_manifest()
-        cur = int(m["current"])
+        The new manifest is committed FIRST; a version's DIRECTORY is then
+        removed only when no retained version's file list references it
+        (incremental versions share directories), so a crash in between
+        leaves only unreferenced dirs."""
+        n, m = self._head()
         order = sorted(v["version"] for v in m["versions"])
-        keep = set(order[-keep_last:]) | {cur}
-        kept_paths = {
-            p
-            for v in m["versions"]
-            if v["version"] in keep
-            for p in v["paths"]
-        }
-        removed = []
-        new_versions = []
+        keep = set(order[-keep_last:]) | {int(m["current"])}
+        kept = [v for v in m["versions"] if v["version"] in keep]
+        self._log.commit(n + 1, {**m, "versions": kept})
+        kept_paths = {p for v in kept for p in v["paths"]}
         for v in m["versions"]:
-            if v["version"] in keep:
-                new_versions.append(v)
-                continue
-            removed.append(v["version"])
             for p in v["paths"]:
-                if p not in kept_paths:
-                    fs.delete(hpath(p), True)
-        m["versions"] = new_versions
-        self._commit_manifest(m)
-        return removed
+                if v["version"] not in keep and p not in kept_paths:
+                    remove(self.spark, p)
+        return [v["version"] for v in m["versions"] if v["version"] not in keep]

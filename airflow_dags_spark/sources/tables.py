@@ -47,10 +47,10 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     is lakehouse-path-native, so probe the filesystem through the JVM's
     Hadoop FS (works for s3a:// and hdfs:// paths too, unlike os.path).
     """
-    sc = spark.sparkContext
-    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    return bool(fs.exists(hadoop_path))
+    from airflow_dags_spark.operators.commit import hadoop_fs
+
+    jvm, fs = hadoop_fs(spark, path)
+    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
 def parquet_row_count(spark: SparkSession, path: str) -> int:
@@ -62,13 +62,12 @@ def parquet_row_count(spark: SparkSession, path: str) -> int:
     the count is needed BEFORE any job runs. Works on any Hadoop FS path
     (file://, s3a://, hdfs://). Directories are walked recursively;
     non-parquet sidecars (_SUCCESS, manifests) are skipped."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-    root = jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = root.getFileSystem(conf)
+    from airflow_dags_spark.operators.commit import hadoop_fs
+
+    jvm, fs = hadoop_fs(spark, path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # type: ignore[union-attr]
     total = 0
-    it = fs.listFiles(root, True)
+    it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
     while it.hasNext():
         status = it.next()
         name = status.getPath().getName()

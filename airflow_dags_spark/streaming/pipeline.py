@@ -760,15 +760,7 @@ def _ledger_namespace(checkpoint_dir: str) -> str:
     ``os.path.abspath``; ``file:`` URIs are reduced to their
     canonicalized local path; other URI schemes (s3a://, hdfs://) have no
     local canonical form and hash as spelled minus trailing slashes —
-    spell them consistently across restarts.
-
-    Cross-release note: the namespacing (and this canonicalization) are
-    on-disk format contracts — a replayed batch is recognized only under
-    the SAME key format. Ledgers written by the pre-namespace release
-    (bare ``b<N>`` keys) are covered for one release by the legacy check
-    in ``_legacy_applied``; a namespaced ledger written from a different
-    path SPELLING of the same dir before this canonicalization will
-    re-fold its one in-flight batch (drain the stream before upgrading)."""
+    spell them consistently across restarts."""
     import hashlib
     import os
 
@@ -784,37 +776,6 @@ def _ledger_namespace(checkpoint_dir: str) -> str:
     return hashlib.md5(p.encode("utf-8")).hexdigest()[:12]
 
 
-def _legacy_applied(store, batch_id: int, memo: dict | None = None) -> bool:
-    """One-release migration path (ADVICE r9): a ledger written by the
-    pre-namespace release recorded bare ``b<N>`` keys. When the current
-    micro-batch's bare key exists there, the batch is an in-flight replay
-    from before the upgrade — skip it instead of re-folding (the
-    namespaced check can't see it).
-
-    Scoped TIGHTLY to the sink-written format ``b<digits>`` (a regex, not
-    merely colon-free): manual-API ledger keys like ``__init__`` or other
-    seeding conventions must never make the sink skip a live micro-batch.
-    The residual collision — a store seeded MANUALLY with keys that
-    exactly match ``b<digits>`` and then attached to a sink — is the
-    documented reason the sinks expose ``legacy_ledger_check=False``.
-
-    ``memo`` (per-sink dict) caches the has-legacy-rows determination:
-    new keys are always namespaced, so once a ledger shows no legacy rows
-    it never will — the streaming path then pays zero extra jobs per
-    batch instead of a ledger read forever."""
-    if memo is not None and memo.get("no_legacy"):
-        return False
-    if not store.exists():
-        return False
-    led = store._ledger.read()
-    legacy = led.where(F.col("batch_id").rlike("^b[0-9]+$"))
-    if legacy.limit(1).count() == 0:
-        if memo is not None:
-            memo["no_legacy"] = True
-        return False
-    return legacy.where(F.col("batch_id") == f"b{batch_id}").count() > 0
-
-
 def _ann_store_sink(
     store_cls,
     shape: tuple,
@@ -828,7 +789,6 @@ def _ann_store_sink(
     seed: int,
     sample_hex: str,
     refit_drift_threshold: float | None,
-    legacy_ledger_check: bool,
     available_now: bool,
 ) -> StreamingQuery:
     """The shared body of :func:`ivf_index_sink` and
@@ -836,7 +796,6 @@ def _ann_store_sink(
     ``shape`` (its ``init_from`` model-shape arguments) or fold the batch
     in, then optionally refit."""
     ledger_ns = _ledger_namespace(checkpoint_dir)
-    legacy_memo: dict = {} if legacy_ledger_check else {"no_legacy": True}
 
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
         # null vectors carry no assignment signal, and an all-null FIRST
@@ -848,8 +807,6 @@ def _ann_store_sink(
         store = store_cls(
             batch.sparkSession, store_path, key_col=key_col, vec_col=vec_col
         )
-        if _legacy_applied(store, batch_id, legacy_memo):
-            return  # committed pre-upgrade under the bare-key format
         bid = f"{ledger_ns}:b{batch_id}"
         if not store.exists():
             store.init_from(
@@ -890,7 +847,6 @@ def ivf_index_sink(
     seed: int = 42,
     sample_hex: str = "4",
     refit_drift_threshold: float | None = None,
-    legacy_ledger_check: bool = True,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming maintenance of the persistent IVF index — the similarity
@@ -907,19 +863,20 @@ def ivf_index_sink(
     reservoir as a ledger-flagged refit version.
 
     Exactly-once per micro-batch WITHOUT relying on the checkpoint alone:
-    the store's batch ledger (K3 insert-if-absent keyed by batch id) makes
-    a replayed committed batch a no-op, and a crash between the state
-    write and the ledger append leaves an orphan version the replay
-    deterministically overwrites. Ledger keys are NAMESPACED by the
-    checkpoint location (``<md5(checkpoint_dir)[:12]>:b<batch_id>``):
-    micro-batch ids restart at 0 with every fresh checkpoint, so a bare
-    ``b{batch_id}`` key would make a NEW stream (or a second stream)
-    against an existing store collide with the old run's ledger rows and
-    silently drop whole batches as "replays" — the namespace keeps replay
-    detection scoped to the one checkpoint whose batch ids are actually
-    comparable. (The screened-sink caveat still applies: a FRESH
-    checkpoint that re-BATCHES history differently is a reprocess, not a
-    replay — its batches apply as new folds.)
+    the store's batch ledger (one put-if-absent entry per version, keyed
+    by batch id) makes a replayed committed batch a no-op, and a crash
+    between the state write and the ledger commit leaves an orphan state
+    dir no reader sees, which the replay supersedes. Ledger keys are
+    NAMESPACED by the checkpoint location
+    (``<md5(checkpoint_dir)[:12]>:b<batch_id>``): micro-batch ids restart
+    at 0 with every fresh checkpoint, so a bare ``b{batch_id}`` key would
+    make a NEW stream (or a second stream) against an existing store
+    collide with the old run's ledger rows and silently drop whole batches
+    as "replays" — the namespace keeps replay detection scoped to the one
+    checkpoint whose batch ids are actually comparable. (The screened-sink
+    caveat still applies: a FRESH checkpoint that re-BATCHES history
+    differently is a reprocess, not a replay — its batches apply as new
+    folds.)
 
     100 TB shape: per-batch cost is one scan of the batch plus k×dim
     partial sums to the driver; state is k×dim rows per version — index
@@ -930,7 +887,7 @@ def ivf_index_sink(
         IvfIndexStore, (n_cells,), vec_stream, store_path, checkpoint_dir,
         key_col=key_col, vec_col=vec_col, fit_sample=fit_sample, seed=seed,
         sample_hex=sample_hex, refit_drift_threshold=refit_drift_threshold,
-        legacy_ledger_check=legacy_ledger_check, available_now=available_now,
+        available_now=available_now,
     )
 
 
@@ -947,7 +904,6 @@ def pq_codebook_sink(
     seed: int = 42,
     sample_hex: str = "4",
     refit_drift_threshold: float | None = None,
-    legacy_ledger_check: bool = True,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming maintenance of the persistent PQ codebooks — the
@@ -975,7 +931,7 @@ def pq_codebook_sink(
         PqCodebookStore, (m, n_codes), vec_stream, store_path, checkpoint_dir,
         key_col=key_col, vec_col=vec_col, fit_sample=fit_sample, seed=seed,
         sample_hex=sample_hex, refit_drift_threshold=refit_drift_threshold,
-        legacy_ledger_check=legacy_ledger_check, available_now=available_now,
+        available_now=available_now,
     )
 
 
@@ -1002,9 +958,9 @@ def pack_stream_sink(
     what keeps the store oracle-checkable end-to-end. Same exactly-once
     discipline as the other store sinks: ledger keys are namespaced per
     checkpoint (micro-batch ids restart at 0 with a fresh checkpoint),
-    replayed batches no-op on the K3 ledger, and a crash between the
-    assignment/state writes and the ledger append is healed by the
-    replay's deterministic overwrite (same cursor base → identical
+    replayed batches no-op on the ledger, and a crash between the
+    assignment/state writes and the ledger commit is healed by the
+    replay, which writes fresh dirs (same cursor base → identical
     offsets)."""
     from airflow_dags_spark.functions.text import token_count
     from airflow_dags_spark.operators.packing import TokenStreamStore

@@ -237,8 +237,8 @@ def test_centroids_empty_cell_is_zero_vector_not_null(spark, emb, tmp_path):
     (vec_sum / 0.0) while the assignment path returned zeros."""
     store = IvfIndexStore(spark, str(tmp_path / "ivf"))
     store.init_from(emb.where(F.col("vec_id") < 40), n_cells=4, fit_sample=40)
-    # force an empty cell deterministically: rewrite the state with cell 3
-    # zeroed out (the _write_state seam the crash-healing test also uses)
+    # force an empty cell deterministically: commit a next version with
+    # cell 3 zeroed out (the store's own _commit seam)
     rows = sorted(
         ((r["cell"], list(r["vec_sum"]), int(r["n_members"]))
          for r in store.state().collect()),
@@ -247,7 +247,7 @@ def test_centroids_empty_cell_is_zero_vector_not_null(spark, emb, tmp_path):
     forced = [
         (c, [0.0] * dim, 0) if c == 3 else (c, s, n) for c, s, n in rows
     ]
-    store._write_state(forced, store.current_version())
+    store._commit("forced", store.current_version() + 1, forced, refit=False)
 
     frame = {r["cell"]: list(r["centroid"]) for r in store.centroids().collect()}
     assert frame[3] == [0.0] * dim  # zero vector, no NULL components
@@ -354,8 +354,8 @@ def test_pq_empty_code_center_is_zero_vector(spark, emb, tmp_path):
 
     store = PqCodebookStore(spark, str(tmp_path / "pq"))
     store.init_from(emb.where(F.col("vec_id") < 30), m=4, n_codes=16, fit_sample=30)
-    # force an empty code deterministically (the _write_state seam the
-    # orphan-heal tests also use): zero out (subspace 0, code 0)
+    # force an empty code deterministically (the store's own _commit
+    # seam): commit a next version with (subspace 0, code 0) zeroed out
     sub = len(store.state().collect()[0]["vec_sum"])
     forced = [
         (r["subspace"], r["code"], [0.0] * sub, 0)
@@ -363,7 +363,7 @@ def test_pq_empty_code_center_is_zero_vector(spark, emb, tmp_path):
         else (r["subspace"], r["code"], list(r["vec_sum"]), int(r["n_members"]))
         for r in store.state().collect()
     ]
-    store._write_state(forced, store.current_version())
+    store._commit("forced", store.current_version() + 1, forced, refit=False)
     books = store.codebooks()
     np.testing.assert_array_equal(books[0, 0], 0.0)
     # non-empty codes untouched
@@ -510,49 +510,6 @@ def test_ledger_namespace_canonicalizes_path_spelling():
     assert _ledger_namespace("s3a://bkt/ck") != ns
 
 
-def test_legacy_bare_ledger_keys_recognized_as_replays(spark, emb, tmp_path):
-    """ADVICE r9 (low) migration path: a ledger written by the
-    pre-namespace release holds bare b<N> keys; the in-flight micro-batch
-    committed under b0 must be SKIPPED by the upgraded sink (not
-    re-folded), while the next batch id still applies."""
-    from airflow_dags_spark.streaming.pipeline import ivf_index_sink
-
-    store_path = str(tmp_path / "ivf")
-    store = IvfIndexStore(spark, store_path)
-    # legacy-format commit of micro-batch 0 (pre-upgrade release)
-    store.init_from(
-        emb.where(F.col("vec_id") < 60), n_cells=4, fit_sample=60,
-        batch_id="b0",
-    )
-    assert sum(r["n_members"] for r in store.state().collect()) == 60
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    emb.where(F.col("vec_id") < 60).write.parquet(str(landing / "b1"))
-
-    def run():
-        q = ivf_index_sink(
-            spark.readStream.schema(
-                "vec_id long, embedding array<float>, label int"
-            ).parquet(str(landing / "*")),
-            store_path,
-            str(tmp_path / "ck"),
-            n_cells=4,
-            fit_sample=60,
-        )
-        q.awaitTermination(120)
-
-    # micro-batch 0 of the upgraded stream: bare b0 exists -> replay, skip
-    run()
-    assert sum(r["n_members"] for r in store.state().collect()) == 60
-    # micro-batch 1: bare b1 absent -> applies under the namespaced key
-    emb.where((F.col("vec_id") >= 60) & (F.col("vec_id") < 100)).write.parquet(
-        str(landing / "b2")
-    )
-    run()
-    assert sum(r["n_members"] for r in store.state().collect()) == 100
-
-
 # --- store-backed ANN serving (VERDICT r9 #1): the maintained artifacts -------
 # feed the query path; no per-call re-fit, no corpus re-sample
 
@@ -692,30 +649,6 @@ def test_ivf_maybe_refit_empty_reservoir_is_diagnosed_noop(spark, emb, tmp_path)
     assert not out["applied"] and out.get("reason") == "empty_reservoir"
     assert out["drift"] > 0.0
     assert store.last_fit_version() == 0  # nothing trained
-
-
-def test_ivf_legacy_ledger_schema_migrates_on_commit(spark, emb, tmp_path):
-    """A pre-drift-policy ledger (no refit column) reads
-    last_fit_version()==0 and is migrated in place by the first commit:
-    version 0 becomes the flagged fit, new rows carry the flag."""
-    store = IvfIndexStore(spark, str(tmp_path / "ivf"))
-    store.init_from(emb.where(F.col("vec_id") < 40), n_cells=4, fit_sample=40)
-    # simulate the r9 on-disk format: strip the refit column
-    legacy = store._ledger.read().select("batch_id", "version").collect()
-    store._ledger._atomic_overwrite(
-        spark.createDataFrame(legacy, "batch_id string, version int")
-    )
-    assert "refit" not in store._ledger.read().columns
-    assert store.last_fit_version() == 0  # the init was its one fit
-    store.add_batch(
-        emb.where((F.col("vec_id") >= 40) & (F.col("vec_id") < 80)), "b1"
-    )
-    led = {r["batch_id"]: r for r in store._ledger.read().collect()}
-    assert led["__init__"]["refit"] is True
-    assert led["b1"]["refit"] is False
-    assert store.last_fit_version() == 0
-    out = store.maybe_refit("refit-1", drift_threshold=0.0)
-    assert out["applied"] and store.last_fit_version() == out["version"]
 
 
 def test_ivf_index_sink_drift_triggered_refit(spark, emb, tmp_path):

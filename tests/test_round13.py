@@ -403,10 +403,10 @@ def test_token_stream_store_duplicate_keys_deterministic(spark, tmp_path):
     assert got == [(1, 0, 5), (2, 5, 8)]
 
 
-def test_sink_legacy_check_ignores_non_bN_manual_keys(spark, tmp_path):
-    """A store seeded through the MANUAL API with non-b<N> ledger keys
-    ('__init__', 'incr-1') must not make the sink skip live micro-batches
-    — the legacy check is scoped to the sink-written b<digits> shape."""
+def test_sink_folds_every_batch_into_manually_seeded_store(spark, tmp_path):
+    """A store seeded through the MANUAL API ('__init__', 'incr-1' ledger
+    keys) and then attached to a sink folds every live micro-batch: the
+    sink's namespaced keys never collide with manual ones."""
     import numpy as np
 
     from airflow_dags_spark.operators.ann_store import IvfIndexStore
@@ -426,8 +426,7 @@ def test_sink_legacy_check_ignores_non_bN_manual_keys(spark, tmp_path):
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    # two files -> two micro-batches (ids 0 and 1); batch 1 is the one a
-    # colon-free-scoped check would have skipped when any manual key exists
+    # two files -> two micro-batches (ids 0 and 1)
     vecs.where((F.col("vec_id") >= 40) & (F.col("vec_id") < 60)).write.parquet(
         str(landing / "f1")
     )

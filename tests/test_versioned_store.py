@@ -1,8 +1,8 @@
 """The versioned-store protocol (operators/versioned_store.py) driven
 through every store built on it: a crash at the commit point — after the
-state write, before the ledger row — leaves the committed view unchanged,
-and the replay heals to exactly what a clean run commits. Plus the
-store-equivalence oracles, which must read the persisted state back."""
+state write, before the ledger entry — leaves the committed view
+unchanged, and the replay heals to exactly what a clean run commits. Plus
+the store-equivalence oracles, which must read the persisted state back."""
 
 from __future__ import annotations
 
@@ -12,8 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from airflow_dags_spark.operators.ann_store import IvfIndexStore, PqCodebookStore
+from airflow_dags_spark.operators.commit import CommitLog
 from airflow_dags_spark.operators.packing import TokenStreamStore
-from airflow_dags_spark.operators.versioned_store import VersionedStore
 
 
 class _Crash(RuntimeError):
@@ -83,8 +83,9 @@ CASES = {
 @pytest.mark.parametrize("kind", list(CASES))
 def test_crash_at_commit_then_replay(spark, sf_dir, tmp_path, monkeypatch, kind):
     """For the init (first) commit and a later one: raise at the shared
-    commit point, check the committed view and the orphan, replay, and
-    compare with a clean run; then re-deliver the committed batch."""
+    commit point, check the committed view and that the failed attempt
+    removed its staged state, replay, and compare with a clean run; then
+    re-deliver the committed batch."""
     cls, make_steps, view, batch_ids, expect = CASES[kind]
     steps = make_steps(spark, sf_dir)
 
@@ -98,33 +99,34 @@ def test_crash_at_commit_then_replay(spark, sf_dir, tmp_path, monkeypatch, kind)
 
     path = str(tmp_path / "crash")
     store = cls(spark, path)
-    real_commit = VersionedStore._commit
+    real_commit = CommitLog.commit
 
     def crash(self, *a, **k):
-        raise _Crash("crash before the ledger row")
+        raise _Crash("crash before the ledger entry")
+
+    def state_dirs():
+        return len(os.listdir(os.path.join(path, "state")))
 
     for i, step in enumerate(steps):
-        monkeypatch.setattr(VersionedStore, "_commit", crash)
+        monkeypatch.setattr(CommitLog, "commit", crash)
         with pytest.raises(_Crash):
             step(store)
-        monkeypatch.setattr(VersionedStore, "_commit", real_commit)
-        # the orphan version is on disk, but no reader sees it
-        orphan = sorted(tuple(r) for r in store._state_at(i).collect())
+        monkeypatch.setattr(CommitLog, "commit", real_commit)
+        # the failed attempt deleted its staged state; no reader sees it
+        assert state_dirs() == i
         assert view(cls(spark, path)) == clean_views[i]
 
         out = step(store)  # the replay
         assert out == clean_outs[i]
         assert out["applied"] and out["version"] == i
-        healed = sorted(tuple(r) for r in store._state_at(i).collect())
-        assert healed == orphan  # deterministic overwrite, same bytes
         assert view(cls(spark, path)) == clean_views[i + 1]
 
         again = step(store)  # at-least-once re-delivery of a committed batch
         assert not again["applied"] and again["version"] == i
         assert view(cls(spark, path)) == clean_views[i + 1]
+        assert state_dirs() == i + 1
 
-    ledger = [r["batch_id"] for r in store._ledger.read().collect()]
-    assert sorted(ledger) == sorted(batch_ids)
+    assert store.current_version() == len(batch_ids) - 1
 
 
 @pytest.mark.parametrize(
@@ -143,7 +145,7 @@ def test_store_equivalence_oracle_reads_persisted_state(
 
     def add_then_corrupt(self, *a, **k):
         out = add_batch(self, *a, **k)
-        path = f"{self.path}/state/v{out['version']}"
+        path = os.path.dirname(self.state().inputFiles()[0])
         persisted = spark.read.parquet(path)
         bad = [
             tuple(r[:-2]) + (r["vec_sum"][::-1], r["n_members"])
@@ -159,3 +161,18 @@ def test_store_equivalence_oracle_reads_persisted_state(
     got = getattr(round13, query)(spark, sf001).collect()
     assert len(got) == 8
     assert not all(r["matches"] for r in got)
+
+
+@pytest.mark.parametrize("kind", list(CASES))
+def test_old_parquet_ledger_raises_naming_the_path(spark, tmp_path, kind):
+    """A store written before the commit log (a parquet ``ledger/``) is
+    not read as an empty store: reads and writes raise, naming the path."""
+    cls = CASES[kind][0]
+    path = str(tmp_path / "store")
+    spark.createDataFrame([("b0", 0)], "batch_id string, version int").write.parquet(
+        f"{path}/ledger"
+    )
+    store = cls(spark, path)
+    for call in (store.exists, store.current_version, store.state):
+        with pytest.raises(ValueError, match=f"{path}/ledger"):
+            call()

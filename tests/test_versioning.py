@@ -1,6 +1,6 @@
 """Snapshot versioning (operators/versioning.py): time travel, atomic
 pointer commits, O(1) rollback, shared-directory-aware vacuum; plus
-ParquetTable.vacuum_orphans."""
+ParquetTable.vacuum_orphans and its recovery of a crashed swap."""
 
 from __future__ import annotations
 
@@ -20,6 +20,11 @@ def _df(spark, *vals):
     return spark.createDataFrame([(v,) for v in vals], "v bigint")
 
 
+def _dir(t, version):
+    """The snapshot dir a version's own write staged (last of its paths)."""
+    return next(v for v in t.history() if v["version"] == version)["paths"][-1]
+
+
 def test_write_read_time_travel(spark, tmp_path):
     t = _t(spark, tmp_path)
     assert t.current_version() == 0
@@ -34,7 +39,7 @@ def test_rollback_is_pointer_only(spark, tmp_path):
     t = _t(spark, tmp_path)
     t.write(_df(spark, 1))
     t.write(_df(spark, 2))
-    v2_dir = str(tmp_path / "vt" / "v=000002")
+    v2_dir = _dir(t, 2)
     files_before = sorted(os.listdir(v2_dir))
     t.rollback(1)
     assert t.current_version() == 1
@@ -97,10 +102,12 @@ def test_vacuum_keeps_current_and_shared_dirs(spark, tmp_path):
     t.write_incremental(_df(spark, 2))  # v2 = v1+v2 dirs
     t.write(_df(spark, 9))  # v3 (full)
     t.write(_df(spark, 10))  # v4 (full)
+    v1_dir = _dir(t, 1)
     removed = t.vacuum(keep_last=2)
     assert sorted(removed) == [1, 2]
+    assert sorted(v["version"] for v in t.history()) == [3, 4]
     # v1's directory was shared ONLY by dropped versions → gone
-    assert not os.path.exists(str(tmp_path / "vt" / "v=000001"))
+    assert not os.path.exists(v1_dir)
     assert sorted(r["v"] for r in t.read().collect()) == [10]
     assert sorted(r["v"] for r in t.read(version=3).collect()) == [9]
     with pytest.raises(ValueError, match="not found"):
@@ -111,21 +118,39 @@ def test_vacuum_retains_dir_shared_with_kept_version(spark, tmp_path):
     t = _t(spark, tmp_path)
     t.write(_df(spark, 1))  # v1
     t.write_incremental(_df(spark, 2))  # v2 references v1's dir
+    v1_dir = _dir(t, 1)
     t.vacuum(keep_last=1)  # drops v1 as a VERSION...
     # ...but its directory survives because current v2 still reads it
-    assert os.path.exists(str(tmp_path / "vt" / "v=000001"))
+    assert os.path.exists(v1_dir)
     assert sorted(r["v"] for r in t.read().collect()) == [1, 2]
 
 
 def test_manifest_commit_is_atomic_single_file(spark, tmp_path):
+    """Each commit (write, rollback) is one new manifest entry, and no
+    temp entry is left behind."""
     t = _t(spark, tmp_path)
     t.write(_df(spark, 1))
-    names = os.listdir(str(tmp_path / "vt"))
-    assert "_manifest.json" in names
-    # no leftover tmp manifests (the .crc sidecar is Hadoop's checksum file)
-    assert not [
-        n for n in names if n.startswith("._manifest") and not n.endswith(".crc")
+    t.write(_df(spark, 2))
+    t.rollback(1)
+    assert (t.current_version(), [v["version"] for v in t.history()]) == (1, [1, 2])
+    names = os.listdir(str(tmp_path / "vt" / "_log"))
+    assert sorted(n for n in names if not n.startswith(".")) == [
+        f"{n:020d}.json" for n in range(3)
     ]
+    # the .crc sidecars are Hadoop's checksum files, not temp entries
+    assert not [n for n in names if n.startswith(".") and not n.endswith(".crc")]
+
+
+def test_old_manifest_format_raises_naming_the_path(spark, tmp_path):
+    """A table written before the commit log (a bare ``_manifest.json``)
+    is not read as an empty table: reads raise, naming the path."""
+    path = tmp_path / "vt"
+    path.mkdir()
+    (path / "_manifest.json").write_text('{"current": 0, "versions": []}')
+    t = _t(spark, tmp_path)
+    for read in (t.current_version, t.history, lambda: t.write(_df(spark, 1))):
+        with pytest.raises(ValueError, match="_manifest.json"):
+            read()
 
 
 def test_parquettable_vacuum_orphans(spark, tmp_path):
@@ -134,14 +159,31 @@ def test_parquettable_vacuum_orphans(spark, tmp_path):
     path = str(tmp_path / "t")
     t = ParquetTable(spark, path, "v")
     t.create_if_not_exists(_df(spark, 1))
-    # simulate crashed swaps
-    os.makedirs(path + ".stage-deadbeef")
-    os.makedirs(path + ".old-cafe01")
+    # simulate crashed swaps: a stage of each kind, a finished swap's backup
+    for orphan in (".stage-deadbeef", ".compact-0b", ".zorder-0c", ".old-cafe01"):
+        os.makedirs(path + orphan)
     removed = t.vacuum_orphans()
-    assert sorted(removed) == ["t.old-cafe01", "t.stage-deadbeef"]
-    assert not os.path.exists(path + ".stage-deadbeef")
-    assert os.path.exists(path)  # live table untouched
-    assert [r["v"] for r in t.read().collect()] == [1]
+    assert sorted(removed) == [
+        "t.compact-0b", "t.old-cafe01", "t.stage-deadbeef", "t.zorder-0c"
+    ]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert [r["v"] for r in t.read().collect()] == [1]  # live table untouched
+
+
+def test_vacuum_orphans_restores_the_only_copy(spark, tmp_path):
+    """A crash between a swap's two renames leaves no live dir and one
+    ``.old-*`` backup — the only copy of the table. ``vacuum_orphans``
+    must rename it back, not delete it."""
+    from airflow_dags_spark.operators.upsert import ParquetTable
+
+    path = str(tmp_path / "t")
+    t = ParquetTable(spark, path, "v")
+    t.create_if_not_exists(_df(spark, 1, 2))
+    os.rename(path, path + ".old-cafe01")  # the state after the first rename
+    os.makedirs(path + ".stage-deadbeef")
+    t.vacuum_orphans()
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert sorted(r["v"] for r in t.read().collect()) == [1, 2]
 
 
 def test_version_diff_classifies_changes(spark, tmp_path):
