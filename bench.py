@@ -3,9 +3,11 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is fully executed via a count-collapsing write-less action
-(``df.toPandas`` would tax the driver; ``count`` alone can prune work, so we
-use ``df.write.format("noop")`` which executes the complete plan).
+Each query is built and then fully executed by
+``functions/profile.py:profile_query`` (``df.toPandas`` would tax the
+driver; ``count`` alone can prune work, so it writes to the noop sink,
+which executes the complete plan). A run's time is its build plus execute
+seconds; BENCH_DETAIL.json also keeps the per-phase medians and job counts.
 """
 
 from __future__ import annotations
@@ -13,12 +15,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-
-import pandas as pd
+import statistics
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from airflow_dags_spark.functions.profile import profile_query, warm_up
 from airflow_dags_spark.plans import registry
 from airflow_dags_spark.session import get_spark
 
@@ -175,29 +176,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the JVM + parquet footers + Python UDF workers once so per-query
-    # numbers measure the queries, not session startup (local[32] spawns 32
-    # Python workers on the first Arrow-batched UDF — ~1.5 s one-time cost;
-    # first touch of each parquet table pays footer reads + OS page-cache
-    # fill — measured 2-5x inflation on whichever query reads a table first)
-    from airflow_dags_spark.schemas import TESTDATA_TABLES
-    from airflow_dags_spark.sources.tables import read_table
-
-    for t in TESTDATA_TABLES:
-        read_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    registry.QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(v: pd.Series) -> pd.Series:
-        return v
-
-    spark.range(100_000).repartition(int(cpus) if cpus.isdigit() else 32).select(
-        _warm(F.col("id"))
-    ).write.format("noop").mode("overwrite").save()
+    # warm the JVM, parquet footers and Python UDF workers once so
+    # per-query numbers measure the queries, not session startup
+    warm_up(spark, sf_dir)
 
     # median-of-5 with one discarded warm-up per query: consecutive idle
     # runs of this harness differ by ~13% run-to-run (judge-measured, r3),
@@ -211,18 +192,13 @@ def main() -> None:
     spreads: dict[str, float] = {}
     spreads_abs: dict[str, float] = {}
     medians: dict[str, float] = {}
+    phases: dict[str, dict[str, float]] = {"build_s": {}, "exec_s": {}, "jobs": {}}
     for name in HEADLINE:
         fn = registry.QUERIES[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
-        runs = []
-        for _ in range(n_runs):
-            start = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - start)
-        runs.sort()
-        med = runs[len(runs) // 2] if n_runs % 2 else (
-            (runs[n_runs // 2 - 1] + runs[n_runs // 2]) / 2
-        )
+        profile_query(spark, name, fn, sf_dir)  # warm-up
+        recs = [profile_query(spark, name, fn, sf_dir) for _ in range(n_runs)]
+        runs = sorted(r["build_s"] + r["exec_s"] for r in recs)
+        med = statistics.median(runs)
         # width-capped rendering (see compact_med) keeps the stdout line
         # inside the driver's 2000-byte tail capture; the full-precision
         # median goes to the BENCH_DETAIL.json sidecar
@@ -230,23 +206,20 @@ def main() -> None:
         medians[name] = round(med, 4)
         spreads[name] = round((runs[-1] - runs[0]) / med, 3) if med > 0 else 0.0
         spreads_abs[name] = round(runs[-1] - runs[0], 3)
+        phases["build_s"][name] = round(statistics.median(r["build_s"] for r in recs), 4)
+        phases["exec_s"][name] = round(statistics.median(r["exec_s"] for r in recs), 4)
+        phases["jobs"][name] = statistics.median(r["build_jobs"] + r["exec_jobs"] for r in recs)
 
     total = round(sum(timings.values()), 3)
     # idle-run marker: bench numbers are contention-sensitive (a contended
     # run measured 36 s vs 15 s idle for the same code). load1 is sampled
-    # BEFORE this process ramps up (captured at import-time below would race
-    # the JVM; here the session is warm but queries haven't run), so
-    # load1 >> cpus means something else was burning the box and the run
-    # should not be compared across rounds.
+    # at import, before this process ramps up (LOAD_AT_START), so load1 >>
+    # cpus means something else was burning the box and the run should not
+    # be compared across rounds.
     #
-    # The stdout contract is ONE minimal JSON line: the external driver
-    # captures only a ~2 KB stdout tail, and round 4's line (42 medians + a
-    # same-size query_spread map ≈ 2.9 KB) overflowed it, truncating the head
-    # and leaving the round with an unparseable bench record. Everything
-    # beyond {metric, value, unit, queries, sf, load_avg_at_start, idle_run}
-    # now goes to stderr + the BENCH_DETAIL.json sidecar, the parsed line
-    # uses compact separators + 2-decimal per-query medians, and
-    # tests/test_bench_contract.py pins the line under the capture budget.
+    # Everything beyond the ONE stdout line (render_stdout_line; its byte
+    # budget and round 4's overflow: tests/test_bench_contract.py) goes to
+    # stderr and the BENCH_DETAIL.json sidecar.
     line = render_stdout_line(
         timings,
         total,
@@ -263,6 +236,11 @@ def main() -> None:
         "query_spread": spreads,
         "query_spread_abs_s": spreads_abs,
         "query_median": medians,  # full precision; the line is width-capped
+        # per-phase medians (profile_query): seconds in the query function
+        # (eager operator jobs) vs the noop write, and Spark jobs per run
+        "query_build_s": phases["build_s"],
+        "query_exec_s": phases["exec_s"],
+        "query_jobs": phases["jobs"],
         "bench_runs_per_query": n_runs,
         "cpus": os.cpu_count(),
         "stdout_line_bytes": len(line),

@@ -9,6 +9,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from airflow_dags_spark.functions.profile import explain_string
 from airflow_dags_spark.plans import registry
 from airflow_dags_spark.session import get_spark
 
@@ -178,10 +179,7 @@ def main() -> None:
         f.write(HEADER)
         for n in NAMES:
             df = registry.QUERIES[n](spark, "/root/testdata/sf0.001")
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            f.write(f"## {n}\n\n```\n{plan[:4000]}\n```\n\n")
+            f.write(f"## {n}\n\n```\n{explain_string(df)[:4000]}\n```\n\n")
     spark.stop()
 
 

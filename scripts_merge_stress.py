@@ -5,10 +5,11 @@ partitioned targets merge only the partitions PRESENT IN THE BATCH —
 O(touched), not O(table) — while unpartitioned targets pay a full rewrite.
 
 This script measures that directly: an 84-month-partitioned orders table at
-1x (sf0.1) and 10x (key-offset upsample, same recipe as
-scripts_scale_stress.py), merged with a batch touching ONE month (~1.2% of
-partitions). If the claim holds, partitioned merge time is ~flat from 1x to
-10x while the unpartitioned full rewrite scales with the table.
+1x (sf0.1) and 10x (the key-offset upsample that
+scripts_scale_stress.py:build_stress_dir writes), merged with a batch
+touching ONE month (~1.2% of partitions). If the claim holds, partitioned
+merge time is ~flat from 1x to 10x while the unpartitioned full rewrite
+scales with the table.
 
 Usage: python scripts_merge_stress.py [factor]      (default 10)
 Prints one JSON line; numbers are recorded in SCALE.md.
@@ -29,21 +30,14 @@ from pyspark.sql import functions as F
 from airflow_dags_spark.operators.upsert import ParquetTable
 from airflow_dags_spark.session import get_spark
 from airflow_dags_spark.sources.tables import read_table
+from scripts_scale_stress import BASE_SF_DIR, build_stress_dir
 
-BASE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROOT = "/tmp/spark_graft_merge_stress"
 
 
 def orders_with_month(spark, factor: int):
-    o = read_table(spark, BASE_SF_DIR, "orders")
-    if factor > 1:
-        span = o.agg(F.max("o_orderkey")).first()[0] + 1
-        out = o
-        for i in range(1, factor):
-            out = out.unionByName(
-                o.withColumn("o_orderkey", F.col("o_orderkey") + F.lit(i * span))
-            )
-        o = out
+    sf_dir = BASE_SF_DIR if factor == 1 else build_stress_dir(spark, factor)
+    o = read_table(spark, sf_dir, "orders")
     return o.withColumn("o_month", F.date_format("o_orderdate", "yyyyMM"))
 
 

@@ -20,12 +20,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from airflow_dags_spark.functions.profile import profile_query
 from airflow_dags_spark.plans import registry
 from airflow_dags_spark.session import get_spark
 from airflow_dags_spark.sources.tables import read_table
@@ -109,12 +109,9 @@ def run_suite(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
     out = {}
     for name in names:
         fn = registry.QUERIES[name]
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        out[name] = round(time.time() - t0, 3)
+        profile_query(spark, name, fn, sf_dir)  # warm
+        rec = profile_query(spark, name, fn, sf_dir)
+        out[name] = round(rec["build_s"] + rec["exec_s"], 3)
     return out
 
 

@@ -1,4 +1,8 @@
-"""Shared test fixtures: one tuned local SparkSession per test run."""
+"""Shared test fixtures: one tuned local SparkSession per test run.
+
+Every test reads sf0.001. The sf0.01 parity check is the plain-session
+driver drive, ``python scripts_verify_drive.py <sf_dir>``.
+"""
 
 from __future__ import annotations
 
@@ -12,7 +16,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from airflow_dags_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
-SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def pytest_collection_modifyitems(config, items):
