@@ -265,12 +265,17 @@ def main(argv: list[str] | None = None) -> None:
         if failed:
             raise SystemExit(2)  # nonzero for the orchestration layer
     elif args.cmd == "point-lookup":
-        from airflow_dags_spark.operators.skipping import point_lookup
+        from pyspark.sql import functions as F
 
-        df = spark.read.parquet(args.table_path)
+        from airflow_dags_spark.sources.tables import read_parquet
+
+        # with no index, a point lookup is the filtered scan of the table
+        # (operators/skipping.py:point_lookup); open it once for both the
+        # value's type and the scan
+        df = read_parquet(spark, args.table_path)
         dtype = dict(df.dtypes).get(args.column)
         value = int(args.value) if dtype in ("bigint", "int") else args.value
-        for r in point_lookup(spark, args.table_path, args.column, value).collect():
+        for r in df.where(F.col(args.column) == value).collect():
             print(r)
     elif args.cmd == "semantic-dedup":
         from airflow_dags_spark.operators.clustering import semantic_dedup

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from airflow_dags_spark.operators import commit
+from airflow_dags_spark.sources.tables import read_parquet
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -155,7 +156,7 @@ def compact(
             "bytes": total,
             "skipped": True,
         }
-    df = spark.read.parquet(path).repartition(n_target)
+    df = read_parquet(spark, path).repartition(n_target)
     commit.swap(spark, path, df.write.mode("overwrite").parquet, "compact")
     after = len(_data_files(jvm, fs, path))
     return {

@@ -12,10 +12,18 @@ this module is the plain-parquet equivalent:
 - ``prune_files``         — the manifest query: which files can contain
   rows in ``[lo, hi]``. Runs on the stats table (|files| rows, KBs), never
   the data.
-- ``read_with_skipping``  — scan only surviving files + apply the residual
-  predicate. The collect here is the FILE LIST — bounded by file count
-  (thousands of rows at 100 TB), the same driver-side manifest read every
-  table format performs when planning a scan.
+- ``read_with_skipping`` / ``point_lookup`` — scan only the files a
+  ``stats`` zone map or a ``blooms`` index lets through, plus the
+  residual predicate. The collect here is the FILE LIST — bounded by
+  file count (thousands of rows at 100 TB), the same driver-side manifest
+  read every table format performs when planning a scan.
+
+An index is used only when it is passed in. Building one costs a full
+pass with a shuffle and a collect, more than the one filtered scan it
+would save, so it pays only when persisted and reused (Delta keeps its
+skipping stats with the table for this reason). Without one, both reads
+are the plain pushed-down filtered scan of the table root, opened with
+``sources.tables.read_parquet`` (no schema-inference job).
 
 Effectiveness is a layout property: combine with
 ``maintenance.zorder_layout`` (or a plain range-sort on the filter column)
@@ -34,6 +42,9 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from airflow_dags_spark.sources.tables import read_parquet
 
 
 def collect_file_stats(
@@ -85,7 +96,7 @@ def update_file_stats(
     to the table; this is the manifest-update step every table format runs
     at commit time."""
     known = {r["file_path"] for r in stats.select("file_path").collect()}
-    current = set(spark.read.parquet(path).inputFiles())
+    current = set(read_parquet(spark, path).inputFiles())
     new = sorted(current - known)
     kept = stats.where(F.col("file_path").isin(list(current)))
     if not new:
@@ -111,7 +122,7 @@ def collect_file_blooms(
     broadcastable planning table."""
     from airflow_dags_spark.functions.probabilistic import _h, _word_mask
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     c = F.col(col)
     pos = df.select(
         F.col("_metadata.file_path").alias("file_path"),
@@ -165,6 +176,16 @@ def prune_files_bloom(
     return [r["file_path"] for r in hits.where(cond).select("file_path").collect()]
 
 
+def _read_files(
+    spark: SparkSession, path: str, files: list[str], schema: StructType
+) -> DataFrame:
+    """Read only ``files`` of the table at ``path``, with its root schema:
+    ``basePath`` keeps the partition columns the directory names carry."""
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", path).parquet(*files)
+
+
 def point_lookup(
     spark: SparkSession,
     path: str,
@@ -174,15 +195,17 @@ def point_lookup(
     m_bits: int = 1 << 14,
     k: int = 5,
 ) -> DataFrame:
-    """Exact point lookup that opens only Bloom-surviving files. False
-    positives cost an extra file read; the residual equality filter keeps
-    the result exact either way."""
-    if blooms is None:
-        blooms = collect_file_blooms(spark, path, col, m_bits, k)
-    files = prune_files_bloom(blooms, col, value, m_bits, k)
-    if not files:
-        return spark.createDataFrame([], spark.read.parquet(path).schema)
-    return spark.read.parquet(*files).where(F.col(col) == value)
+    """Exact point lookup. Without an index it is the one pushed-down
+    filtered scan of the table (row-group min/max stats still skip row
+    groups); with a persisted ``blooms`` index it opens only the
+    Bloom-surviving files, and a false positive costs an extra file read.
+    Either way the result has the root schema, partition columns included,
+    and the residual equality filter keeps it exact."""
+    table = read_parquet(spark, path)
+    if blooms is not None:
+        files = prune_files_bloom(blooms, col, value, m_bits, k)
+        table = _read_files(spark, path, files, table.schema)
+    return table.where(F.col(col) == value)
 
 
 def read_with_skipping(
@@ -193,19 +216,15 @@ def read_with_skipping(
     hi: Any = None,
     stats: DataFrame | None = None,
 ) -> DataFrame:
-    """Range scan that opens only the files the zone map cannot rule out.
-
-    Pass a persisted ``stats`` table for planning without touching data;
-    without one this degrades gracefully (stats built in one extra pass —
-    the backfill path, still cheaper than N full scans if reused)."""
-    if stats is None:
-        stats = collect_file_stats(spark, path, [col])
-    files = prune_files(stats, col, lo, hi)
-    if not files:
-        return spark.createDataFrame([], spark.read.parquet(path).schema)
-    df = spark.read.parquet(*files)
+    """Range scan. With a persisted ``stats`` zone map it opens only the
+    files the map cannot rule out, planning without touching data; without
+    one it is the filtered scan of the table, whose pushed-down bounds
+    still skip row groups. The result has the root schema either way."""
+    table = read_parquet(spark, path)
+    if stats is not None:
+        table = _read_files(spark, path, prune_files(stats, col, lo, hi), table.schema)
     if lo is not None:
-        df = df.where(F.col(col) >= lo)
+        table = table.where(F.col(col) >= lo)
     if hi is not None:
-        df = df.where(F.col(col) <= hi)
-    return df
+        table = table.where(F.col(col) <= hi)
+    return table

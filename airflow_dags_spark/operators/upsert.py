@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession, Window
 from pyspark.sql import functions as F
 
 from airflow_dags_spark.operators import commit
+from airflow_dags_spark.sources.tables import read_parquet
 
 
 class ParquetTable:
@@ -76,11 +77,11 @@ class ParquetTable:
 
     def read(self) -> DataFrame:
         try:
-            return self.spark.read.parquet(self.path)
+            return read_parquet(self.spark, self.path)
         except AnalysisException:
             if not commit.recover(self.spark, self.path):
                 raise
-            return self.spark.read.parquet(self.path)
+            return read_parquet(self.spark, self.path)
 
     def _writer(self, df: DataFrame, mode: str) -> DataFrameWriter:
         writer = df.write.mode(mode)
@@ -337,7 +338,7 @@ class ParquetTable:
 
         if not table_exists(self.spark, self._dv_path()):
             return None
-        return self.spark.read.parquet(self._dv_path()).distinct()
+        return read_parquet(self.spark, self._dv_path()).distinct()
 
     def read_current(self) -> DataFrame:
         """``read()`` minus logically-deleted keys. The vector is small by
@@ -390,7 +391,7 @@ class ParquetTable:
         stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
         try:
             df.write.mode("overwrite").parquet(stage)
-            staged = self.spark.read.parquet(stage)
+            staged = read_parquet(self.spark, stage)
             self._writer(staged, "overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).parquet(self.path)

@@ -530,7 +530,7 @@ def point_lookup_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.storagelevel import StorageLevel
 
-    from airflow_dags_spark.operators.skipping import point_lookup
+    from airflow_dags_spark.operators.skipping import collect_file_blooms, point_lookup
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice"
@@ -540,7 +540,10 @@ def point_lookup_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = _os.path.join(d, "li_sharded")
         li.repartitionByRange(8, "l_orderkey").write.parquet(path)
         out = (
-            point_lookup(spark, path, "l_orderkey", 1000)
+            point_lookup(
+                spark, path, "l_orderkey", 1000,
+                blooms=collect_file_blooms(spark, path, "l_orderkey"),
+            )
             .select(
                 "l_orderkey",
                 "l_linenumber",

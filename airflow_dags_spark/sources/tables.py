@@ -8,14 +8,19 @@ the parquet reader, so callers just ``read_table(...).select(...).where(...)``.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from airflow_dags_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# footer key under which Spark's parquet writer stores the row schema as JSON
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,6 +87,63 @@ def parquet_row_count(spark: SparkSession, path: str) -> int:
         finally:
             reader.close()
     return total
+
+
+def _first_data_file(fs, hpath):
+    """The first visible ``*.parquet`` file under ``hpath``, files before
+    subdirectories, subdirectories in name order; None if there is none.
+    Hidden names (``_SUCCESS``, ``_temporary``, ``.crc``) are skipped, as
+    Spark's file index skips them."""
+    dirs = []
+    for status in fs.listStatus(hpath):
+        name = status.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if status.isDirectory():
+            dirs.append((name, status.getPath()))
+        elif name.endswith(".parquet"):
+            return status.getPath()
+    for _, sub in sorted(dirs):
+        found = _first_data_file(fs, sub)
+        if found is not None:
+            return found
+    return None
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The row schema Spark's writer stored in the footer of the first data
+    file under ``path``, read on the driver like ``parquet_row_count``:
+    zero Spark jobs. Spark's own inference (no schema merging) reads the
+    same key from one file through a one-task job; partition columns are
+    in neither and come from the directory names. None when ``path`` is
+    missing, has no data file, or its footer holds no Spark schema
+    (pyarrow- or DuckDB-written files)."""
+    from airflow_dags_spark.operators.commit import hadoop_fs
+
+    jvm, fs = hadoop_fs(spark, path)
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    first = _first_data_file(fs, hpath) if fs.exists(hpath) else None
+    if first is None:
+        return None
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # type: ignore[union-attr]
+    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first, conf)
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+    try:
+        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+        stored = meta.get(SPARK_ROW_METADATA)
+    finally:
+        reader.close()
+    return None if stored is None else StructType.fromJson(json.loads(stored))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job when
+    the files were written by Spark: the footer schema is passed to
+    ``spark.read.schema``. Falls back to inference when ``footer_schema``
+    finds none or the session merges schemas across files."""
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false") == "true"
+    schema = None if merge else footer_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 def register_views(

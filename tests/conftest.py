@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -53,3 +54,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), n)``: ``n`` is the Spark jobs ``fn`` ran,
+    read back from the status tracker under a job group of their own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs:{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -218,3 +218,11 @@ def test_cli_dq_audit_and_point_lookup(spark, tmp_path, monkeypatch, capsys):
 
     cli_main(["point-lookup", clean, "id", "2"])
     assert "b" in capsys.readouterr().out
+
+    # a partitioned table: the partition column is in the output
+    part = str(tmp_path / "part")
+    spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "y"), (3, "c", "y")], "id bigint, v string, area string"
+    ).write.partitionBy("area").parquet(part)
+    cli_main(["point-lookup", part, "id", "2"])
+    assert capsys.readouterr().out.strip() == "Row(id=2, v='b', area='y')"

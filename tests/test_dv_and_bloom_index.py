@@ -10,10 +10,14 @@ from pyspark.sql import functions as F
 
 from airflow_dags_spark.operators.skipping import (
     collect_file_blooms,
+    collect_file_stats,
     point_lookup,
     prune_files_bloom,
+    read_with_skipping,
 )
 from airflow_dags_spark.operators.upsert import ParquetTable
+from airflow_dags_spark.plans import registry
+from airflow_dags_spark.sources.tables import read_parquet
 
 
 # --- deletion vectors ---------------------------------------------------------
@@ -135,6 +139,78 @@ def test_point_lookup_exact_and_bounded(spark, sharded):
     missing = point_lookup(spark, sharded, "id", 10_000_000)
     assert missing.count() == 0
     assert missing.columns == ["id", "v"]
+
+
+@pytest.fixture()
+def partitioned(spark, tmp_path):
+    """4 partitions of 250 ids each, 2 files per partition."""
+    p = str(tmp_path / "partitioned")
+    (
+        spark.createDataFrame(
+            [(i, f"d{i}", i // 250) for i in range(1000)], "id bigint, v string, area int"
+        )
+        .repartitionByRange(8, "id")
+        .write.partitionBy("area")
+        .parquet(p)
+    )
+    return p
+
+
+@pytest.mark.parametrize("indexed", [False, True])
+def test_point_lookup_keeps_root_schema_on_partitioned_table(spark, partitioned, indexed):
+    blooms = collect_file_blooms(spark, partitioned, "id") if indexed else None
+    hit = point_lookup(spark, partitioned, "id", 777, blooms=blooms)
+    miss = point_lookup(spark, partitioned, "id", 10_000_000, blooms=blooms)
+    assert hit.columns == miss.columns == ["id", "v", "area"]
+    assert [tuple(r) for r in hit.collect()] == [(777, "d777", 3)]
+    assert miss.count() == 0
+
+
+def test_read_with_skipping_stats_keeps_root_schema(spark, partitioned):
+    stats = collect_file_stats(spark, partitioned, ["id"])
+    got = read_with_skipping(spark, partitioned, "id", 240, 260, stats=stats)
+    assert got.columns == ["id", "v", "area"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (i, f"d{i}", i // 250) for i in range(240, 261)
+    ]
+
+
+def test_unindexed_reads_run_only_the_filtered_scan(spark, partitioned, count_jobs):
+    """Without an index, building the read runs no job and running it runs
+    the jobs of the plain filtered scan, and nothing more."""
+    scan = read_parquet(spark, partitioned).where(F.col("id") == 777)
+    _, scan_jobs = count_jobs(scan.collect)
+    lookup, build_jobs = count_jobs(lambda: point_lookup(spark, partitioned, "id", 777))
+    assert build_jobs == 0
+    assert count_jobs(lookup.collect) == (scan.collect(), scan_jobs)
+
+    ranged = read_parquet(spark, partitioned).where(F.col("id") >= 240).where(F.col("id") <= 260)
+    _, ranged_jobs = count_jobs(ranged.collect)
+    skipping, build_jobs = count_jobs(
+        lambda: read_with_skipping(spark, partitioned, "id", 240, 260)
+    )
+    assert build_jobs == 0
+    assert count_jobs(skipping.collect) == (ranged.collect(), ranged_jobs)
+
+
+def test_registered_bloom_lookup_opens_fewer_than_all_shards(spark, sf_dir, monkeypatch):
+    """``point_lookup_bloom_index`` passes its index explicitly, so the
+    lookup reads only the Bloom-surviving files of its 8 shards."""
+    from airflow_dags_spark.operators import skipping
+
+    opened = []
+
+    def recording_lookup(*args, **kwargs):
+        assert kwargs.get("blooms") is not None
+        df = point_lookup(*args, **kwargs)
+        opened.append(len(df.inputFiles()))
+        return df
+
+    monkeypatch.setattr(skipping, "point_lookup", recording_lookup)
+    registry.load_all()
+    rows = registry.QUERIES["point_lookup_bloom_index"](spark, sf_dir).collect()
+    assert rows and {r["l_orderkey"] for r in rows} == {1000}
+    assert len(opened) == 1 and 1 <= opened[0] < 8
 
 
 # --- bloom-filtered join ------------------------------------------------------
