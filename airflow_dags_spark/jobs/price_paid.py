@@ -69,7 +69,7 @@ def initial_load(
     table = _table(spark, table_path, partitioned)
     cleaned = _read_clean(spark, csv_path)
     # first-wins on the natural key even within the bulk file (A1)
-    table._atomic_overwrite(table._dedup_source(cleaned, order_by=[KEY]))
+    table.overwrite(cleaned, order_by=[KEY])
     return table
 
 

@@ -76,12 +76,7 @@ from airflow_dags_spark.operators.ingest import (
     bloom_screened_insert_if_absent,
 )
 from airflow_dags_spark.operators.versioning import VersionedParquetTable
-from airflow_dags_spark.operators.upsert import (
-    ParquetTable,
-    advance_watermark,
-    insert_if_absent,
-    merge_upsert,
-)
+from airflow_dags_spark.operators.upsert import ParquetTable
 
 __all__ = [
     "colocated_join",
@@ -136,9 +131,6 @@ __all__ = [
     "VersionedParquetTable",
     "MinhashSignatureStore",
     "bloom_screened_insert_if_absent",
-    "advance_watermark",
-    "insert_if_absent",
-    "merge_upsert",
     "read_shard_subset",
     "shard_assignment",
     "shard_histogram",

@@ -40,13 +40,19 @@ from airflow_dags_spark.functions.probabilistic import (
     bloom_merge,
     bloom_might_contain,
 )
-from airflow_dags_spark.operators.upsert import ParquetTable
+from airflow_dags_spark.operators import commit
+from airflow_dags_spark.operators.upsert import ParquetTable, rows_to_insert
+from airflow_dags_spark.sources.tables import parquet_row_count
 
 
 def _bloom_table(table: ParquetTable) -> ParquetTable:
-    """The persisted seen-list ``<path>.bloom``, keyed on word_idx: every
-    rewrite of it is the recovering stage-and-swap."""
+    """The persisted seen-list ``<path>.bloom``, keyed on word_idx."""
     return ParquetTable(table.spark, f"{table.path}.bloom", "word_idx")
+
+
+def _save_bloom(table: ParquetTable, bloom: DataFrame) -> None:
+    """Every rewrite of the seen-list is the recovering stage-and-swap."""
+    commit.swap(table.spark, _bloom_table(table).path, bloom.write.mode("overwrite").parquet)
 
 
 def _bloom_keys(table: ParquetTable, df: DataFrame, key: str) -> DataFrame:
@@ -88,13 +94,10 @@ def bloom_screened_insert_if_absent(
         raise ValueError("bloom-screened ingest supports single-key tables")
     key = table.keys[0]
 
-    clean = table._dedup_source(src, order_by)
     if not table.exists():
-        table._atomic_overwrite(clean)
+        table.overwrite(src, order_by)
         n = table.read().count()
-        _bloom_table(table)._atomic_overwrite(
-            bloom_build(_bloom_keys(table, table.read(), key), key, m_bits, k)
-        )
+        _save_bloom(table, bloom_build(_bloom_keys(table, table.read(), key), key, m_bits, k))
         return {
             "n_batch": n,
             "n_definite_new": n,
@@ -102,11 +105,12 @@ def bloom_screened_insert_if_absent(
             "n_inserted": n,
         }
 
+    clean = table.dedup_first_wins(src, order_by)
     bloom = _load_or_build_bloom(table, key, m_bits, k)
     probed = bloom_might_contain(
         bloom, _bloom_keys(table, clean, key), key, m_bits, k
     )
-    # join back on the same normalization the probe hashed; _dedup_source
+    # join back on the same normalization the probe hashed; the dedup
     # already guarantees one batch row per normalized key
     norm = F.lower(F.col(key)) if table.case_insensitive else F.col(key)
     flagged = clean.join(
@@ -122,18 +126,20 @@ def bloom_screened_insert_if_absent(
     n_maybe = maybe.count()
     to_insert = definite_new
     if n_maybe:
-        tgt = table.read()
-        survivors = maybe.join(tgt, table._join_cond(maybe, tgt), "left_anti")
+        survivors = rows_to_insert(
+            table.read(), maybe, table.keys, case_insensitive=table.case_insensitive
+        )
         to_insert = definite_new.unionByName(survivors)
 
     to_insert = to_insert.localCheckpoint(eager=True)
     n_inserted = to_insert.count()
     if n_inserted:
         table.append(to_insert.select(*table.read().columns))
-        _bloom_table(table)._atomic_overwrite(
+        _save_bloom(
+            table,
             bloom_merge(
                 bloom, bloom_build(_bloom_keys(table, to_insert, key), key, m_bits, k)
-            )
+            ),
         )
     return {
         "n_batch": n_batch,
@@ -300,14 +306,14 @@ class MinhashSignatureStore:
             else new_bands.join(novel_keys, self.key_col, "left_semi")
         )
         # n_appended from before/after row counts (parquet-footer metadata,
-        # no data scan) — a semi-join against the post-state would
+        # no Spark job) — a semi-join against the post-state would
         # over-report on replay: insert_if_absent no-ops on keys already
         # stored, but they'd still match the post-state
-        n_before = self._table.read().count() if self.exists() else 0
+        n_before = parquet_row_count(self.spark, self.path) if self.exists() else 0
         # survivor order = band columns (content-derived): deterministic
         # even if a caller skips screen()'s key dedup
         self._table.insert_if_absent(to_append, order_by=self._band_cols)
-        return self._table.read().count() - n_before
+        return parquet_row_count(self.spark, self.path) - n_before
 
     def ingest(
         self,

@@ -1,7 +1,8 @@
-"""Engine-owned MERGE/upsert library over plain Parquet (SURVEY.md §4.3#1).
+"""Engine-owned MERGE/upsert library over plain Parquet (SURVEY.md §4.3#1):
+one result-set algebra and one rewrite behind every keyed write.
 
 Spark core has no ``MERGE INTO`` for parquet; rather than take a Delta
-dependency, the engine implements the reference's three write disciplines as
+dependency, the engine implements the reference's write disciplines as
 join-based rewrites with an atomic directory-swap commit:
 
 - ``insert_if_absent``  — K3, ``ON CONFLICT DO NOTHING``
@@ -11,6 +12,24 @@ join-based rewrites with an atomic directory-swap commit:
   dags/rightmove_outcodes.py:58-69)
 - ``advance_watermark`` — K6/T1, per-key processed-through commit
   (dags/pull_new_sales_list.py:236-239,267-271)
+- ``delete_where`` / ``delete_keys`` — K7, keyed DELETE
+
+**One algebra.** Three pure functions map a target frame and a source
+frame to a result, keyed by the table's keys and its case rule:
+``rows_to_insert`` (K3 anti-join), ``merged_table`` (K4/K5 full outer join
+plus per-column coalesce) and ``without_keys`` (K7 anti-join). The write
+verbs dedup the source first (``dedup_first_wins``), then call them; the
+registered K3/K4/K5/K7 queries (plans/writeback.py) call the same
+functions on their own frames, so the DuckDB oracle checks the code the
+jobs run.
+
+**One rewrite.** ``merge_upsert``, ``delete_where`` and ``delete_keys``
+(and ``advance_watermark`` and ``compact_dv`` through them) are each one
+``_rewrite(f, touched)``: the table is opened once and replaced by
+``f(scope)``. The scope is the whole table, swapped in by ``commit.swap``;
+on a partitioned table given a touched set it is only the partitions that
+set names, dynamically overwritten. ``insert_if_absent`` appends and
+never rewrites; ``overwrite`` is the first write.
 
 Semantics decisions (documented, tested):
 - duplicate keys in the source: first-wins by an explicit ``order_by``
@@ -43,13 +62,75 @@ Scale notes:
 from __future__ import annotations
 
 import uuid
+from functools import reduce
+from operator import and_, or_
+from typing import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession, Window
+from pyspark.sql import Column, DataFrame, DataFrameWriter, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from airflow_dags_spark.operators import commit
-from airflow_dags_spark.sources.tables import read_parquet
+from airflow_dags_spark.sources.tables import read_parquet, table_exists
+
+_FrameFn = Callable[[DataFrame], DataFrame]
+
+# -- the MERGE algebra ----------------------------------------------------------
+
+
+def _norm(df: DataFrame, k: str, ci: bool) -> Column:
+    return F.lower(df[k]) if ci else df[k]
+
+
+def _on(left: DataFrame, right: DataFrame, keys: list[str], ci: bool) -> Column:
+    """Key equality of ``left`` and ``right`` under the case rule."""
+    return reduce(and_, [_norm(left, k, ci) == _norm(right, k, ci) for k in keys])
+
+
+def without_keys(
+    tgt: DataFrame, key_set: DataFrame, keys: list[str], *, case_insensitive: bool = False
+) -> DataFrame:
+    """K7 — the ``tgt`` rows whose key is not in ``key_set`` (left anti-join)."""
+    return tgt.join(key_set, _on(tgt, key_set, keys, case_insensitive), "left_anti")
+
+
+def rows_to_insert(
+    tgt: DataFrame, src: DataFrame, keys: list[str], *, case_insensitive: bool = False
+) -> DataFrame:
+    """K3 — the ``src`` rows whose key ``tgt`` lacks, in ``tgt``'s column
+    order: what ``ON CONFLICT DO NOTHING`` inserts."""
+    return without_keys(src, tgt, keys, case_insensitive=case_insensitive).select(*tgt.columns)
+
+
+def merged_table(
+    tgt: DataFrame,
+    src: DataFrame,
+    keys: list[str],
+    update_cols: list[str] | None = None,
+    *,
+    case_insensitive: bool = False,
+) -> DataFrame:
+    """K4/K5 — the MERGE result set: full outer join + per-column coalesce,
+    keys first. ``update_cols=None`` updates every non-key column the source
+    carries; the others keep the target's value. Matched and target-only
+    rows keep the target's key casing; inserted rows take the source's.
+    Columns the source lacks (a partial-source merge, e.g. watermark-only
+    updates) keep the target's values and are null on insert."""
+    non_key = [c for c in tgt.columns if c not in keys]
+    updatable = set(non_key if update_cols is None else update_cols) - set(keys)
+    t, s = tgt.alias("t"), src.alias("s")
+
+    def pick(c: str) -> Column:
+        if c not in src.columns:
+            return t[c]
+        new, old = (s, t) if c in updatable else (t, s)
+        return F.coalesce(new[c], old[c])
+
+    joined = t.join(s, _on(s, t, keys, case_insensitive), "full_outer")
+    return joined.select(*[pick(c).alias(c) for c in keys + non_key])
+
+
+# -- the table ------------------------------------------------------------------
 
 
 class ParquetTable:
@@ -87,48 +168,42 @@ class ParquetTable:
         writer = df.write.mode(mode)
         return writer.partitionBy(*self.partition_by) if self.partition_by else writer
 
+    def _swap(self, df: DataFrame) -> None:
+        """Stage → swap (``commit.swap``). Parquet writes aren't
+        in-place-updatable; reading and rewriting into the live path would
+        corrupt the source of the read, so stage to a sibling dir and
+        rename."""
+        commit.swap(self.spark, self.path, self._writer(df, "overwrite").parquet)
+
     # -- key handling -------------------------------------------------------
 
-    def _norm_key(self, df: DataFrame, k: str) -> Column:
-        col = df[k]
-        return F.lower(col) if self.case_insensitive else col
-
-    def _join_cond(self, src: DataFrame, tgt: DataFrame) -> Column:
-        cond = F.lit(True)
-        for k in self.keys:
-            cond = cond & (self._norm_key(src, k) == self._norm_key(tgt, k))
-        return cond
-
-    def _dedup_source(self, src: DataFrame, order_by: list[str]) -> DataFrame:
-        """First-wins dedup of source keys (A1 semantics) + null-key reject."""
-        for k in self.keys:
-            src = src.where(F.col(k).isNotNull())
+    def dedup_first_wins(self, src: DataFrame, order_by: list[str]) -> DataFrame:
+        """The source discipline every write applies (A1 semantics):
+        null-key rows rejected, then first-wins by ``order_by`` within each
+        key (which must be a deterministic total order within a key).
+        Public for callers that need the same row set BEFORE writing (e.g.
+        signing documents whose signatures will later be inserted)."""
+        src = src.dropna(subset=self.keys)
         w = Window.partitionBy(
-            *[self._norm_key(src, k) for k in self.keys]
-        ).orderBy(*[F.col(c) for c in order_by])
+            *[_norm(src, k, self.case_insensitive) for k in self.keys]
+        ).orderBy(*order_by)
         return (
             src.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .drop("__rn")
         )
 
-    def dedup_first_wins(self, src: DataFrame, order_by: list[str]) -> DataFrame:
-        """Public seam for the table's source-side dedup discipline:
-        first-wins by ``order_by`` within each key (which must be a
-        deterministic total order within a key) plus null-key rejection —
-        exactly what every write path applies, for callers that need the
-        same row set BEFORE writing (e.g. signing documents whose
-        signatures will later be inserted)."""
-        return self._dedup_source(src, order_by)
-
-    # -- atomic commit ------------------------------------------------------
-
-    def _atomic_overwrite(self, df: DataFrame) -> None:
-        """Stage → swap (``commit.swap``). Parquet writes aren't
-        in-place-updatable; reading and rewriting into the live path would
-        corrupt the source of the read, so stage to a sibling dir and
-        rename."""
-        commit.swap(self.spark, self.path, self._writer(df, "overwrite").parquet)
+    def _key_set(self, keys_df: DataFrame) -> DataFrame:
+        """The distinct non-null keys of ``keys_df``, lower-cased under the
+        case rule: what ``delete_keys`` removes and the deletion vector
+        stores."""
+        return (
+            keys_df.select(
+                *[_norm(keys_df, k, self.case_insensitive).alias(k) for k in self.keys]
+            )
+            .dropna()
+            .distinct()
+        )
 
     # -- write disciplines ---------------------------------------------------
 
@@ -139,8 +214,14 @@ class ParquetTable:
         create leaves no half-written table."""
         if self.exists():
             return False
-        self._atomic_overwrite(df)
+        self._swap(df)
         return True
+
+    def overwrite(self, src: DataFrame, order_by: list[str]) -> None:
+        """Replace the whole table by ``src`` after the first-wins dedup,
+        staged and swapped in: the bulk load and the first write of every
+        keyed verb."""
+        self._swap(self.dedup_first_wins(src, order_by))
 
     def append(self, df: DataFrame) -> None:
         """K2 — bulk append, no conflict handling (initial load only;
@@ -149,16 +230,16 @@ class ParquetTable:
 
     def insert_if_absent(self, src: DataFrame, order_by: list[str]) -> None:
         """K3 — ``ON CONFLICT DO NOTHING``: append only keys absent from the
-        target (left anti-join), never touching existing rows. Existing files
-        are untouched — this is an append, not a rewrite, so repeated
+        target (``rows_to_insert``), never touching existing rows. Existing
+        files are untouched — this is an append, not a rewrite, so repeated
         incremental loads stay O(batch), not O(table)."""
         if not self.exists():
-            self._atomic_overwrite(self._dedup_source(src, order_by))
+            self.overwrite(src, order_by)
             return
-        tgt = self.read()
-        clean = self._dedup_source(src, order_by)
-        new_rows = clean.join(tgt, self._join_cond(clean, tgt), "left_anti")
-        self.append(new_rows.select(*[F.col(c) for c in tgt.columns]))
+        clean = self.dedup_first_wins(src, order_by)
+        self.append(
+            rows_to_insert(self.read(), clean, self.keys, case_insensitive=self.case_insensitive)
+        )
 
     def merge_upsert(
         self,
@@ -166,10 +247,9 @@ class ParquetTable:
         order_by: list[str],
         update_cols: list[str] | None = None,
     ) -> None:
-        """K4/K5 — ``ON CONFLICT DO UPDATE``: full-outer join + per-column
-        coalesce. ``update_cols=None`` updates every non-key column; the
-        reference's K4 updates only ``updated_date``
-        (dags/pull_new_sales_list.py:252-261).
+        """K4/K5 — ``ON CONFLICT DO UPDATE`` (``merged_table``).
+        ``update_cols=None`` updates every non-key column; the reference's
+        K4 updates only ``updated_date`` (dags/pull_new_sales_list.py:252-261).
 
         Unpartitioned targets: atomic directory swap (full rewrite — the
         plain-parquet tax). Partitioned targets where the source carries the
@@ -179,58 +259,127 @@ class ParquetTable:
         Requires partition values immutable under update (standard
         lakehouse contract; key⊅partition changes are an anti-pattern).
         """
-        clean = self._dedup_source(src, order_by)
         if not self.exists():
-            self._atomic_overwrite(clean)
+            self.overwrite(src, order_by)
             return
-        if self.partition_by and all(p in clean.columns for p in self.partition_by):
-            self._merge_touched_partitions(clean, update_cols)
-            return
-        self._atomic_overwrite(self._merged_frame(self.read(), clean, update_cols))
+        clean = self.dedup_first_wins(src, order_by)
+        self._rewrite(
+            lambda scope: merged_table(
+                scope, clean, self.keys, update_cols, case_insensitive=self.case_insensitive
+            ),
+            (lambda _: clean) if set(self.partition_by) <= set(clean.columns) else None,
+        )
 
-    def _merged_frame(
-        self, tgt: DataFrame, clean: DataFrame, update_cols: list[str] | None
-    ) -> DataFrame:
-        """The MERGE result set: full-outer join + per-column coalesce."""
-        non_key = [c for c in tgt.columns if c not in self.keys]
-        updatable = set(update_cols) if update_cols is not None else set(non_key)
-        src_a = clean.alias("s")
-        tgt_a = tgt.alias("t")
-        cond = F.lit(True)
-        for k in self.keys:
-            cond = cond & (self._norm_key(src_a, k) == self._norm_key(tgt_a, k))
-        joined = tgt_a.join(src_a, cond, "full_outer")
-        out_cols: list[Column] = []
-        for k in self.keys:
-            # matched/unmatched-target rows keep the target's key casing;
-            # insert rows take the source's.
-            out_cols.append(F.coalesce(tgt_a[k], src_a[k]).alias(k))
-        for c in non_key:
-            if c not in clean.columns:
-                # partial-source merge (e.g. watermark-only updates): columns
-                # the source doesn't carry keep target values; null on insert.
-                out_cols.append(tgt_a[c].alias(c))
-            elif c in updatable:
-                out_cols.append(F.coalesce(src_a[c], tgt_a[c]).alias(c))
-            else:
-                out_cols.append(F.coalesce(tgt_a[c], src_a[c]).alias(c))
-        return joined.select(*out_cols)
+    def delete_where(self, predicate: Column) -> None:
+        """Keyed DELETE by predicate — the missing verb of the reference's
+        CRUD surface (Postgres ``DELETE FROM ... WHERE``; also the GDPR/
+        right-to-erasure path a lake table needs).
 
-    def _merge_touched_partitions(
-        self, clean: DataFrame, update_cols: list[str] | None
+        NULL predicate rows are KEPT (SQL DELETE semantics: only rows where
+        the predicate is TRUE are removed). Partitioned: only partitions
+        that CONTAIN matching rows are rewritten — O(touched), not
+        O(table)."""
+        if self.exists():
+            keep = ~F.coalesce(predicate, F.lit(False))
+            self._rewrite(lambda scope: scope.where(keep), lambda tgt: tgt.where(predicate))
+
+    def delete_keys(self, keys_df: DataFrame) -> None:
+        """Keyed DELETE by key set (``without_keys``): remove every row whose
+        key appears in ``keys_df``. With a partitioned target the touched
+        partitions come from target⋉keys (broadcast the key batch), so the
+        rewrite is O(partitions containing those keys)."""
+        if self.exists():
+            keys = self._key_set(keys_df)
+            ci = self.case_insensitive
+            self._rewrite(
+                lambda scope: without_keys(scope, keys, self.keys, case_insensitive=ci),
+                lambda tgt: tgt.join(F.broadcast(keys), _on(tgt, keys, self.keys, ci), "left_semi"),
+            )
+
+    def advance_watermark(
+        self, processed_keys: DataFrame, watermark_col: str, value
     ) -> None:
-        """Partition-pruned merge: read ONLY partitions the batch touches
-        (semi-join on partition values → partition pruning at the scan),
-        merge, stage the result, then dynamically overwrite just those
-        partitions. Untouched partition directories are never read or
-        rewritten."""
-        # the touched-partition set is bounded by construction (the batch's
-        # distinct partition values); collect it and filter the target with
-        # LITERALS — static partition pruning at planning time (PartitionFilters
-        # on the scan), no reliance on runtime dynamic pruning of a semi-join
-        touched_rows = clean.select(*self.partition_by).distinct().collect()
-        tgt = self.read().where(self._partition_pred(touched_rows))
-        self._overwrite_partitions(self._merged_frame(tgt, clean, update_cols))
+        """K6/T1 — set ``watermark_col = value`` for the given keys (also for
+        keys that yielded zero rows, so they are not retried —
+        dags/pull_new_sales_list.py:236-239)."""
+        updates = processed_keys.select(*self.keys).distinct().withColumn(
+            watermark_col, F.lit(value)
+        )
+        self.merge_upsert(updates, order_by=self.keys, update_cols=[watermark_col])
+
+    # -- the one rewrite ----------------------------------------------------
+
+    def _rewrite(self, f: _FrameFn, touched: _FrameFn | None = None) -> None:
+        """Replace the table by ``f(scope)``, opening it once.
+
+        - ``touched`` None, or an unpartitioned table: the scope is the
+          whole table, staged and swapped in (``commit.swap``).
+        - otherwise ``touched(table)`` is a frame whose partition-column
+          values name the touched partitions. They are collected (a bounded
+          set), and the scope is only those partitions, read with a LITERAL
+          predicate — static pruning at planning time, no reliance on
+          runtime pruning of a semi-join. ``f(scope)`` is staged first (it
+          reads the very partitions the overwrite replaces, and Spark
+          refuses read-write cycles), then dynamically overwrites the
+          partitions it holds; touched partitions it left EMPTY get their
+          directories removed (dynamic overwrite alone cannot express an
+          empty partition), and so do the parent directories that leaves
+          bare; when no partition is left at all, one of them keeps a
+          schema-only file, so the empty table stays readable. Which partitions ``f(scope)`` holds rides on the stage
+          write as an observed metric, so no job re-reads the stage.
+          Untouched partition directories are never read or rewritten."""
+        tgt = self.read()
+        if touched is None or not self.partition_by:
+            self._swap(f(tgt))
+            return
+        # both sets of partition values in the table's own types: a merged
+        # string "202401" must name the int partition 202401 it rewrote
+        typed = [F.col(p).cast(tgt.schema[p].dataType).alias(p) for p in self.partition_by]
+        names = {tuple(r) for r in touched(tgt).select(*typed).distinct().collect()}
+        if not names:
+            return
+        held = Observation()
+        stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
+        try:
+            f(tgt.where(self._partition_pred(names))).observe(
+                held, F.collect_set(F.struct(*typed)).alias("parts")
+            ).write.mode("overwrite").parquet(stage)
+            staged = read_parquet(self.spark, stage)
+            self._writer(staged, "overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).parquet(self.path)
+            emptied = [
+                "/".join([self.path, *(f"{p}={v}" for p, v in zip(self.partition_by, vals))])
+                for vals in names - {tuple(r) for r in held.get["parts"]}
+            ]
+            if not emptied:
+                return
+            jvm, fs = commit.hadoop_fs(self.spark, self.path)
+
+            def bare(d: str) -> bool:  # no visible entry (none at all if d is gone)
+                return not fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{d}/[!_.]*"))
+
+            for d in emptied:
+                commit.remove(self.spark, d)
+                # and the parents it left bare (a=1/ once a=1/b=2/ is gone)
+                for _ in self.partition_by[1:]:
+                    d = d.rsplit("/", 1)[0]
+                    if not bare(d):
+                        break
+                    commit.remove(self.spark, d)
+            if bare(self.path):
+                staged.drop(*self.partition_by).write.parquet(emptied[0])
+        finally:
+            commit.remove(self.spark, stage)
+
+    def _partition_pred(self, names) -> Column:
+        """Literal partition predicate → static pruning at planning time."""
+        if len(self.partition_by) == 1:
+            return F.col(self.partition_by[0]).isin([v for (v,) in names])
+        return reduce(
+            or_,
+            [reduce(and_, [F.col(p) == v for p, v in zip(self.partition_by, vals)]) for vals in names],
+        )
 
     def vacuum_orphans(self) -> list[str]:
         """Settle what crashed writes left beside the table: first the
@@ -244,56 +393,6 @@ class ParquetTable:
         for st in stages:
             commit.remove(self.spark, st)
         return settled + [st.rsplit("/", 1)[-1] for st in stages]
-
-    def delete_where(self, predicate: Column) -> None:
-        """Keyed DELETE by predicate — the missing verb of the reference's
-        CRUD surface (Postgres ``DELETE FROM ... WHERE``; also the GDPR/
-        right-to-erasure path a lake table needs).
-
-        NULL predicate rows are KEPT (SQL DELETE semantics: only rows where
-        the predicate is TRUE are removed).
-
-        Unpartitioned: atomic swap of the retained set (the plain-parquet
-        full-rewrite tax, same as merge). Partitioned: only partitions that
-        CONTAIN matching rows are rewritten — O(touched), not O(table);
-        partitions left empty by the delete have their directories removed
-        (dynamic overwrite alone cannot express an empty partition)."""
-        keep = ~F.coalesce(predicate, F.lit(False))
-        if not self.exists():
-            return
-        if not self.partition_by:
-            self._atomic_overwrite(self.read().where(keep))
-            return
-        touched = (
-            self.read().where(predicate).select(*self.partition_by).distinct().collect()
-        )
-        if not touched:
-            return
-        remaining = self.read().where(self._partition_pred(touched)).where(keep)
-        self._overwrite_partitions(remaining, touched)
-
-    def delete_keys(self, keys_df: DataFrame) -> None:
-        """Keyed DELETE by key set (anti-join form): remove every row whose
-        key appears in ``keys_df``. With a partitioned target the touched
-        partitions come from target⋈keys (broadcast the key batch), so the
-        rewrite is O(partitions containing those keys)."""
-        if not self.exists():
-            return
-        keys = keys_df.select(*self.keys).distinct()
-        for k in self.keys:
-            keys = keys.where(F.col(k).isNotNull())
-        if not self.partition_by:
-            tgt = self.read()
-            self._atomic_overwrite(tgt.join(keys, self._join_cond(tgt, keys), "left_anti"))
-            return
-        tgt = self.read()
-        matches = tgt.join(F.broadcast(keys), self._join_cond(tgt, keys), "left_semi")
-        touched = matches.select(*self.partition_by).distinct().collect()
-        if not touched:
-            return
-        scoped = self.read().where(self._partition_pred(touched))
-        remaining = scoped.join(keys, self._join_cond(scoped, keys), "left_anti")
-        self._overwrite_partitions(remaining, touched)
 
     # -- deletion vectors (logical delete) ----------------------------------
 
@@ -319,23 +418,13 @@ class ParquetTable:
         (or ``compact_dv`` first); a plain ``append`` of a vectored key
         stays hidden from ``read_current`` by design. Returns the number
         of distinct keys recorded."""
-        keys = keys_df.select(
-            *[
-                self._norm_key(keys_df, k).alias(k) if self.case_insensitive
-                else F.col(k)
-                for k in self.keys
-            ]
-        ).distinct()
-        for k in self.keys:
-            keys = keys.where(F.col(k).isNotNull())
+        keys = self._key_set(keys_df)
         n = keys.count()
         if n:
             keys.write.mode("append").parquet(self._dv_path())
         return n
 
     def _dv(self) -> DataFrame | None:
-        from airflow_dags_spark.sources.tables import table_exists
-
         if not table_exists(self.spark, self._dv_path()):
             return None
         return read_parquet(self.spark, self._dv_path()).distinct()
@@ -348,24 +437,19 @@ class ParquetTable:
         dv = self._dv()
         if dv is None:
             return tgt
-        return tgt.join(F.broadcast(dv), self._join_cond(tgt, dv), "left_anti")
+        return without_keys(
+            tgt, F.broadcast(dv), self.keys, case_insensitive=self.case_insensitive
+        )
 
     def restore_keys(self, keys_df: DataFrame) -> None:
         """Remove keys from the deletion vector (un-delete / pre-reinsert)."""
         dv = self._dv()
         if dv is None:
             return
-        keys = keys_df.select(
-            *[
-                self._norm_key(keys_df, k).alias(k) if self.case_insensitive
-                else F.col(k)
-                for k in self.keys
-            ]
-        ).distinct()
-        remaining = dv.join(keys, self._join_cond(dv, keys), "left_anti")
-        ParquetTable(self.spark, self._dv_path(), self.keys)._atomic_overwrite(
-            remaining
+        remaining = without_keys(
+            dv, self._key_set(keys_df), self.keys, case_insensitive=self.case_insensitive
         )
+        commit.swap(self.spark, self._dv_path(), remaining.write.mode("overwrite").parquet)
 
     def compact_dv(self) -> int:
         """Apply the deletion vector physically (one touched-partition
@@ -380,96 +464,3 @@ class ParquetTable:
             self.delete_keys(dv)
         commit.remove(self.spark, self._dv_path())
         return n
-
-    def _overwrite_partitions(self, df: DataFrame, touched=()) -> None:
-        """Stage → dynamic overwrite of the partitions ``df`` holds → drop
-        the stage. Staging first: ``df`` reads the very partitions the
-        overwrite replaces, and Spark (correctly) refuses read-write
-        cycles. Partitions in ``touched`` that ``df`` left EMPTY get their
-        directories removed (dynamic overwrite alone cannot express an
-        empty partition)."""
-        stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
-        try:
-            df.write.mode("overwrite").parquet(stage)
-            staged = read_parquet(self.spark, stage)
-            self._writer(staged, "overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(self.path)
-            if touched:
-                still = {
-                    tuple(r)
-                    for r in staged.select(*self.partition_by).distinct().collect()
-                }
-                for r in touched:
-                    vals = tuple(r[p] for p in self.partition_by)
-                    if vals not in still:
-                        sub = "/".join(
-                            f"{p}={v}" for p, v in zip(self.partition_by, vals)
-                        )
-                        commit.remove(self.spark, f"{self.path}/{sub}")
-        finally:
-            commit.remove(self.spark, stage)
-
-    def _partition_pred(self, touched_rows) -> Column:
-        """Literal partition predicate → static pruning at planning time."""
-        if len(self.partition_by) == 1:
-            p = self.partition_by[0]
-            return F.col(p).isin([r[0] for r in touched_rows])
-        pred = F.lit(False)
-        for r in touched_rows:
-            conj = F.lit(True)
-            for p in self.partition_by:
-                conj = conj & (F.col(p) == F.lit(r[p]))
-            pred = pred | conj
-        return pred
-
-    def advance_watermark(
-        self, processed_keys: DataFrame, watermark_col: str, value
-    ) -> None:
-        """K6/T1 — set ``watermark_col = value`` for the given keys (also for
-        keys that yielded zero rows, so they are not retried —
-        dags/pull_new_sales_list.py:236-239)."""
-        updates = processed_keys.select(*self.keys).distinct().withColumn(
-            watermark_col, F.lit(value)
-        )
-        self.merge_upsert(updates, order_by=self.keys, update_cols=[watermark_col])
-
-
-# module-level conveniences ---------------------------------------------------
-
-
-def insert_if_absent(
-    spark: SparkSession,
-    path: str,
-    src: DataFrame,
-    key: str | list[str],
-    order_by: list[str],
-) -> None:
-    ParquetTable(spark, path, key).insert_if_absent(src, order_by)
-
-
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    src: DataFrame,
-    key: str | list[str],
-    order_by: list[str],
-    update_cols: list[str] | None = None,
-    case_insensitive: bool = False,
-) -> None:
-    ParquetTable(spark, path, key, case_insensitive=case_insensitive).merge_upsert(
-        src, order_by, update_cols
-    )
-
-
-def advance_watermark(
-    spark: SparkSession,
-    path: str,
-    processed_keys: DataFrame,
-    key: str | list[str],
-    watermark_col: str,
-    value,
-) -> None:
-    ParquetTable(spark, path, key).advance_watermark(
-        processed_keys, watermark_col, value
-    )

@@ -1,9 +1,12 @@
-"""Upsert semantics as pure dataflow queries (K3–K6, SURVEY.md §2.2).
+"""Upsert semantics as pure dataflow queries (K3–K7, SURVEY.md §2.2).
 
-The write library (operators/upsert.py) performs the actual keyed writes and
-is covered by self-verifying pytest round-trips. These queries express the
-same MERGE result sets as side-effect-free plans over the driver tables so
-DuckDB can oracle-check the join/coalesce semantics exactly:
+The K3/K4/K5/K7 queries call the write library's own result-set functions
+(operators/upsert.py: ``rows_to_insert``, ``merged_table``,
+``without_keys``) — the code ``ParquetTable``'s keyed writes run — on
+side-effect-free frames over the driver tables, and keep only their column
+selection, so DuckDB oracle-checks the library's join/coalesce semantics
+exactly. Their keys are unique and non-null, so they skip the write verbs'
+first-wins dedup:
 
 - target := orders with o_orderkey % 3 = 0 (existing table)
 - source := orders with o_orderkey % 2 = 0, with shifted totalprice
@@ -15,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_dags_spark.operators import upsert
 from airflow_dags_spark.operators.maintenance import table_diff
 from airflow_dags_spark.plans.registry import register
 from airflow_dags_spark.sources.tables import read_table
@@ -59,13 +63,12 @@ SELECT s.* FROM src s WHERE NOT EXISTS (
 
 @register("k3_insert_if_absent", K3_ORACLE)
 def k3_insert_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3 — ON CONFLICT DO NOTHING as target ∪ (source ⟕anti target)
-    (dags/monthly_price_paid_data.py:147-155). The anti-join is the entire
-    physical cost; broadcast when the batch is small."""
+    """K3 — ON CONFLICT DO NOTHING as target ∪ ``rows_to_insert``, the
+    write library's source ⟕anti target (dags/monthly_price_paid_data.py:
+    147-155). The anti-join is the entire physical cost; broadcast when the
+    batch is small."""
     tgt = _target(spark, sf_dir)
-    src = _source(spark, sf_dir)
-    new_rows = src.join(tgt.select("o_orderkey"), "o_orderkey", "left_anti")
-    return tgt.unionByName(new_rows)
+    return tgt.unionByName(upsert.rows_to_insert(tgt, _source(spark, sf_dir), ["o_orderkey"]))
 
 
 K4_ORACLE = f"""
@@ -82,18 +85,12 @@ FULL OUTER JOIN src s ON t.o_orderkey = s.o_orderkey
 @register("k4_merge_upsert", K4_ORACLE)
 def k4_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4 — ON CONFLICT DO UPDATE SET price=EXCLUDED.price: full-outer join +
-    per-column coalesce; o_orderstatus is NOT in the update set, so matched
+    per-column coalesce (the write library's ``merged_table``);
+    o_orderstatus is NOT in the update set, so matched
     rows keep the target's status (dags/pull_new_sales_list.py:252-261 updates
     only updated_date)."""
-    tgt = _target(spark, sf_dir).alias("t")
-    src = _source(spark, sf_dir).alias("s")
-    joined = tgt.join(src, F.col("t.o_orderkey") == F.col("s.o_orderkey"), "full_outer")
-    return joined.select(
-        F.coalesce(F.col("t.o_orderkey"), F.col("s.o_orderkey")).alias("o_orderkey"),
-        F.coalesce(F.col("s.price"), F.col("t.price")).alias("price"),
-        F.coalesce(F.col("t.o_orderstatus"), F.col("s.o_orderstatus")).alias(
-            "o_orderstatus"
-        ),
+    return upsert.merged_table(
+        _target(spark, sf_dir), _source(spark, sf_dir), ["o_orderkey"], ["price"]
     )
 
 
@@ -116,28 +113,18 @@ LEFT JOIN upd u ON LOWER(t.n_name) = LOWER(u.key_name)
 @register("k5_case_insensitive_update", K5_ORACLE)
 def k5_case_insensitive_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 — keyed UPDATE with case-insensitive key: join-update on
-    lower(key) + coalesce (dags/rightmove_outcodes.py:58-69). Updates carry
-    upper-cased keys to prove the lower() match path."""
+    lower(key) + coalesce (dags/rightmove_outcodes.py:58-69), the write
+    library's ``merged_table`` with ``case_insensitive=True``. Updates carry
+    upper-cased keys to prove the lower() match path; every one matches a
+    target row, so the full outer join is the oracle's LEFT JOIN."""
     n = read_table(spark, sf_dir, "nation")
-    tgt = n.select("n_nationkey", "n_name", "n_regionkey").alias("t")
-    upd = (
-        n.where(F.col("n_nationkey") % 2 == 0)
-        .select(
-            F.upper("n_name").alias("key_name"),
-            (F.col("n_regionkey") + 100).alias("new_region"),
-        )
-        .alias("u")
+    upd = n.where(F.col("n_nationkey") % 2 == 0).select(
+        F.upper("n_name").alias("n_name"),
+        (F.col("n_regionkey") + 100).alias("n_regionkey"),
     )
-    joined = tgt.join(
-        F.broadcast(upd),
-        F.lower(F.col("t.n_name")) == F.lower(F.col("u.key_name")),
-        "left",
-    )
-    return joined.select(
-        F.col("t.n_nationkey").alias("n_nationkey"),
-        F.col("t.n_name").alias("n_name"),
-        F.coalesce(F.col("u.new_region"), F.col("t.n_regionkey")).alias("n_regionkey"),
-    )
+    tgt = n.select("n_nationkey", "n_name", "n_regionkey")
+    merged = upsert.merged_table(tgt, upd, ["n_name"], case_insensitive=True)
+    return merged.select(*tgt.columns)
 
 
 K6_ORACLE = """
@@ -244,15 +231,14 @@ WHERE NOT EXISTS (SELECT 1 FROM del d WHERE d.o_orderkey = t.o_orderkey)
 
 @register("k7_delete_keys", K7_ORACLE)
 def k7_delete_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K7 — keyed DELETE as the anti-join result set (the dataflow form of
-    ``ParquetTable.delete_keys``; the physical write path — touched-partition
+    """K7 — keyed DELETE as the anti-join result set (``without_keys``, the
+    function ``ParquetTable.delete_keys`` rewrites with; the physical write path — touched-partition
     pruning + empty-partition directory removal — is pytest round-tripped in
     tests/test_upsert.py). The anti-join broadcasts the (small) key batch
     and streams the target: O(batch ⋈ touched), never O(table) compute."""
-    tgt = _target(spark, sf_dir)
     o = read_table(spark, sf_dir, "orders")
     del_keys = o.where(F.col("o_orderkey") % 5 == 0).select("o_orderkey")
-    return tgt.join(del_keys, "o_orderkey", "left_anti")
+    return upsert.without_keys(_target(spark, sf_dir), del_keys, ["o_orderkey"])
 
 
 IVM_JOIN_ORACLE = """

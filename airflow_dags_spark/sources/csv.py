@@ -17,29 +17,22 @@ from pyspark.sql import types as T
 
 
 def read_headerless_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    *,
-    permissive: bool = True,
+    spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:
     """Headerless CSV with an explicit imposed schema (S3).
 
     - ``encoding='UTF-8'``: Spark strips the BOM natively (the reference
       needed ``utf-8-sig``, dags/monthly_price_paid_data.py:117).
-    - PERMISSIVE mode + ``columnNameOfCorruptRecord`` replaces the
-      reference's per-batch rollback-and-continue error isolation
-      (dags/monthly_price_paid_data.py:158-160): malformed rows land in a
-      quarantine column instead of aborting the load.
+    - Spark's default PERMISSIVE mode: a malformed field reads as NULL
+      instead of aborting the load. Keeping the malformed rows whole for a
+      quarantine is :func:`read_headerless_csv_quarantined`.
     """
-    reader = (
+    return (
         spark.read.schema(schema)
         .option("header", "false")
         .option("encoding", "UTF-8")
+        .csv(path)
     )
-    if permissive:
-        reader = reader.option("mode", "PERMISSIVE")
-    return reader.csv(path)
 
 
 def read_headerless_csv_quarantined(

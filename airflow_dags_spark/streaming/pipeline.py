@@ -333,13 +333,7 @@ def stateful_dedup_ttl(
     org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``)
     and the ``protobuf`` package for the state-server protocol.
     """
-    import re
-
-    m = re.match(r"(\d+)\s*(hour|minute|second|day)s?", ttl)
-    if not m:
-        raise ValueError(f"unparseable ttl: {ttl!r}")
-    unit_ms = {"second": 1_000, "minute": 60_000, "hour": 3_600_000, "day": 86_400_000}
-    ttl_ms = int(m.group(1)) * unit_ms[m.group(2)]
+    ttl_ms = _parse_ttl_ms(ttl)
 
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

@@ -44,7 +44,7 @@ def orders_with_month(spark, factor: int):
 def build_target(spark, df, name: str, partition_by):
     path = f"{ROOT}/{name}"
     t = ParquetTable(spark, path, "o_orderkey", partition_by=partition_by)
-    t._atomic_overwrite(df)
+    t.overwrite(df, ["o_orderkey"])
     return t
 
 

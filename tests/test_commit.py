@@ -70,7 +70,7 @@ def _parquet_case(partition_by):
         table(spark, path).create_if_not_exists(_df(spark, range(6), "a"))
 
     def op(spark, path):
-        table(spark, path)._atomic_overwrite(_df(spark, range(3, 9), "b"))
+        table(spark, path).overwrite(_df(spark, range(3, 9), "b"), ["id"])
 
     def view(spark, path):
         return _rows(table(spark, path).read())

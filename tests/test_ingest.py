@@ -192,6 +192,21 @@ def test_signature_store_replay_is_idempotent(spark, tmp_path):
         assert r.matched_store_doc is None
 
 
+def test_signature_store_append_counts_rows_from_footers(spark, tmp_path, count_jobs, monkeypatch):
+    """append_signatures counts what it appended from parquet footers: a
+    replayed batch reports 0, and apart from the insert itself the call
+    runs no Spark job (a DataFrame count is 2 jobs under AQE)."""
+    from airflow_dags_spark.operators.ingest import MinhashSignatureStore
+    from airflow_dags_spark.operators.upsert import ParquetTable
+
+    store = MinhashSignatureStore(spark, str(tmp_path / "sig"))
+    screen, bands = store.screen(_docs(spark, [(1, _BASE), (2, "an unrelated line")]), "text")
+    assert store.append_signatures(bands, screen) == 2
+    assert store.append_signatures(bands, screen) == 0  # replay
+    monkeypatch.setattr(ParquetTable, "insert_if_absent", lambda *a, **kw: None)
+    assert count_jobs(lambda: store.append_signatures(bands, screen)) == (0, 0)
+
+
 def test_signature_store_replay_of_unrelated_docs_appends_nothing(
     spark, tmp_path
 ):
@@ -245,7 +260,7 @@ def test_signature_store_screen_agrees_with_operator(spark, tmp_path):
     new_docs = docs.where(F.col("doc_id") % 2 == 1)
     store = MinhashSignatureStore(spark, str(tmp_path / "sig"))
     original_bands = minhash_bands(store_docs, "text", "doc_id")
-    store._table._atomic_overwrite(original_bands)
+    store._table.overwrite(original_bands, ["doc_id"])
     screen, _ = store.ingest(new_docs, "text")
     # reference screen over the PRE-ingest store (ingest mutates the table
     # by appending the novel docs' signatures after screening)

@@ -112,6 +112,67 @@ def test_merge_laws(spark, tmp_path_factory, b1, b2):
     assert {(r["k"], r["v"]) for r in t4.read().collect()} == snapshot
 
 
+# --- one keyed-write sequence, both layouts, one plain-Python model ----------
+
+keyed_writes = st.lists(
+    st.one_of(
+        st.tuples(st.just("merge_upsert"), batches),
+        st.tuples(st.just("delete_where"), st.integers(min_value=-100, max_value=100)),
+        st.tuples(
+            st.just("delete_keys"), st.lists(st.integers(min_value=0, max_value=6), max_size=4)
+        ),
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+@given(ops=keyed_writes)
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+def test_keyed_writes_match_model_on_both_layouts(spark, tmp_path_factory, ops):
+    """A random sequence of merge_upsert / delete_where (``v < x``) /
+    delete_keys calls after a seed merge gives the same rows on an unpartitioned table and on
+    one partitioned by ``part`` (whole-table swap vs touched-partition
+    rewrite; the digit-valued string parts read back as int there), equal
+    after every call to a dict model of the same statements: first-wins by
+    (ord, v) within a key, then update-or-insert; delete the keys the
+    predicate or the key set names."""
+    base = tmp_path_factory.mktemp("keyed_writes")
+    tables = [
+        ParquetTable(spark, str(base / "flat"), "k"),
+        ParquetTable(spark, str(base / "part"), "k", partition_by=["part"]),
+    ]
+    model: dict[int, tuple[int, int]] = {}  # k -> (v, ord)
+    seed = [(7, 0, 0), (8, 0, 0), (9, 0, 0)]  # a row in each partition
+    for op, arg in [("merge_upsert", seed), *ops]:
+        if op == "merge_upsert":
+            df = spark.createDataFrame(
+                [(k, v, str(202400 + k % 3), o) for k, v, o in arg],
+                "k int, v int, part string, ord int",
+            )
+            for t in tables:
+                t.merge_upsert(df, order_by=["ord", "v"])
+            for k in {k for k, _, _ in arg}:
+                ordv = min((o, v) for kk, v, o in arg if kk == k)
+                model[k] = (ordv[1], ordv[0])
+        elif op == "delete_where":
+            for t in tables:
+                t.delete_where(F.col("v") < arg)
+            model = {k: vo for k, vo in model.items() if not vo[0] < arg}
+        else:
+            keys = spark.createDataFrame([(k,) for k in arg], "k int")
+            for t in tables:
+                t.delete_keys(keys)
+            model = {k: vo for k, vo in model.items() if k not in arg}
+        want = {(k, v, str(202400 + k % 3), o) for k, (v, o) in model.items()}
+        for t in tables:
+            if t.exists():
+                got = {(r["k"], r["v"], str(r["part"]), r["ord"]) for r in t.read().collect()}
+            else:
+                got = set()
+            assert got == want, (t.path, op, arg)
+
+
 # --- as-of join vs naive reference -------------------------------------------
 
 asof_rows = st.lists(

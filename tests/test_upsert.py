@@ -4,6 +4,8 @@ Semantics under test mirror the reference (SURVEY.md §2.2 K1–K6)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -311,3 +313,126 @@ def test_delete_keys_case_insensitive(spark, tmp_path):
     t.create_if_not_exists(df)
     t.delete_keys(spark.createDataFrame([("aBc",)], "code string"))
     assert [r["code"] for r in t.read().collect()] == ["xyz"]
+
+
+@pytest.mark.parametrize("partition_by", [["part"], ["part", "v"]], ids=["one", "two"])
+def test_delete_emptying_a_partitioned_table_keeps_it_readable(spark, tmp_path, partition_by):
+    """Deleting every row of a partitioned table removes every partition
+    directory but one (with two partition columns, the bare ``part=``
+    parents too), which keeps a schema-only file: the table reads as empty
+    and takes the next merge."""
+    t = ParquetTable(spark, str(tmp_path / "t"), "id", partition_by=partition_by)
+    t.create_if_not_exists(
+        spark.createDataFrame(
+            [(1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2")], "id bigint, v string, part string"
+        )
+    )
+    t.delete_where(F.col("id") > 0)
+    assert t.read().collect() == []
+    assert len([d for d in os.listdir(t.path) if not d.startswith(("_", "."))]) == 1
+    t.merge_upsert(
+        spark.createDataFrame([(7, "g", "p9")], "id bigint, v string, part string"), ["id"]
+    )
+    assert {(r["id"], r["part"]) for r in t.read().collect()} == {(7, "p9")}
+
+
+def test_merge_into_digit_valued_partitions_keeps_every_row(spark, tmp_path):
+    """Partition values like ``202401`` are written from a string column but
+    read back as int; a merge whose source keeps them as strings rewrites
+    those partitions and must keep both their old and their new rows."""
+    t = ParquetTable(spark, str(tmp_path / "t"), "id", partition_by=["o_month"])
+    schema = "id bigint, v string, o_month string"
+    t.merge_upsert(spark.createDataFrame([(1, "a", "202401"), (2, "b", "202402")], schema), ["id"])
+    assert dict(t.read().dtypes)["o_month"] == "int"
+    t.merge_upsert(spark.createDataFrame([(1, "A", "202401"), (3, "c", "202401")], schema), ["id"])
+    got = {(r["id"], r["v"], str(r["o_month"])) for r in t.read().collect()}
+    assert got == {(1, "A", "202401"), (2, "b", "202402"), (3, "c", "202401")}
+    t.delete_where(F.col("id") == 3)
+    got = {(r["id"], r["v"], str(r["o_month"])) for r in t.read().collect()}
+    assert got == {(1, "A", "202401"), (2, "b", "202402")}
+
+
+# ---------------------------------------------------------------------------
+# one MERGE algebra: the registered K3/K4/K5/K7 queries run it
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "fn,queries",
+    [
+        ("rows_to_insert", ["k3_insert_if_absent"]),
+        ("merged_table", ["k4_merge_upsert", "k5_case_insensitive_update"]),
+        ("without_keys", ["k3_insert_if_absent", "k7_delete_keys"]),
+    ],
+)
+def test_writeback_queries_run_the_write_library(spark, sf_dir, monkeypatch, fn, queries):
+    """Each registered upsert query builds its result set with the write
+    library's own function: breaking the function breaks the query, so the
+    DuckDB oracle of the query checks the code the keyed writes run."""
+    from airflow_dags_spark.operators import upsert
+    from airflow_dags_spark.plans import writeback
+
+    def broken(*a, **kw):
+        raise RuntimeError(f"{fn} called")
+
+    monkeypatch.setattr(upsert, fn, broken)
+    for name in queries:
+        with pytest.raises(RuntimeError, match=fn):
+            getattr(writeback, name)(spark, sf_dir)
+
+
+# ---------------------------------------------------------------------------
+# Spark jobs per write verb
+# ---------------------------------------------------------------------------
+
+# Jobs each verb ran on this fixture, on both layouts, before the verbs
+# shared one rewrite (measured with count_jobs, local[4], 8 shuffle
+# partitions). Partitioned deletes then also re-read their stage to find
+# emptied partitions (2 jobs); that set now rides on the stage write as an
+# observed metric.
+JOBS_BEFORE = {
+    ("insert_if_absent", False): 3, ("insert_if_absent", True): 3,
+    ("merge_upsert", False): 3, ("merge_upsert", True): 7,
+    ("advance_watermark", False): 3, ("advance_watermark", True): 3,
+    ("delete_where", False): 1, ("delete_where", True): 6,
+    ("delete_keys", False): 4, ("delete_keys", True): 11,
+    ("compact_dv", False): 7, ("compact_dv", True): 14,
+    ("first_write", False): 2, ("first_write", True): 2,
+}
+
+
+def _verb_batch(spark):
+    # k=1 updates partition p1, k=20 inserts into p2
+    return spark.createDataFrame(
+        [(1, 99, "p1", 0), (20, 200, "p2", 0)], "k int, v int, part string, wm int"
+    )
+
+
+_VERBS = {
+    "insert_if_absent": lambda spark, t: t.insert_if_absent(_verb_batch(spark), ["k"]),
+    "merge_upsert": lambda spark, t: t.merge_upsert(_verb_batch(spark), ["k"]),
+    "advance_watermark": lambda spark, t: t.advance_watermark(
+        spark.createDataFrame([(4,), (5,)], "k int"), "wm", 7
+    ),
+    "delete_where": lambda spark, t: t.delete_where(F.col("k") < 2),
+    "delete_keys": lambda spark, t: t.delete_keys(spark.createDataFrame([(4,), (5,)], "k int")),
+    "compact_dv": lambda spark, t: t.compact_dv(),
+    "first_write": lambda spark, t: ParquetTable(
+        spark, t.path + "_new", "k", partition_by=t.partition_by
+    ).merge_upsert(_verb_batch(spark), ["k"]),
+}
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "partitioned"])
+@pytest.mark.parametrize("verb", list(_VERBS))
+def test_write_verb_runs_no_more_jobs_than_before(spark, tmp_path, count_jobs, verb, partitioned):
+    t = ParquetTable(spark, str(tmp_path / "t"), "k", partition_by=["part"] if partitioned else None)
+    t.create_if_not_exists(
+        spark.createDataFrame(
+            [(i, i * 10, f"p{i % 3}", 0) for i in range(12)], "k int, v int, part string, wm int"
+        )
+    )
+    if verb == "compact_dv":
+        t.logical_delete(spark.createDataFrame([(4,), (5,)], "k int"))
+    _, n = count_jobs(lambda: _VERBS[verb](spark, t))
+    assert n <= JOBS_BEFORE[(verb, partitioned)]
