@@ -20,8 +20,9 @@ Layout
                    similarity search, multimodal plumbing.
 - ``plans/``     : named end-to-end queries (driver correctness surface) and
                    the four reference-equivalent ingestion pipelines.
-- ``streaming/`` : Structured Streaming jobs — watermarked windows, stateful
-                   dedup, foreachBatch merge.
+- ``streaming/`` : Structured Streaming jobs — watermarked windows, one
+                   redelivery dedup per time domain, one per-key state
+                   skeleton, one AvailableNow foreachBatch sink starter.
 
 Design rules (SURVEY.md §7): DataFrame-first, no custom Catalyst rules, no
 RDDs, plain Parquet + engine-owned MERGE, explicit schemas, UTC everywhere.

@@ -75,6 +75,13 @@ from airflow_dags_spark.sources.tables import read_parquet, table_exists
 
 _FrameFn = Callable[[DataFrame], DataFrame]
 
+
+def _partition_values(rows) -> set[tuple]:
+    """Partition-value tuples as the table reads them back: Spark writes a
+    null or ``""`` value as ``__HIVE_DEFAULT_PARTITION__`` and reads both
+    back as null."""
+    return {tuple(None if v == "" else v for v in r) for r in rows}
+
 # -- the MERGE algebra ----------------------------------------------------------
 
 
@@ -335,7 +342,7 @@ class ParquetTable:
         # both sets of partition values in the table's own types: a merged
         # string "202401" must name the int partition 202401 it rewrote
         typed = [F.col(p).cast(tgt.schema[p].dataType).alias(p) for p in self.partition_by]
-        names = {tuple(r) for r in touched(tgt).select(*typed).distinct().collect()}
+        names = _partition_values(touched(tgt).select(*typed).distinct().collect())
         if not names:
             return
         held = Observation()
@@ -348,13 +355,20 @@ class ParquetTable:
             self._writer(staged, "overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).parquet(self.path)
-            emptied = [
-                "/".join([self.path, *(f"{p}={v}" for p, v in zip(self.partition_by, vals))])
-                for vals in names - {tuple(r) for r in held.get["parts"]}
-            ]
-            if not emptied:
+            emptied_vals = names - _partition_values(held.get["parts"])
+            if not emptied_vals:
                 return
             jvm, fs = commit.hadoop_fs(self.spark, self.path)
+            # Spark's own dir names: escaped values, null as the default name
+            catalog = jvm.org.apache.spark.sql.catalyst.catalog
+            path_string = catalog.ExternalCatalogUtils.getPartitionPathString
+            emptied = [
+                "/".join([self.path, *(
+                    path_string(p, None if v is None else str(v))
+                    for p, v in zip(self.partition_by, vals)
+                )])
+                for vals in emptied_vals
+            ]
 
             def bare(d: str) -> bool:  # no visible entry (none at all if d is gone)
                 return not fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{d}/[!_.]*"))
@@ -373,12 +387,20 @@ class ParquetTable:
             commit.remove(self.spark, stage)
 
     def _partition_pred(self, names) -> Column:
-        """Literal partition predicate → static pruning at planning time."""
+        """Literal partition predicate → static pruning at planning time.
+        A None value (the null partition) matches with ``isNull``: a
+        literal ``isin``/``==`` never matches null."""
+
+        def eq(p: str, v) -> Column:
+            return F.col(p).isNull() if v is None else F.col(p) == v
+
         if len(self.partition_by) == 1:
-            return F.col(self.partition_by[0]).isin([v for (v,) in names])
+            col = F.col(self.partition_by[0])
+            pred = col.isin([v for (v,) in names if v is not None])
+            return pred | col.isNull() if (None,) in names else pred
         return reduce(
             or_,
-            [reduce(and_, [F.col(p) == v for p, v in zip(self.partition_by, vals)]) for vals in names],
+            [reduce(and_, [eq(p, v) for p, v in zip(self.partition_by, vals)]) for vals in names],
         )
 
     def vacuum_orphans(self) -> list[str]:

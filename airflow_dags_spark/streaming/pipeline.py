@@ -10,14 +10,17 @@ The reference is batch + cron but hand-encodes streaming semantics:
 - T5 cron tumbling windows (daily/weekly/monthly)
 
 Engine mapping: a file-landing-zone stream where each newly arrived file is
-a micro-batch (T2); event-time watermarks bound state (T1); streaming
-``dropDuplicates`` inside the watermark gives T3 without a target-table
-probe; ``foreachBatch`` + the engine MERGE library turns any stream into an
-idempotent keyed upsert; ``Trigger.AvailableNow`` reproduces the cron "drain
-everything, then stop" run (T5).
+a micro-batch (T2); event-time watermarks bound state (T1); T3 has one form
+per time domain — ``dedup_within_watermark`` (event time,
+``dropDuplicatesWithinWatermark``) and ``stateful_dedup_ttl`` (processing
+time, per-key GroupState with a TTL) — neither probes a target table;
+``foreachBatch`` + the engine MERGE library turns any stream into an
+idempotent keyed upsert. Every sink starts with ``Trigger.AvailableNow``:
+drain everything, then stop, the cron-run contract (T5) the Airflow
+wrappers need.
 
 Scale: state size is the whole game at 100 TB/day. Every stateful op here
-REQUIRES a watermark so the state store evicts; dedup keys only (not full
+bounds its state — a watermark or a TTL evicts; dedup keys only (not full
 rows); window state is bounded by (watermark horizon / slide) × key
 cardinality. Shuffle partitions (= state store partitions) are fixed per
 query via ``spark.sql.shuffle.partitions`` at session level — AQE does not
@@ -57,45 +60,28 @@ def read_event_stream(
     landing_dir: str,
     *,
     schema: T.StructType = EVENTS_LANDING_SCHEMA,
-    fmt: str = "json",
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """S2-as-stream: incremental scan of a landing directory; each new file
-    is a micro-batch (replaces the reference's 100k-row buffer loop,
+    """S2-as-stream: incremental scan of a JSON landing directory; each new
+    file is a micro-batch (replaces the reference's 100k-row buffer loop,
     dags/initial_price_paid_data.py:103-117)."""
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(landing_dir)
-
-
-def with_watermark(df: DataFrame, ts_col: str = "ts", delay: str = "1 day") -> DataFrame:
-    """T1 — event-time watermark: the engine analog of the reference's
-    ``last_updated_sale <= yesterday`` staleness horizon (1-day default,
-    dags/pull_new_sales_list.py:92,97)."""
-    return df.withWatermark(ts_col, delay)
+    return spark.readStream.schema(schema).json(landing_dir)
 
 
 def dedup_within_watermark(
     df: DataFrame, keys: list[str], ts_col: str = "ts", delay: str = "1 day"
 ) -> DataFrame:
-    """T3 — re-delivered rows inside the watermark horizon are dropped,
-    the streaming analog of ``ON CONFLICT DO NOTHING``
-    (dags/monthly_price_paid_data.py:153). State holds keys only."""
-    return with_watermark(df, ts_col, delay).dropDuplicates(keys)
+    """T3 in event time — re-delivered rows inside the watermark horizon are
+    dropped, the streaming analog of ``ON CONFLICT DO NOTHING``
+    (dags/monthly_price_paid_data.py:153). The watermark is T1's
+    ``last_updated_sale <= yesterday`` staleness horizon (1-day default,
+    dags/pull_new_sales_list.py:92,97).
 
-
-def dedup_within_watermark_native(
-    df: DataFrame, keys: list[str], ts_col: str = "ts", delay: str = "1 day"
-) -> DataFrame:
-    """T3 via Spark 3.5+ ``dropDuplicatesWithinWatermark``: same contract as
-    ``dedup_within_watermark`` but state eviction is tied to the watermark
-    REGARDLESS of the event-time column being among the keys — duplicates
-    whose event times differ (retries restamped by the producer, the common
-    real-world case) still dedup, while plain ``dropDuplicates(keys+[ts])``
-    would pass them through and ``dropDuplicates(keys)`` holds state
-    forever without a watermark column in the keys."""
-    return with_watermark(df, ts_col, delay).dropDuplicatesWithinWatermark(keys)
+    ``dropDuplicatesWithinWatermark`` holds keys only and evicts each one
+    once the watermark passes it, whether or not the event-time column is
+    among the keys — so a retry the producer restamped with a different
+    event time still dedups, and state stays bounded (plain
+    ``dropDuplicates(keys)`` would hold every key forever)."""
+    return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
 
 
 def tumbling_counts(
@@ -117,7 +103,7 @@ def tumbling_counts(
         if slide
         else F.window(F.col(ts_col), window_len)
     )
-    grouped = with_watermark(df, ts_col, delay).groupBy(
+    grouped = df.withWatermark(ts_col, delay).groupBy(
         win.alias("w"),
         *(group_cols or ["event_type"]),
     )
@@ -144,7 +130,7 @@ def session_counts(
     """T6 — session windows (gap-based), absent from the reference, mandated
     by the north star; state bounded by watermark eviction."""
     return (
-        with_watermark(df, ts_col, delay)
+        df.withWatermark(ts_col, delay)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(key_col))
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
@@ -157,6 +143,26 @@ def session_counts(
     )
 
 
+def _start_sink(
+    df: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """The one ``foreachBatch`` starter behind every sink below:
+    ``write_batch(batch, batch_id)`` runs once per micro-batch, the
+    checkpoint records which batches committed, and
+    ``Trigger.AvailableNow`` drains the backlog then stops — the exact
+    semantics of one cron DAG run (T5). A batch that crashed before its
+    checkpoint commit is replayed with the same id, so every
+    ``write_batch`` must be idempotent per batch id."""
+    return (
+        df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def merge_sink(
     df: DataFrame,
     table: ParquetTable,
@@ -164,42 +170,29 @@ def merge_sink(
     order_by: list[str],
     checkpoint_dir: str,
     update_cols: list[str] | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """T2+T3 — ``foreachBatch`` → engine MERGE: every micro-batch is an
     idempotent keyed upsert, the streaming generalization of the reference's
-    per-batch commit loop (dags/monthly_price_paid_data.py:140-160).
-
-    ``Trigger.AvailableNow`` drains the backlog then stops — the exact
-    semantics of one cron DAG run (T5); pass ``available_now=False`` for a
-    continuous micro-batch query.
-    """
+    per-batch commit loop (dags/monthly_price_paid_data.py:140-160)."""
 
     def upsert_batch(batch: DataFrame, batch_id: int) -> None:
         table.merge_upsert(batch, order_by=order_by, update_cols=update_cols)
 
-    writer = df.writeStream.foreachBatch(upsert_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(df, upsert_batch, checkpoint_dir)
 
 
 def run_to_table(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    *,
-    output_mode: str = "append",
+    stream_df: DataFrame, out_path: str, checkpoint_dir: str
 ) -> StreamingQuery:
     """Drain a (windowed) stream to parquet with AvailableNow — one cron-run
-    equivalent. Append mode emits only watermark-finalized windows."""
+    equivalent. Append mode (the only mode the file sink accepts) emits
+    only watermark-finalized windows; the file sink's own commit log makes
+    the output exactly-once, so this sink needs no ``foreachBatch``."""
     return (
         stream_df.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -243,6 +236,90 @@ def interval_join_streams(
     return l_w.join(r_w, cond, "inner").drop(f"{right_prefix}{key}")
 
 
+def _parse_ttl_ms(ttl: str) -> int:
+    import re
+
+    m = re.match(r"(\d+)\s*(hour|minute|second|day)s?", ttl)
+    if not m:
+        raise ValueError(f"unparseable ttl: {ttl!r}")
+    unit_ms = {"second": 1_000, "minute": 60_000, "hour": 3_600_000, "day": 86_400_000}
+    return int(m.group(1)) * unit_ms[m.group(2)]
+
+
+def _keyed_state(
+    df: DataFrame,
+    key_col: str,
+    state_fields: list[tuple[str, T.DataType]],
+    out_fields: list[tuple[str, T.DataType]],
+    fold: Callable,
+    *,
+    horizon: str,
+    ts_col: str | None = None,
+) -> DataFrame:
+    """The one per-key state skeleton (the grouped-map pandas API with
+    ``GroupState``, Arrow-batched) behind the custom stateful operators
+    below. An operator supplies only its fold,
+    ``fold(prev, pdf) -> (state, row)``: ``prev`` is the key's stored state
+    tuple (None for a new or evicted key), ``pdf`` all of the key's rows in
+    this micro-batch, ``state`` the tuple to store and ``row`` the values
+    of ``out_fields`` to emit after the key column, or None to emit
+    nothing.
+
+    State is bounded the same way for every operator: an invocation for a
+    timed-out key removes its state and emits nothing (a later arrival
+    restarts the fold from scratch), and every update re-arms the timeout.
+
+    - ``ts_col`` set — event time, update output mode: the stream is
+      watermarked by ``horizon``, and the timeout is armed at (latest event
+      time of the key + ``horizon``), but never at or behind the current
+      watermark, which the engine rejects. State is O(keys active within
+      the watermark horizon), not O(all keys ever seen).
+    - ``ts_col`` None — processing time, append output mode: the timeout
+      fires after ``horizon`` of processing time with no new rows for the
+      key, so state is O(keys seen within the horizon)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    horizon_ms = _parse_ttl_ms(horizon)
+
+    def schema(fields):
+        return T.StructType([T.StructField(n, t, True) for n, t in fields])
+
+    def step(key, pdfs, state):
+        import pandas as pd
+
+        if state.hasTimedOut:
+            state.remove()
+            return
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        # GroupState.getOption is a PROPERTY (calling it raises "'tuple' is
+        # not callable" on the second micro-batch, once state exists)
+        new_state, row = fold(state.getOption, pdf)
+        state.update(new_state)
+        if ts_col is None:
+            state.setTimeoutDuration(horizon_ms)
+        else:
+            last_ms = pd.Timestamp(pdf[ts_col].max()).value // 1_000_000
+            state.setTimeoutTimestamp(
+                max(last_ms + horizon_ms, state.getCurrentWatermarkMs() + 1)
+            )
+        if row is not None:
+            values = {n: [v] for (n, _), v in zip(out_fields, row)}
+            yield pd.DataFrame({key_col: [key[0]], **values})
+
+    if ts_col is None:
+        mode, timeout = "append", GroupStateTimeout.ProcessingTimeTimeout
+    else:
+        mode, timeout = "update", GroupStateTimeout.EventTimeTimeout
+        df = df.withWatermark(ts_col, horizon)
+    return df.groupBy(key_col).applyInPandasWithState(
+        step,
+        outputStructType=schema([(key_col, T.LongType()), *out_fields]),
+        stateStructType=schema(state_fields),
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+
+
 def stateful_watermark_tracker(
     df: DataFrame,
     *,
@@ -254,55 +331,67 @@ def stateful_watermark_tracker(
     in the state store — the streaming generalization of the reference's
     ``last_updated_sale`` column (dags/pull_new_sales_list.py:267-270).
 
-    Implemented with ``applyInPandasWithState`` (Arrow-batched); state per
-    key is a single (max_ts, n_seen) pair, so state size is O(keys), evicted
-    by the event-time timeout.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    State per key is a single (max_ts, n_seen) pair; a key idle past
+    (its high-water mark + ``delay``) is evicted once the watermark passes
+    that point (``_keyed_state``), so state is O(active keys)."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType(), True),
-            T.StructField("high_water_ts", T.TimestampType(), True),
-            T.StructField("n_seen", T.LongType(), True),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("max_ts_us", T.LongType(), True),
-            T.StructField("n_seen", T.LongType(), True),
-        ]
-    )
-
-    def track(key, pdfs, state: GroupState):
+    def fold(prev, pdf):
         import pandas as pd
 
-        # GroupState.getOption is a PROPERTY (calling it raises "'tuple' is
-        # not callable" on the second micro-batch, once state exists)
-        max_us, n = state.getOption if state.exists else (None, 0)
-        for pdf in pdfs:
-            ts_us = (pdf[ts_col].astype("int64") // 1000).max()
-            max_us = ts_us if max_us is None else max(max_us, int(ts_us))
-            n += len(pdf)
-        state.update((int(max_us), int(n)))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "high_water_ts": [pd.Timestamp(max_us * 1000)],
-                "n_seen": [n],
-            }
-        )
+        max_us, n = prev or (None, 0)
+        ts_us = int(pdf[ts_col].astype("int64").max() // 1000)
+        max_us = ts_us if max_us is None else max(max_us, ts_us)
+        n += len(pdf)
+        return (max_us, n), (pd.Timestamp(max_us * 1000), n)
 
-    return (
-        with_watermark(df, ts_col, delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            track,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_state(
+        df,
+        key_col,
+        [("max_ts_us", T.LongType()), ("n_seen", T.LongType())],
+        [("high_water_ts", T.TimestampType()), ("n_seen", T.LongType())],
+        fold,
+        horizon=delay,
+        ts_col=ts_col,
+    )
+
+
+def ewma_tracker(
+    df: DataFrame,
+    *,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    value_col: str = "value",
+    alpha: float = 0.3,
+    delay: str = "1 day",
+) -> DataFrame:
+    """Streaming EWMA per key (the real-time form of
+    functions/timeseries.py), carrying ONE float of state per key —
+    s ← α·x + (1-α)·s folded over each micro-batch in (ts, event_id) order,
+    continuing from the stored value. A key idle past (its last event
+    time + ``delay``) is evicted once the watermark passes that point
+    (``_keyed_state``), so state is O(ACTIVE keys), not O(all keys ever
+    seen), regardless of stream length.
+
+    Contract: per-key order ACROSS micro-batches follows arrival order
+    (source-ordered feeds — the reference's dated landing files — satisfy
+    this); within a batch rows are sorted by event time."""
+
+    def fold(prev, pdf):
+        s, n = prev or (None, 0)
+        pdf = pdf.sort_values([ts_col, "event_id"], kind="mergesort")
+        for x in pdf[value_col].dropna():
+            s = float(x) if s is None else alpha * float(x) + (1 - alpha) * s
+            n += 1
+        return (s, n), (s, n)
+
+    return _keyed_state(
+        df,
+        key_col,
+        [("ewma", T.DoubleType()), ("n_seen", T.LongType())],
+        [("ewma", T.DoubleType()), ("n_seen", T.LongType())],
+        fold,
+        horizon=delay,
+        ts_col=ts_col,
     )
 
 
@@ -312,131 +401,38 @@ def stateful_dedup_ttl(
     key_col: str = "event_id",
     ttl: str = "24 hours",
 ) -> DataFrame:
-    """T3 as a CUSTOM stateful operator on the Spark 4 ``transformWithState``
-    API: emit each key the FIRST time it is seen, drop redeliveries, and
-    let the per-key state entry expire after ``ttl``.
+    """T3 in processing time: emit each key the FIRST time it is seen (with
+    the number of its rows in that micro-batch), drop redeliveries while
+    its state lives, and treat the key as first-seen again after ``ttl``.
 
     The reference achieves at-most-once insertion with
     ``ON CONFLICT DO NOTHING`` (dags/monthly_price_paid_data.py:153) — an
     unbounded uniqueness index in Postgres. Here the dedup horizon is
-    explicit: state is O(keys seen within the TTL), evicted by the state
-    store itself (native ValueState TTL), so a 100 TB/day stream holds a
-    day of keys, not an ever-growing index. Contrast with
-    ``dedup_within_watermark`` (event-time horizon, builtin
-    ``dropDuplicates``): this variant demonstrates the custom-processor
-    path — per-key value state, processing-time TTL, counter of suppressed
-    redeliveries.
+    explicit: state is O(keys seen within the TTL), so a 100 TB/day stream
+    holds a day of keys, not an ever-growing index. The event-time form is
+    ``dedup_within_watermark``.
 
-    Runtime requirements (real clusters have both; tests skip without them):
-    RocksDB state store
-    (``spark.sql.streaming.stateStore.providerClass =
-    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``)
-    and the ``protobuf`` package for the state-server protocol.
-    """
+    Re-emit after ``ttl`` does NOT depend on timer callbacks: the TTL is
+    checked against the stored first-seen stamp on every access, while the
+    processing-time timeout of ``_keyed_state`` evicts idle keys. Runs on
+    the default state store with stock Spark."""
     ttl_ms = _parse_ttl_ms(ttl)
 
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType(), True),
-            T.StructField("first_seen_batch_rows", T.LongType(), True),
-        ]
-    )
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", "first_seen_ms long", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            n = sum(len(pdf) for pdf in rows)
-            if not self._seen.exists():
-                self._seen.update((timer_values.getCurrentProcessingTimeInMs(),))
-                yield pd.DataFrame({key_col: [key[0]], "first_seen_batch_rows": [n]})
-
-        def close(self) -> None:
-            return None
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        FirstSeen(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="ProcessingTime",
-    )
-
-
-def _parse_ttl_ms(ttl: str) -> int:
-    import re
-
-    m = re.match(r"(\d+)\s*(hour|minute|second|day)s?", ttl)
-    if not m:
-        raise ValueError(f"unparseable ttl: {ttl!r}")
-    unit_ms = {"second": 1_000, "minute": 60_000, "hour": 3_600_000, "day": 86_400_000}
-    return int(m.group(1)) * unit_ms[m.group(2)]
-
-
-def stateful_dedup_ttl_groupstate(
-    df: DataFrame,
-    *,
-    key_col: str = "event_id",
-    ttl: str = "24 hours",
-) -> DataFrame:
-    """T3 TTL dedup on the ``applyInPandasWithState`` (GroupState) API —
-    same semantics as ``stateful_dedup_ttl`` but with no runtime
-    requirements beyond stock Spark: runs on the default HDFS-backed state
-    store, no protobuf state-server protocol. This is the portable form; the
-    ``transformWithState`` form above shows the Spark 4 native-TTL path.
-
-    Semantics: emit a key the first time it is seen; suppress redeliveries
-    while its state lives; after ``ttl`` of processing time the key is
-    first-seen again. Correctness of re-emit does NOT depend on timer
-    callbacks: the TTL is checked against the stored first-seen stamp on
-    every access, while ``setTimeoutDuration`` handles eviction of idle
-    keys (so state stays O(keys within TTL), exactly the 100 TB/day
-    argument in ``stateful_dedup_ttl``'s docstring).
-    """
-    ttl_ms = _parse_ttl_ms(ttl)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType(), True),
-            T.StructField("first_seen_batch_rows", T.LongType(), True),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("first_seen_ms", T.LongType(), True)])
-
-    def dedup(key, pdfs, state):
+    def fold(prev, pdf):
         import time
 
-        import pandas as pd
-
-        if state.hasTimedOut:  # idle past TTL: evict, emit nothing
-            state.remove()
-            return
-        n = sum(len(pdf) for pdf in pdfs)
         now_ms = int(time.time() * 1000)
-        opt = state.getOption  # GroupState.get/getOption are PROPERTIES
-        first = opt[0] if opt is not None else None
-        state.update((now_ms if first is None or now_ms - first > ttl_ms else first,))
-        state.setTimeoutDuration(ttl_ms)
-        if first is None or now_ms - first > ttl_ms:
-            yield pd.DataFrame({key_col: [key[0]], "first_seen_batch_rows": [n]})
+        if prev is not None and now_ms - prev[0] <= ttl_ms:
+            return prev, None
+        return (now_ms,), (len(pdf),)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        dedup,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_state(
+        df,
+        key_col,
+        [("first_seen_ms", T.LongType())],
+        [("first_seen_batch_rows", T.LongType())],
+        fold,
+        horizon=ttl,
     )
 
 
@@ -448,7 +444,6 @@ def cms_sink(
     *,
     depth: int = 4,
     width: int = 2048,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming heavy-hitters: per micro-batch Count-Min sketches persisted
     as ``<cms_path>/batch=<id>/`` — state is ≤ depth×width rows per batch
@@ -465,12 +460,7 @@ def cms_sink(
             f"{cms_path}/batch={batch_id}"
         )
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(df, write_batch, checkpoint_dir)
 
 
 def read_cms(spark: SparkSession, cms_path: str) -> DataFrame:
@@ -480,99 +470,12 @@ def read_cms(spark: SparkSession, cms_path: str) -> DataFrame:
     return cms_merge(spark.read.parquet(cms_path).select("r", "b", "cnt"))
 
 
-def ewma_tracker(
-    df: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    alpha: float = 0.3,
-    delay: str = "1 day",
-) -> DataFrame:
-    """Streaming EWMA per key (the real-time form of
-    functions/timeseries.py): ``applyInPandasWithState`` carrying ONE float
-    of state per key — s ← α·x + (1-α)·s folded over each micro-batch in
-    (ts, event_id) order, continuing from the stored value. State size is
-    O(keys) regardless of stream length; event-time timeout evicts idle
-    keys past the watermark.
-
-    Contract: per-key order ACROSS micro-batches follows arrival order
-    (source-ordered feeds — the reference's dated landing files — satisfy
-    this); within a batch rows are sorted by event time.
-
-    Eviction: each update arms an event-time timeout at (max event time seen
-    for the key + ``delay``); when the watermark passes it with no new data,
-    the timed-out invocation removes the state — so state is O(ACTIVE keys),
-    not O(all keys ever seen).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    delay_ms = _parse_ttl_ms(delay)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType(), True),
-            T.StructField("ewma", T.DoubleType(), True),
-            T.StructField("n_seen", T.LongType(), True),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("ewma", T.DoubleType(), True),
-            T.StructField("n_seen", T.LongType(), True),
-        ]
-    )
-
-    def track(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            # watermark passed (last event time + delay) with no new rows:
-            # evict — a later arrival simply restarts the fold from scratch
-            state.remove()
-            return
-            yield  # pragma: no cover — keeps this a generator function
-
-        s, n = state.getOption if state.exists else (None, 0)
-        max_ts = None
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, "event_id"], kind="mergesort")
-            if len(pdf):
-                m = pdf[ts_col].max()
-                max_ts = m if max_ts is None else max(max_ts, m)
-            for x in pdf[value_col]:
-                if pd.isna(x):
-                    continue
-                s = float(x) if s is None else alpha * float(x) + (1 - alpha) * s
-                n += 1
-        state.update((s, int(n)))
-        if max_ts is not None:
-            ts_ms = int(pd.Timestamp(max_ts).value // 1_000_000) + delay_ms
-            # the engine rejects timestamps at/behind the current watermark
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(ts_ms, wm + 1))
-        yield pd.DataFrame({key_col: [key[0]], "ewma": [s], "n_seen": [n]})
-
-    return (
-        with_watermark(df, ts_col, delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            track,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def quality_monitor_sink(
     df: DataFrame,
     expectations,
     out_path: str,
     checkpoint_dir: str,
     *,
-    available_now: bool = True,
     on_violation=None,
 ) -> StreamingQuery:
     """Streaming data-quality monitor: run a ``functions.quality
@@ -587,8 +490,6 @@ def quality_monitor_sink(
     row is written either way, so alert delivery failures never lose the
     audit trail. Exactly-once: foreachBatch + checkpoint make each batch's
     report idempotent under replay (overwrite by batch_id partition)."""
-    from pyspark.sql import functions as F  # noqa: F811 (closure import)
-
     def audit_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
@@ -608,12 +509,7 @@ def quality_monitor_sink(
         if failed and on_violation is not None:
             on_violation(batch_id, failed)
 
-    writer = df.writeStream.foreachBatch(audit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(df, audit_batch, checkpoint_dir)
 
 
 def screened_ingest_sink(
@@ -628,7 +524,6 @@ def screened_ingest_sink(
     n_shingle: int = 3,
     salts: list[str] | None = None,
     append_matched: bool = False,
-    available_now: bool = True,
     advisory_path: str | None = None,
 ) -> StreamingQuery:
     """Near-dup-screened streaming ingest: every micro-batch is signed,
@@ -731,12 +626,7 @@ def screened_ingest_sink(
             new_bands, screen, append_matched=append_matched
         )
 
-    writer = docs_stream.writeStream.foreachBatch(screen_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(docs_stream, screen_batch, checkpoint_dir)
 
 
 def _ledger_namespace(checkpoint_dir: str) -> str:
@@ -783,7 +673,6 @@ def _ann_store_sink(
     seed: int,
     sample_hex: str,
     refit_drift_threshold: float | None,
-    available_now: bool,
 ) -> StreamingQuery:
     """The shared body of :func:`ivf_index_sink` and
     :func:`pq_codebook_sink`: per micro-batch, init the store with
@@ -821,12 +710,7 @@ def _ann_store_sink(
                 seed=seed,
             )
 
-    writer = vec_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(vec_stream, fold_batch, checkpoint_dir)
 
 
 def ivf_index_sink(
@@ -841,7 +725,6 @@ def ivf_index_sink(
     seed: int = 42,
     sample_hex: str = "4",
     refit_drift_threshold: float | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming maintenance of the persistent IVF index — the similarity
     analog of :func:`screened_ingest_sink` over
@@ -881,7 +764,6 @@ def ivf_index_sink(
         IvfIndexStore, (n_cells,), vec_stream, store_path, checkpoint_dir,
         key_col=key_col, vec_col=vec_col, fit_sample=fit_sample, seed=seed,
         sample_hex=sample_hex, refit_drift_threshold=refit_drift_threshold,
-        available_now=available_now,
     )
 
 
@@ -898,7 +780,6 @@ def pq_codebook_sink(
     seed: int = 42,
     sample_hex: str = "4",
     refit_drift_threshold: float | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming maintenance of the persistent PQ codebooks — the
     product-quantization sibling of :func:`ivf_index_sink` over
@@ -925,7 +806,6 @@ def pq_codebook_sink(
         PqCodebookStore, (m, n_codes), vec_stream, store_path, checkpoint_dir,
         key_col=key_col, vec_col=vec_col, fit_sample=fit_sample, seed=seed,
         sample_hex=sample_hex, refit_drift_threshold=refit_drift_threshold,
-        available_now=available_now,
     )
 
 
@@ -937,7 +817,6 @@ def pack_stream_sink(
     key_col: str = "doc_id",
     text_col: str = "text",
     key_bucket_width: int = 65536,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming maintenance of the persistent token-stream cursor — the
     packing sibling of :func:`ivf_index_sink` over
@@ -975,9 +854,4 @@ def pack_stream_sink(
             key_bucket_width=key_bucket_width,
         )
 
-    writer = doc_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(doc_stream, fold_batch, checkpoint_dir)

@@ -127,27 +127,38 @@ keyed_writes = st.lists(
 )
 
 
+# key k lives in partition PARTS[k % 7]: digit strings (read back as int
+# while no other value is left), "" and None (both stored as
+# __HIVE_DEFAULT_PARTITION__, read back as null) and values Spark escapes
+# in directory names
+PARTS = ["202400", "202401", "202402", "", None, "a/b", "x=y"]
+
+
+def _part(v):
+    return None if v in (None, "") else str(v)
+
+
 @given(ops=keyed_writes)
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
 def test_keyed_writes_match_model_on_both_layouts(spark, tmp_path_factory, ops):
     """A random sequence of merge_upsert / delete_where (``v < x``) /
     delete_keys calls after a seed merge gives the same rows on an unpartitioned table and on
     one partitioned by ``part`` (whole-table swap vs touched-partition
-    rewrite; the digit-valued string parts read back as int there), equal
-    after every call to a dict model of the same statements: first-wins by
-    (ord, v) within a key, then update-or-insert; delete the keys the
-    predicate or the key set names."""
+    rewrite), equal after every call to a dict model of the same
+    statements: first-wins by (ord, v) within a key, then
+    update-or-insert; delete the keys the predicate or the key set
+    names."""
     base = tmp_path_factory.mktemp("keyed_writes")
     tables = [
         ParquetTable(spark, str(base / "flat"), "k"),
         ParquetTable(spark, str(base / "part"), "k", partition_by=["part"]),
     ]
     model: dict[int, tuple[int, int]] = {}  # k -> (v, ord)
-    seed = [(7, 0, 0), (8, 0, 0), (9, 0, 0)]  # a row in each partition
+    seed = [(k, 0, 0) for k in range(7, 14)]  # a row in each partition
     for op, arg in [("merge_upsert", seed), *ops]:
         if op == "merge_upsert":
             df = spark.createDataFrame(
-                [(k, v, str(202400 + k % 3), o) for k, v, o in arg],
+                [(k, v, PARTS[k % 7], o) for k, v, o in arg],
                 "k int, v int, part string, ord int",
             )
             for t in tables:
@@ -164,10 +175,10 @@ def test_keyed_writes_match_model_on_both_layouts(spark, tmp_path_factory, ops):
             for t in tables:
                 t.delete_keys(keys)
             model = {k: vo for k, vo in model.items() if k not in arg}
-        want = {(k, v, str(202400 + k % 3), o) for k, (v, o) in model.items()}
+        want = {(k, v, _part(PARTS[k % 7]), o) for k, (v, o) in model.items()}
         for t in tables:
             if t.exists():
-                got = {(r["k"], r["v"], str(r["part"]), r["ord"]) for r in t.read().collect()}
+                got = {(r["k"], r["v"], _part(r["part"]), r["ord"]) for r in t.read().collect()}
             else:
                 got = set()
             assert got == want, (t.path, op, arg)

@@ -13,10 +13,12 @@ from pyspark.sql import functions as F
 from airflow_dags_spark.operators.upsert import ParquetTable
 from airflow_dags_spark.streaming.pipeline import (
     dedup_within_watermark,
+    ewma_tracker,
     merge_sink,
     read_event_stream,
     run_to_table,
     session_counts,
+    stateful_dedup_ttl,
     stateful_watermark_tracker,
     tumbling_counts,
 )
@@ -40,13 +42,28 @@ def land(tmp_path, name, events):
     return str(d)
 
 
-def drain(stream_df, tmp_path, out_name, mode="append"):
+def drain(stream_df, tmp_path, out_name):
     out = str(tmp_path / out_name)
-    q = run_to_table(
-        stream_df, out, str(tmp_path / f"ckpt_{out_name}"), output_mode=mode
-    )
+    q = run_to_table(stream_df, out, str(tmp_path / f"ckpt_{out_name}"))
     q.awaitTermination(120)
     return out
+
+
+def drain_appending(stream_df, out, ckpt, mode):
+    """Drain a stateful operator's output (``mode``: its output mode) with
+    AvailableNow, appending every micro-batch to parquet at ``out``. The
+    file sink accepts only append mode; update-mode operators need this
+    ``foreachBatch`` drain."""
+    q = (
+        stream_df.writeStream.foreachBatch(
+            lambda batch, _id: batch.write.mode("append").parquet(out)
+        )
+        .option("checkpointLocation", ckpt)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
 
 
 def test_tumbling_counts_stream(spark, tmp_path):
@@ -73,6 +90,9 @@ def test_tumbling_counts_stream(spark, tmp_path):
 
 
 def test_dedup_within_watermark_drops_redelivery(spark, tmp_path):
+    """Redeliveries inside the watermark drop on the key alone, in one batch
+    and across batches, also when the producer restamped the retry with a
+    different event time."""
     landing = land(
         tmp_path,
         "b1.json",
@@ -83,10 +103,27 @@ def test_dedup_within_watermark_drops_redelivery(spark, tmp_path):
             event(1, "2026-01-01 10:02:00"),  # re-delivery, same key
         ],
     )
-    stream = read_event_stream(spark, landing)
-    out = drain(dedup_within_watermark(stream, ["event_id"]), tmp_path, "dedup")
-    assert spark.read.parquet(out).select("event_id").distinct().count() == 2
+    out = drain(
+        dedup_within_watermark(read_event_stream(spark, landing), ["event_id"]),
+        tmp_path,
+        "dedup",
+    )
     assert spark.read.parquet(out).count() == 2
+    land(
+        tmp_path,
+        "b2.json",
+        [
+            event(2, "2026-01-01 10:03:00"),  # restamped retry, next batch
+            event(3, "2026-01-01 10:04:00"),
+        ],
+    )
+    drain(
+        dedup_within_watermark(read_event_stream(spark, landing), ["event_id"]),
+        tmp_path,
+        "dedup",
+    )
+    rows = spark.read.parquet(out).collect()
+    assert sorted(r.event_id for r in rows) == [1, 2, 3]
 
 
 def test_session_counts_gap_split(spark, tmp_path):
@@ -158,23 +195,11 @@ def test_stateful_watermark_tracker(spark, tmp_path):
             event(3, "2026-01-01 09:00:00", user_id=8),
         ],
     )
-    stream = read_event_stream(spark, landing)
     out = str(tmp_path / "hwm")
 
-    # update-mode output needs a merge-capable sink; parquet append can't
-    # express it, so drain through foreachBatch (the engine's merge_sink path)
     def drain_hwm():
-        q = (
-            stateful_watermark_tracker(read_event_stream(spark, landing))
-            .writeStream.foreachBatch(
-                lambda batch, _id: batch.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt_hwm"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        tracked = stateful_watermark_tracker(read_event_stream(spark, landing))
+        drain_appending(tracked, out, str(tmp_path / "ckpt_hwm"), "update")
 
     drain_hwm()
     got = {r["user_id"]: (str(r["high_water_ts"]), r["n_seen"]) for r in
@@ -278,32 +303,14 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
 
 
 def test_stateful_dedup_ttl_first_seen_only(spark, tmp_path):
-    """transformWithState custom processor: a key emits once across
-    micro-batches; redeliveries are suppressed while its state lives."""
-    pytest.importorskip(
-        "google.protobuf"
-    )  # transformWithState state protocol; absent in this container
-    from airflow_dags_spark.streaming.pipeline import stateful_dedup_ttl
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    """Processing-time TTL dedup on the default state store: a key emits
+    once across micro-batches; redeliveries are suppressed."""
     out, ckpt = str(tmp_path / "seen"), str(tmp_path / "ckpt_ttl")
 
-    def drain():
+    def drain_ttl():
         stream = read_event_stream(spark, str(tmp_path / "landing"))
-        q = (
-            stateful_dedup_ttl(stream, key_col="event_id", ttl="1 day")
-            .writeStream.foreachBatch(
-                lambda batch, _id: batch.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        deduped = stateful_dedup_ttl(stream, key_col="event_id", ttl="1 day")
+        drain_appending(deduped, out, ckpt, "append")
 
     land(
         tmp_path,
@@ -314,94 +321,7 @@ def test_stateful_dedup_ttl_first_seen_only(spark, tmp_path):
             event(2, "2026-01-01 10:00:02"),
         ],
     )
-    drain()
-    got = {r.event_id: r.first_seen_batch_rows for r in spark.read.parquet(out).collect()}
-    assert got == {1: 2, 2: 1}  # key 1 emitted once, with both rows counted
-
-    land(
-        tmp_path,
-        "b2.json",
-        [
-            event(1, "2026-01-01 11:00:00"),  # cross-batch redelivery: drop
-            event(3, "2026-01-01 11:00:01"),  # new key: emit
-        ],
-    )
-    drain()
-    rows = spark.read.parquet(out).collect()
-    assert sorted(r.event_id for r in rows) == [1, 2, 3]  # 1 NOT re-emitted
-
-
-def test_stateful_dedup_ttl_expiry_reemits(spark, tmp_path):
-    """After the per-key state TTL lapses, the same key is first-seen again:
-    the dedup horizon is bounded, state does not grow forever."""
-    pytest.importorskip(
-        "google.protobuf"
-    )  # transformWithState state protocol; absent in this container
-    import time
-
-    from airflow_dags_spark.streaming.pipeline import stateful_dedup_ttl
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    out, ckpt = str(tmp_path / "seen"), str(tmp_path / "ckpt_ttl2")
-
-    def drain():
-        stream = read_event_stream(spark, str(tmp_path / "landing"))
-        q = (
-            stateful_dedup_ttl(stream, key_col="event_id", ttl="1 second")
-            .writeStream.foreachBatch(
-                lambda batch, _id: batch.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    land(tmp_path, "b1.json", [event(9, "2026-01-01 10:00:00")])
-    drain()
-    time.sleep(3)  # let the 1 s ValueState TTL lapse
-    land(tmp_path, "b2.json", [event(9, "2026-01-01 11:00:00")])
-    drain()
-    assert [r.event_id for r in spark.read.parquet(out).collect()] == [9, 9]
-
-
-@pytest.mark.slow
-def test_groupstate_dedup_ttl_first_seen_only(spark, tmp_path):
-    """Portable TTL dedup (applyInPandasWithState, default state store):
-    a key emits once across micro-batches; redeliveries are suppressed.
-    EXECUTED in this container — no RocksDB/protobuf requirement."""
-    from airflow_dags_spark.streaming.pipeline import stateful_dedup_ttl_groupstate
-
-    out, ckpt = str(tmp_path / "seen_gs"), str(tmp_path / "ckpt_gs")
-
-    def drain_gs():
-        stream = read_event_stream(spark, str(tmp_path / "landing"))
-        q = (
-            stateful_dedup_ttl_groupstate(stream, key_col="event_id", ttl="1 day")
-            .writeStream.foreachBatch(
-                lambda batch, _id: batch.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    land(
-        tmp_path,
-        "b1.json",
-        [
-            event(1, "2026-01-01 10:00:00"),
-            event(1, "2026-01-01 10:00:01"),  # same-batch redelivery
-            event(2, "2026-01-01 10:00:02"),
-        ],
-    )
-    drain_gs()
+    drain_ttl()
     got = {
         r.event_id: r.first_seen_batch_rows for r in spark.read.parquet(out).collect()
     }
@@ -415,66 +335,31 @@ def test_groupstate_dedup_ttl_first_seen_only(spark, tmp_path):
             event(3, "2026-01-01 11:00:01"),  # new key: emit
         ],
     )
-    drain_gs()
+    drain_ttl()
     rows = spark.read.parquet(out).collect()
     assert sorted(r.event_id for r in rows) == [1, 2, 3]  # 1 NOT re-emitted
 
 
 @pytest.mark.slow
-def test_groupstate_dedup_ttl_expiry_reemits(spark, tmp_path):
+def test_stateful_dedup_ttl_expiry_reemits(spark, tmp_path):
     """After the TTL lapses the key is first-seen again — the dedup horizon
     is bounded (state O(keys within TTL)), re-emit checked against the
     stored stamp so it does not depend on timer-callback scheduling."""
     import time
 
-    from airflow_dags_spark.streaming.pipeline import stateful_dedup_ttl_groupstate
+    out, ckpt = str(tmp_path / "seen"), str(tmp_path / "ckpt_ttl")
 
-    out, ckpt = str(tmp_path / "seen_gs2"), str(tmp_path / "ckpt_gs2")
-
-    def drain_gs():
+    def drain_ttl():
         stream = read_event_stream(spark, str(tmp_path / "landing"))
-        q = (
-            stateful_dedup_ttl_groupstate(stream, key_col="event_id", ttl="1 second")
-            .writeStream.foreachBatch(
-                lambda batch, _id: batch.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        deduped = stateful_dedup_ttl(stream, key_col="event_id", ttl="1 second")
+        drain_appending(deduped, out, ckpt, "append")
 
     land(tmp_path, "b1.json", [event(9, "2026-01-01 10:00:00")])
-    drain_gs()
+    drain_ttl()
     time.sleep(3)  # let the 1 s TTL lapse in processing time
     land(tmp_path, "b2.json", [event(9, "2026-01-01 11:00:00")])
-    drain_gs()
+    drain_ttl()
     assert [r.event_id for r in spark.read.parquet(out).collect()] == [9, 9]
-
-
-def test_native_dedup_within_watermark_drops_restamped_retries(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: a redelivery with a DIFFERENT event
-    time (producer restamped the retry) still dedups on the key — the case
-    plain dropDuplicates(keys + ts) misses."""
-    from airflow_dags_spark.streaming.pipeline import (
-        dedup_within_watermark_native,
-    )
-
-    landing = land(
-        tmp_path,
-        "b1.json",
-        [
-            event(1, "2026-01-01 10:00:00"),
-            event(1, "2026-01-01 10:03:00"),  # restamped retry: same key
-            event(2, "2026-01-01 10:01:00"),
-        ],
-    )
-    stream = read_event_stream(spark, landing)
-    deduped = dedup_within_watermark_native(stream, ["event_id"])
-    out = drain(deduped.select("event_id", "user_id"), tmp_path, "native_dedup")
-    rows = spark.read.parquet(out).collect()
-    assert sorted(r.event_id for r in rows) == [1, 2]
 
 
 @pytest.mark.slow
@@ -521,29 +406,21 @@ def test_cms_sink_streaming_heavy_hitters(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_ewma_tracker_evicts_idle_keys_past_watermark(spark, tmp_path):
+@pytest.mark.parametrize(
+    "tracker", [ewma_tracker, stateful_watermark_tracker], ids=["ewma", "watermark"]
+)
+def test_tracker_evicts_idle_keys_past_watermark(spark, tmp_path, tracker):
     """Event-time timeout: a key idle past (last event + delay) is evicted
     when the watermark passes it — a later arrival restarts the fold from
     scratch (n_seen resets) instead of continuing stale state."""
-    from airflow_dags_spark.streaming.pipeline import ewma_tracker
-
     landing = land(
         tmp_path, "b1.json", [event(1, "2026-01-01 10:00:00", user_id=7, value=10.0)]
     )
-    out = str(tmp_path / "ewma_ttl")
+    out = str(tmp_path / "tracked")
 
     def drain():
-        q = (
-            ewma_tracker(read_event_stream(spark, landing), alpha=0.5, delay="1 hour")
-            .writeStream.foreachBatch(
-                lambda batch, _id: batch.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt_ewma_ttl"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        tracked = tracker(read_event_stream(spark, landing), delay="1 hour")
+        drain_appending(tracked, out, str(tmp_path / "ckpt_tracked"), "update")
 
     drain()
     # advance the watermark far past user 7's (10:00 + 1h) timeout…
@@ -555,17 +432,13 @@ def test_ewma_tracker_evicts_idle_keys_past_watermark(spark, tmp_path):
     # user 7 returns: state must have been removed, so the fold restarts
     land(tmp_path, "b4.json", [event(4, "2026-01-06 11:00:00", user_id=7, value=40.0)])
     drain()
-    u7 = {(r["ewma"], r["n_seen"]) for r in spark.read.parquet(out).collect()
-          if r["user_id"] == 7}
-    assert (40.0, 1) in u7  # fresh fold after eviction, NOT 0.5*40 + 0.5*10
-    assert (25.0, 2) not in u7  # the continued-from-stale-state result
+    u7 = [r["n_seen"] for r in spark.read.parquet(out).collect() if r["user_id"] == 7]
+    assert sorted(u7) == [1, 1]  # fresh fold after eviction, NOT continued to 2
 
 
 def test_ewma_tracker_state_survives_batches(spark, tmp_path):
     """Streaming EWMA: the recursion continues across micro-batches from
     stored state, matching the batch recursion on the full series."""
-    from airflow_dags_spark.streaming.pipeline import ewma_tracker
-
     landing = land(
         tmp_path,
         "b1.json",
@@ -577,17 +450,8 @@ def test_ewma_tracker_state_survives_batches(spark, tmp_path):
     out = str(tmp_path / "ewma")
 
     def drain_ewma():
-        q = (
-            ewma_tracker(read_event_stream(spark, landing), alpha=0.5)
-            .writeStream.foreachBatch(
-                lambda batch, _id: batch.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt_ewma"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        tracked = ewma_tracker(read_event_stream(spark, landing), alpha=0.5)
+        drain_appending(tracked, out, str(tmp_path / "ckpt_ewma"), "update")
 
     drain_ewma()
     got = {r["user_id"]: (r["ewma"], r["n_seen"]) for r in

@@ -352,6 +352,21 @@ def test_merge_into_digit_valued_partitions_keeps_every_row(spark, tmp_path):
     assert got == {(1, "A", "202401"), (2, "b", "202402")}
 
 
+def test_merge_into_null_or_empty_partition_keeps_every_row(spark, tmp_path):
+    """Spark writes a null or ``""`` partition value as
+    ``__HIVE_DEFAULT_PARTITION__`` and reads it back as null: a merge into
+    that partition must still rewrite it with its untouched rows, and a
+    delete that empties it must remove its directory."""
+    t = ParquetTable(spark, str(tmp_path / "t"), "k", partition_by=["part"])
+    schema = "k int, v string, part string"
+    t.merge_upsert(spark.createDataFrame([(1, "a", ""), (3, "c", ""), (2, "b", "a")], schema), ["k"])
+    t.merge_upsert(spark.createDataFrame([(1, "A", "")], schema), ["k"])
+    got = {(r["k"], r["v"], r["part"]) for r in t.read().collect()}
+    assert got == {(1, "A", None), (3, "c", None), (2, "b", "a")}
+    t.delete_keys(spark.createDataFrame([(1,), (3,)], "k int"))
+    assert {(r["k"], r["part"]) for r in t.read().collect()} == {(2, "a")}
+
+
 # ---------------------------------------------------------------------------
 # one MERGE algebra: the registered K3/K4/K5/K7 queries run it
 # ---------------------------------------------------------------------------
