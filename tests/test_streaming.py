@@ -126,6 +126,26 @@ def test_dedup_within_watermark_drops_redelivery(spark, tmp_path):
     assert sorted(r.event_id for r in rows) == [1, 2, 3]
 
 
+def test_native_dedup_within_watermark_drops_restamped_retries(spark, tmp_path):
+    """dropDuplicatesWithinWatermark: a redelivery with a DIFFERENT event
+    time (producer restamped the retry) in the same batch still dedups on
+    the key — the case plain dropDuplicates(keys + ts) misses."""
+    landing = land(
+        tmp_path,
+        "b1.json",
+        [
+            event(1, "2026-01-01 10:00:00"),
+            event(1, "2026-01-01 10:03:00"),  # restamped retry: same key
+            event(2, "2026-01-01 10:01:00"),
+        ],
+    )
+    stream = read_event_stream(spark, landing)
+    deduped = dedup_within_watermark(stream, ["event_id"])
+    out = drain(deduped.select("event_id", "user_id"), tmp_path, "native_dedup")
+    rows = spark.read.parquet(out).collect()
+    assert sorted(r.event_id for r in rows) == [1, 2]
+
+
 def test_session_counts_gap_split(spark, tmp_path):
     landing = land(
         tmp_path,
