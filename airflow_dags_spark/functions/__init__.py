@@ -8,7 +8,6 @@ from airflow_dags_spark.functions.cleaning import (
     prefix_filter,
     null_or_stale,
     conditional_concat_url,
-    yyyymmdd_int,
 )
 from airflow_dags_spark.functions.json_extract import (
     extract_balanced_json,
@@ -35,7 +34,6 @@ __all__ = [
     "prefix_filter",
     "null_or_stale",
     "conditional_concat_url",
-    "yyyymmdd_int",
     "extract_balanced_json",
     "balanced_json_udf",
     "deterministic_sample",

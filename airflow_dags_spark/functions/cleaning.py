@@ -100,11 +100,6 @@ def conditional_concat_url(href: Column | str, base: str) -> Column:
     return F.when(c.startswith("http"), c).otherwise(F.concat(F.lit(base), c))
 
 
-def yyyymmdd_int(date_col: Column) -> Column:
-    """P16 — date → yyyymmdd integer (dags/pull_new_sales_list.py:92,226)."""
-    return F.date_format(date_col, "yyyyMMdd").cast("int")
-
-
 def sentinel_mark(found: Column, value: Column, sentinel) -> Column:
     """P18 — no-match sentinel so a key is never retried.
 

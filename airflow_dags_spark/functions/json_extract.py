@@ -61,12 +61,6 @@ def balanced_json_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: extract_balanced_json(t))
 
 
-def json_model(col: Column | str, marker: str = "window.jsonModel") -> Column:
-    """Column form of P12 (marker fixed at plan time)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return balanced_json_udf(c)
-
-
 def json_path(col: Column | str, path: str) -> Column:
     """P13 — ad-hoc JSON path access (dags/pull_new_sales_list.py:152-155).
 

@@ -24,12 +24,6 @@ def deterministic_sample(df: DataFrame, key: Column | str, k: int) -> DataFrame:
     return df.orderBy(F.md5(c.cast("string"))).limit(k)
 
 
-def random_sample(df: DataFrame, k: int, seed: int = 42) -> DataFrame:
-    """Literal ORDER BY RANDOM() LIMIT k with a pinned seed — kept for parity
-    with the reference; not oracle-comparable across engines."""
-    return df.orderBy(F.rand(seed)).limit(k)
-
-
 def stratified_sample(
     df: DataFrame, group_col: Column | str, key: Column | str, k: int
 ) -> DataFrame:

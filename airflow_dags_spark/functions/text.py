@@ -162,6 +162,28 @@ def lang_id_heuristic(col: Column | str) -> Column:
     )
 
 
+# The curation quality gate: kept languages and the largest stopword and
+# punctuation ratios a training document may have.
+GATE_LANGUAGES = ("en",)
+MAX_STOPWORD_RATIO = 0.9
+MAX_PUNCT_RATIO = 0.3
+
+
+def quality_gate(df: DataFrame, text_col: str, min_tokens: int) -> DataFrame:
+    """The curation funnel's stage-1 filter: a kept language, stopword and
+    punctuation ratios within their limits, and at least ``min_tokens``
+    tokens. One scan-side predicate (no shuffle, no new columns); the one
+    definition behind jobs/curate_full and the ``curate_funnel_counts``
+    query."""
+    q = quality_columns(text_col)
+    return df.where(
+        lang_id_heuristic(text_col).isin(*GATE_LANGUAGES)
+        & (q["stopword_ratio"] <= MAX_STOPWORD_RATIO)
+        & (q["punct_ratio"] <= MAX_PUNCT_RATIO)
+        & (token_count(text_col) >= min_tokens)
+    )
+
+
 # BPE-ish subword counting ----------------------------------------------------
 
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"

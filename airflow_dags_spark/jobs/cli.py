@@ -10,12 +10,15 @@ One file the orchestrator ships to the cluster:
     spark-submit .../cli.py compact <table> [--target-file-mb 128]
     spark-submit .../cli.py zorder <table> col1,col2 [--n-files 64]
     spark-submit .../cli.py pack-sequences <docs> <out> [--budget 2048]
-    spark-submit .../cli.py curate-export <docs> <out> [--lang en]
     spark-submit .../cli.py wds-export <docs> <out> [--n-shards 8]
     spark-submit .../cli.py semantic-dedup <embeddings> <out> [--threshold 0.95]
     spark-submit .../cli.py reconcile-advisories <advisory> <accepted>
                             [--quarantine] [--verified-path p]
     spark-submit .../cli.py vacuum <table>
+    spark-submit .../cli.py curate-full <docs> <out> [--remove-spans]
+                            [--balance-by col] [--pack-window n]
+    spark-submit .../cli.py dq-audit <table> [--unique c1,c2]
+    spark-submit .../cli.py point-lookup <table> <column> <value>
 
 The HTTP jobs use the stdlib-based fetchers from jobs/live_http.py; tests
 bypass this module and inject fixture fetchers directly (SURVEY.md §7
@@ -69,13 +72,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--key-col", default="doc_id")
     p.add_argument("--text-col", default="text")
     p.add_argument("--budget", type=int, default=2048)
-    p.add_argument("--n-shards", type=int, default=16)
-
-    p = sub.add_parser("curate-export")
-    p.add_argument("docs_path", help="parquet with doc_id + text columns")
-    p.add_argument("output_path")
-    p.add_argument("--lang", default="en")
-    p.add_argument("--min-tokens", type=int, default=24)
     p.add_argument("--n-shards", type=int, default=16)
 
     p = sub.add_parser("wds-export")
@@ -353,36 +349,6 @@ def main(argv: list[str] | None = None) -> None:
         packed.repartition(args.n_shards, "shard").write.mode(
             "overwrite"
         ).partitionBy("shard").parquet(args.output_path)
-    elif args.cmd == "curate-export":
-        # the full curation job: lang gate + quality gate + exact dedup
-        # (min-key survivor keeps its text) -> balanced training shards
-        from pyspark.sql import functions as F
-
-        from airflow_dags_spark.functions.text import (
-            lang_id_heuristic,
-            normalized,
-            quality_columns,
-        )
-        from airflow_dags_spark.operators.export import write_training_shards
-
-        docs = spark.read.parquet(args.docs_path)
-        q = quality_columns("text")
-        gated = docs.where(lang_id_heuristic("text") == args.lang).where(
-            q["n_tokens"] >= args.min_tokens
-        )
-        hashed = gated.withColumn("content_hash", F.md5(normalized("text")))
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("content_hash").orderBy("doc_id")
-        survivors = (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        stats = write_training_shards(
-            survivors, args.output_path, ["doc_id"], args.n_shards
-        )
-        print(stats)
     spark.stop()
 
 

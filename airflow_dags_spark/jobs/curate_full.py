@@ -3,20 +3,14 @@ engine's LLM-data operators, runnable as one job.
 
 Stages (each optional, each observable):
 
-1. quality gate      — language + length/quality thresholds
-                       (functions/text), DQ expectations audit recorded
-2. exact dedup       — md5 content hash, first-key-wins
-3. near dedup        — MinHash banding candidates → exact n-gram Jaccard
-                       verify ≥ threshold, min-key survivor.
-                       ``verify_bucket_cap`` (DEFAULT 8 — a behavior
-                       change vs the uncapped pre-round-13 form) bounds
-                       each band bucket's candidate pairs to cap×width;
-                       recall loss only when a doc's every true near-dup
-                       in a shared bucket ranks below cap false
-                       collisions (see minhash_candidate_pairs). Pass
-                       ``verify_bucket_cap=None`` for the exact
-                       all-pairs-per-bucket verify — at the price of a
-                       width² pair count on boilerplate-heavy corpora
+1. quality gate      — functions/text.quality_gate: language, stopword
+                       and punctuation ratios, ``min_tokens``
+2. exact dedup       — operators/dedup.exact_dedup (min key per content
+                       hash); survivors' rows come back by a key semi-join
+3. near dedup        — operators/dedup.near_dup_losers: MinHash band
+                       candidates capped at 8 representatives per bucket,
+                       exact 3-shingle Jaccard verify ≥ threshold,
+                       min-key survivor
 4. span removal      — (optional, ``remove_spans=True``) substring-grain
                        rewrite: non-owned exactly-duplicated spans removed
                        (operators/dedup.remove_duplicated_spans — the
@@ -46,16 +40,16 @@ Stages (each optional, each observable):
 
 Funnel accounting is single-pass: boundary counts come from Observations
 embedded in the lineage plus carried-forward counts (stage N's rows_in IS
-stage N-1's rows_out), the stage-2 output is DISK_ONLY-persisted for
-stage 3's four-way reuse, and the input therefore streams through the
-pipeline exactly once (tests/test_curate_full.py::
+stage N-1's rows_out), the stage-1 and stage-2 outputs are
+DISK_ONLY-persisted for their multiple consumers, and the input therefore
+streams through the pipeline exactly once (tests/test_curate_full.py::
 test_funnel_is_single_pass). The job returns the funnel —
 ``[{stage, rows_in, rows_out, dropped}, ...]`` — the number the reference
 prints into task logs (dags/pull_new_sales_list.py logging), made a
-first-class result. The stage operators are individually oracle- or
-pytest-verified elsewhere; this module verifies the COMPOSITION: funnel
-monotonicity and end-state equality are tested in
-tests/test_curate_full.py.
+first-class result. Stages 1-3 are the functions the registered
+``curate_funnel_counts`` query calls, so its DuckDB oracle checks this
+job's funnel (tests/test_curate_full.py pins the two equal); funnel
+monotonicity and end-state equality are tested there too.
 
 100 TB shape: stages 1-2 are scan + one md5 shuffle; 3 shuffles band keys
 (bounded by docs × bands); 4 is the bounded-cluster SemDeDup; 5 is one
@@ -64,15 +58,22 @@ hash shuffle. Nothing all-pairs, nothing driver-resident but counters.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from airflow_dags_spark.functions.text import (
-    lang_id_heuristic,
-    normalized,
-    quality_columns,
-    token_count,
+from airflow_dags_spark.functions.text import quality_gate, token_count
+from airflow_dags_spark.operators.dedup import (
+    exact_dedup,
+    near_dup_losers,
+    remove_duplicated_spans,
 )
+
+# Fixed settings of the optional stages.
+SPAN_N_SHINGLE = 8          # span removal: shingle length of a duplicated span
+SEMANTIC_THRESHOLD = 0.95   # semantic dedup: cosine at which docs are dups
+EMB_KEY = "vec_id"          # semantic dedup: embeddings key joined to key_col
+PACK_BUCKET_WIDTH = 65536   # packing: key-range bucket of the prefix sum
 
 
 def curate_full(
@@ -84,34 +85,21 @@ def curate_full(
     key_col: str = "doc_id",
     text_col: str = "text",
     min_tokens: int = 10,
-    max_stopword_ratio: float = 0.9,
-    max_punct_ratio: float = 0.3,
-    languages: tuple[str, ...] = ("en",),
     jaccard_threshold: float = 0.8,
-    verify_bucket_cap: int | None = 8,
     remove_spans: bool = False,
-    span_n_shingle: int = 8,
     span_min_run: int = 2,
-    semantic_threshold: float = 0.95,
-    emb_key: str = "vec_id",
     balance_by: str | None = None,
     balance_target: int | None = None,
     pack_window: int | None = None,
-    pack_bucket_width: int = 65536,
     windows_per_shard: int | None = None,
     n_shards: int = 16,
 ) -> dict:
     """Run the curation funnel; returns ``{"funnel": [...], "result": df}``
     (plus ``"shards"`` when ``out_path`` is given). ``embeddings`` enables
-    the semantic stage (joined on ``key_col == emb_key``)."""
+    the semantic stage (joined on ``key_col == EMB_KEY``). Keys must be
+    unique in ``docs``."""
     from airflow_dags_spark.functions.metrics import with_observation
-    from airflow_dags_spark.functions.text import (
-        jaccard,
-        shingles_from_tokens,
-        tokens,
-    )
     from airflow_dags_spark.operators.clustering import semantic_dedup
-    from airflow_dags_spark.operators.dedup import minhash_candidate_pairs
 
     funnel: list[dict] = []
 
@@ -128,88 +116,31 @@ def curate_full(
     # re-executes upstream lineage just to count it.
     docs, obs_docs = with_observation(docs, "curate_docs", n=F.count(F.lit(1)))
 
-    # 1 — quality gate (scan-stage projections, zero shuffle)
-    q = quality_columns(text_col)
-    scored = (
-        docs.withColumn("__lang", lang_id_heuristic(text_col))
-        .withColumn("__stop", q["stopword_ratio"])
-        .withColumn("__punct", q["punct_ratio"])
-        .withColumn("__tok", token_count(text_col))
+    # 1 — quality gate (one scan-side filter, zero shuffle). Persisted:
+    # stage 2 reads the gated rows twice (the hash aggregate and the
+    # survivor semi-join), and the input must stream once.
+    gated = quality_gate(docs, text_col, min_tokens).persist(
+        StorageLevel.DISK_ONLY
     )
-    gated = (
-        scored.where(F.col("__lang").isin(list(languages)))
-        .where(F.col("__stop") <= max_stopword_ratio)
-        .where(F.col("__punct") <= max_punct_ratio)
-        .where(F.col("__tok") >= min_tokens)
-        .drop("__lang", "__stop", "__punct", "__tok")
-    )
-    gated, obs_gated = with_observation(
-        gated, "curate_gated", n=F.count(F.lit(1))
-    )
-
-    # 2 — exact dedup (one md5 shuffle, first-key-wins)
-    hashed = gated.withColumn("__h", F.md5(normalized(text_col)))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("__h").orderBy(key_col)
-    exact = (
-        hashed.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__h")
-    )
-    # Stage 3 consumes `exact` THREE times (banding, the shingle
-    # projection, the anti-join base). Persisting it (a) makes those
-    # reuses read a local copy instead of re-running stages 1-2 per
-    # consumer and (b) freezes the
-    # observation values above. DISK_ONLY: the deduped corpus must not
-    # compete with executor heap at 100 TB — it spills to local shuffle
-    # disks exactly like an exchange would.
-    from pyspark import StorageLevel
-
-    exact = exact.persist(StorageLevel.DISK_ONLY)
-    n_exact = exact.count()  # ONE action executes stages 1-2, fills cache
+    n_gated = gated.count()  # ONE action executes stage 1, fills cache
     n_docs = int(obs_docs.get["n"])
-    n_gated = int(obs_gated.get["n"])
     record("quality_gate", n_docs, n_gated)
+
+    # 2 — exact dedup (one hash shuffle, min key wins), full rows back by
+    # a key semi-join. Stage 3 consumes `exact` three times (banding, the
+    # shingle projection, the anti-join base); persisting it makes those
+    # reuses read a local copy instead of re-running stage 2 per consumer.
+    # DISK_ONLY: the deduped corpus must not compete with executor heap at
+    # 100 TB — it spills to local shuffle disks exactly like an exchange.
+    survivors = exact_dedup(gated, text_col, key_col).select(key_col)
+    exact = gated.join(survivors, key_col, "left_semi").persist(
+        StorageLevel.DISK_ONLY
+    )
+    n_exact = exact.count()
     record("exact_dedup", n_gated, n_exact)
 
-    # 3 — near dedup: banding candidates → exact verify, min-key survives.
-    # verify_bucket_cap bounds the per-bucket pair quadratic (a corpus
-    # whose near-dup clusters grow with volume would otherwise make this
-    # verify stage O(cluster²) — see minhash_candidate_pairs): each doc
-    # is verified against its buckets' cap smallest keys only, exactly
-    # the members that would survive it.
-    cands = minhash_candidate_pairs(
-        exact, text_col, key_col, bucket_cap=verify_bucket_cap
-    )
-    # verify on PRE-COMPUTED shingle sets: one interpreted shingle build
-    # per doc, native array intersect/union per pair — re-shingling the
-    # joined text per pair row costs pairs×2 lambda evaluations instead
-    # of docs, minutes-vs-seconds at scale (round-13 stress finding).
-    # Tokens staged into their own projection (shingles_from_tokens
-    # contract): the inlined word_shingles form re-splits the text per
-    # element_at — measured 10.2 s vs 0.95 s at sf0.1 (r10).
-    shing = exact.select(
-        F.col(key_col), tokens(text_col).alias("__tk")
-    ).select(
-        F.col(key_col), shingles_from_tokens(F.col("__tk"), 3).alias("__sh")
-    )
-    joined = (
-        cands.join(
-            shing.select(F.col(key_col).alias("key_a"),
-                         F.col("__sh").alias("__sa")), "key_a")
-        .join(
-            shing.select(F.col(key_col).alias("key_b"),
-                         F.col("__sh").alias("__sb")), "key_b")
-    )
-    dup_pairs = joined.where(
-        F.round(jaccard(F.col("__sa"), F.col("__sb")), 6) >= jaccard_threshold
-    )
-    # drop the HIGHER key of every verified pair (min-key-wins, chain-safe:
-    # the minimum of a duplicate chain is never anyone's higher key)
-    losers = dup_pairs.select(
-        F.greatest("key_a", "key_b").alias(key_col)
-    ).distinct()
+    # 3 — near dedup: capped band candidates, exact verify, min key wins
+    losers = near_dup_losers(exact, text_col, key_col, jaccard_threshold)
     near = exact.join(losers, key_col, "left_anti")
 
     # 4 — span removal (optional): substring-grain rewrite of the
@@ -223,12 +154,10 @@ def curate_full(
     n_near_concrete = None
     near_cached = None
     if remove_spans:
-        from airflow_dags_spark.operators.dedup import remove_duplicated_spans
-
         near_cached = near.persist(StorageLevel.DISK_ONLY)
         n_near_concrete = near_cached.count()  # executes stage 3 once
         cleaned = remove_duplicated_spans(
-            near_cached, text_col, key_col, span_n_shingle, span_min_run
+            near_cached, text_col, key_col, SPAN_N_SHINGLE, span_min_run
         )
         # tokens_removed is observed BEFORE the NULL filter: docs whose
         # ENTIRE text was removed (clean_text NULL) are exactly the
@@ -260,10 +189,10 @@ def curate_full(
             near, "curate_near", n=F.count(F.lit(1))
         )
         marked = semantic_dedup(
-            embeddings, semantic_threshold, key_col=emb_key
+            embeddings, SEMANTIC_THRESHOLD, key_col=EMB_KEY
         ).where(F.col("kept"))
         result = near.join(
-            marked.select(F.col(emb_key).alias(key_col)), key_col, "left_semi"
+            marked.select(F.col(EMB_KEY).alias(key_col)), key_col, "left_semi"
         )
 
     # 6 — mixture balance (optional): deterministic per-group downsample.
@@ -297,7 +226,7 @@ def curate_full(
             F.col(key_col), token_count(text_col).alias("__n")
         )
         offsets = token_stream_offsets(
-            counts, key_col, "__n", pack_bucket_width
+            counts, key_col, "__n", PACK_BUCKET_WIDTH
         )
         offsets, obs_pack = with_observation(
             offsets, "curate_pack", n_tokens=F.max("end")
@@ -392,4 +321,5 @@ def curate_full(
     if near_cached is not None:
         near_cached.unpersist(blocking=False)
     exact.unpersist(blocking=False)
+    gated.unpersist(blocking=False)
     return out

@@ -721,27 +721,19 @@ FROM survivors
 @register("curate_corpus", CURATE_ORACLE)
 def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus curation in ONE composed plan: language gate
-    (functions/text.py:lang_id_heuristic) + minimum-length quality gate
-    (quality_columns) -> exact dedup with min-key survivor
-    (operators/dedup.py semantics) -> deterministic training-shard
-    assignment (operators/export.py:portable_shard). The pipeline a user
-    of the engine runs before write_training_shards; at 100 TB the gates
-    run in the scan's codegen stage, the dedup is the only data shuffle
-    (carrying one row per distinct hash), and the shard hash prices only
-    survivors."""
-    from airflow_dags_spark.functions.text import normalized
+    (functions/text.py:lang_id_heuristic) + minimum-length gate ->
+    operators/dedup.exact_dedup (min-key survivor per content hash) ->
+    deterministic training-shard assignment
+    (operators/export.py:portable_shard). At 100 TB the gates run in the
+    scan's codegen stage, the dedup is the only data shuffle (carrying one
+    row per distinct hash), and the shard hash prices only survivors."""
     from airflow_dags_spark.operators.export import portable_shard
 
     d = read_table(spark, sf_dir, "documents")
-    q = quality_columns("text")
-    survivors = (
-        d.where(lang_id_heuristic("text") == "en")
-        .where(q["n_tokens"] >= 24)
-        .select("doc_id", F.md5(normalized("text")).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
+    gated = d.where(lang_id_heuristic("text") == "en").where(
+        token_count("text") >= 24
     )
-    return survivors.select(
+    return exact_dedup(gated, "text", "doc_id").select(
         "content_hash",
         "doc_id",
         "n_copies",

@@ -4,11 +4,11 @@
 - **curate_funnel_counts** — the end-to-end curation FUNNEL itself under
   the driver's hash check: per-stage (rows_in, rows_out, dropped) counts
   for quality gate → exact dedup → near dedup over ``documents``,
-  DuckDB-expressible stage by stage. The production form is
-  ``jobs/curate_full.curate_full`` (single-pass Observation accounting,
-  DISK_ONLY stage caches); this is its driver-checkable mirror — each
-  boundary count re-derived declaratively so the oracle can re-compute
-  the identical funnel.
+  DuckDB-expressible stage by stage. It calls the stage functions
+  ``jobs/curate_full.curate_full`` runs (``quality_gate``,
+  ``exact_dedup``, ``near_dup_losers``), so the oracle checks the job's
+  own code; only the counting differs (declarative counts here,
+  single-pass Observations over DISK_ONLY stage caches there).
 - **sim_pq_store_topk** / **sim_ivf_store_topk** — store-BACKED ANN
   serving (oracle-checked since r11 via the store-vs-direct equivalence
   projection — r10 verdict #1): maintain an index through the persistent
@@ -158,78 +158,30 @@ FROM (
 
 @register("curate_funnel_counts", CURATE_FUNNEL_ORACLE)
 def curate_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The curation-pipeline funnel (jobs/curate_full defaults: en-only,
-    stopword ≤ 0.9, punct ≤ 0.3, ≥10 tokens, Jaccard ≥ 0.8,
-    verify_bucket_cap 8) as per-stage boundary counts — quality gate →
-    exact dedup (min-key survivor count = distinct content hashes) →
-    near dedup (banded candidates capped at 8 bucket representatives per
-    band bucket, exact-Jaccard verify, greatest-key losers) — so the
-    flagship pipeline's shape itself sits under the driver's hash check.
+    """The curation-pipeline funnel at jobs/curate_full's defaults (≥10
+    tokens, Jaccard ≥ 0.8) as per-stage boundary counts: quality gate →
+    exact dedup (min-key survivor count = distinct content hashes) → near
+    dedup (capped band candidates, exact-Jaccard verify, greatest-key
+    losers). Each stage is the function the job calls, so the pipeline's
+    shape itself sits under the driver's hash check.
 
-    Scale shape: the gates are codegen scan filters; exact-dedup's count
-    is ONE map-side-combined hash aggregation; the near tier is the
-    banded candidate equi-join + verify on candidates only (signatures
-    shuffle, text joins only for candidate pairs), with the bucket cap
-    bounding the per-bucket pair count to cap×width — the uncapped form
-    measured ~900× the pairs in the round-13 30× stress run, where
-    salted replicas widen every near-dup cluster 30×. The four boundary
-    counts are single-row aggregates crossJoin-stacked into stage rows —
-    driver-side never sees more than the 3-row funnel. The PRODUCTION
-    form is jobs/curate_full.curate_full: single-pass Observation
-    accounting over persisted stage caches; this mirror re-derives each
-    count declaratively so DuckDB can recompute the identical funnel."""
-    from airflow_dags_spark.functions.text import (
-        jaccard,
-        lang_id_heuristic,
-        normalized,
-        quality_columns,
-        shingles_from_tokens,
-        token_count,
-        tokens,
-    )
-    from airflow_dags_spark.operators.dedup import minhash_candidate_pairs
+    Scale shape: the gate is a codegen scan filter; exact dedup is ONE
+    map-side-combined hash aggregation, with the survivors' text taken
+    back by a key semi-join; the near tier is the banded candidate
+    equi-join + verify on candidates only, with the bucket cap bounding
+    the per-bucket pair count to cap×width. The four boundary counts are
+    single-row aggregates crossJoin-stacked into stage rows — driver-side
+    never sees more than the 3-row funnel. Each count re-executes its
+    upstream lineage, which jobs/curate_full's persisted stage caches
+    avoid."""
+    from airflow_dags_spark.functions.text import quality_gate
+    from airflow_dags_spark.operators.dedup import exact_dedup, near_dup_losers
 
     d = read_table(spark, sf_dir, "documents")
-    q = quality_columns("text")
-    gated = (
-        d.where(lang_id_heuristic("text") == "en")
-        .where(q["stopword_ratio"] <= 0.9)
-        .where(q["punct_ratio"] <= 0.3)
-        .where(token_count("text") >= 10)
-        .select("doc_id", "text")
-    )
-    hashed = gated.select("doc_id", F.md5(normalized("text")).alias("__h"), "text")
-    surv_ids = hashed.groupBy("__h").agg(F.min("doc_id").alias("doc_id"))
-    exact = hashed.join(surv_ids.select("doc_id"), "doc_id", "left_semi").select(
-        "doc_id", "text"
-    )
-    cands = minhash_candidate_pairs(exact, "text", "doc_id", bucket_cap=8)
-    # verify by joining PRE-COMPUTED shingle sets (one array build per
-    # doc) — joining text and re-shingling per pair row would evaluate
-    # the interpreted shingle lambdas pairs×2 times instead of docs
-    # times, the difference between seconds and minutes at sf0.1 (the
-    # intersect/union on the joined arrays is native, not a HOF).
-    # Tokens MUST be staged into their own projection first
-    # (shingles_from_tokens contract): the inlined word_shingles form
-    # re-splits the text per element_at — measured 10.2 s vs 0.95 s for
-    # this projection alone at sf0.1 (r10 optimization round).
-    shing = exact.select("doc_id", tokens("text").alias("__tk")).select(
-        "doc_id", shingles_from_tokens(F.col("__tk"), 3).alias("__sh")
-    )
-    joined = cands.join(
-        shing.select(F.col("doc_id").alias("key_a"), F.col("__sh").alias("__sa")),
-        "key_a",
-    ).join(
-        shing.select(F.col("doc_id").alias("key_b"), F.col("__sh").alias("__sb")),
-        "key_b",
-    )
-    losers = (
-        joined.where(
-            F.round(jaccard(F.col("__sa"), F.col("__sb")), 6) >= 0.8
-        )
-        .select(F.greatest("key_a", "key_b").alias("doc_id"))
-        .distinct()
-    )
+    gated = quality_gate(d, "text", 10).select("doc_id", "text")
+    surv_ids = exact_dedup(gated, "text", "doc_id").select("doc_id")
+    exact = gated.join(surv_ids, "doc_id", "left_semi")
+    losers = near_dup_losers(exact, "text", "doc_id", 0.8)
     cnt = lambda df, name: df.agg(  # noqa: E731
         F.count(F.lit(1)).cast("bigint").alias(name)
     )
@@ -271,10 +223,14 @@ def _served_matches(emb: DataFrame, store_topk: DataFrame, direct_topk: DataFram
     """Per-query equality of two served top-k lists — the oracle-checkable
     projection of store-vs-direct equivalence (r10 verdict #1): one row
     per query id with ``matches`` = the full ordered (cid, sim) result
-    sets agree exactly. Query ids come from the INPUT (vec_id < 8 with a
-    non-null embedding — DuckDB-derivable); a query whose probed cells are
-    empty serves an empty list on both arms and still matches."""
-    key = F.sort_array(F.collect_list(F.struct(F.col("cid"), F.col("sim"))))
+    sets agree, with ``sim`` rounded to 6 dp on both arms (the registry's
+    float rule: two arms that sum the same floats in a different order
+    may differ in the last bits). Query ids come from the INPUT (vec_id <
+    8 with a non-null embedding — DuckDB-derivable); a query whose probed
+    cells are empty serves an empty list on both arms and still matches."""
+    key = F.sort_array(
+        F.collect_list(F.struct(F.col("cid"), F.round("sim", 6).alias("sim")))
+    )
     a = store_topk.groupBy("qid").agg(key.alias("__a"))
     b = direct_topk.groupBy("qid").agg(key.alias("__b"))
     qids = emb.where(F.col("vec_id") < 8).select(F.col("vec_id").alias("qid"))

@@ -37,13 +37,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Scan several tables at once; returns {name: DataFrame}."""
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
 def table_exists(spark: SparkSession, path: str) -> bool:
     """Existence probe for a path-backed table — the engine analog of the
     reference's information_schema check (dags/monthly_price_paid_data.py:65-71).

@@ -689,3 +689,21 @@ def test_ivf_index_sink_drift_triggered_refit(spark, emb, tmp_path):
     assert store.drift_since_fit() == 0.0
     run()  # no new files: nothing moves
     assert store.current_version() == 2
+
+
+def test_served_matches_compares_sims_at_6dp(spark):
+    """The store-vs-direct equivalence rounds ``sim`` to 6 dp on both
+    arms: a last-bits float difference still matches, while a top-k that
+    swaps which cell carries which sim does not."""
+    from airflow_dags_spark.plans.round13 import _served_matches
+
+    qids = spark.createDataFrame([(0,), (1,)], "vec_id bigint")
+    schema = "qid bigint, cid int, sim double"
+    store = spark.createDataFrame(
+        [(0, 1, 0.9), (0, 2, 0.8), (1, 3, 0.7), (1, 4, 0.6)], schema
+    )
+    direct = spark.createDataFrame(
+        [(0, 1, 0.9 + 1e-12), (0, 2, 0.8), (1, 4, 0.7), (1, 3, 0.6)], schema
+    )
+    got = {r.qid: r.matches for r in _served_matches(qids, store, direct).collect()}
+    assert got == {0: True, 1: False}

@@ -124,33 +124,6 @@ def test_cli_pack_sequences(spark, tmp_path, monkeypatch):
     assert viol == 0
 
 
-def test_cli_curate_export(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
-    docs = str(tmp_path / "docs")
-    (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .write.parquet(docs)
-    )
-    out = str(tmp_path / "curated")
-    cli_main(["curate-export", docs, out, "--min-tokens", "24", "--n-shards", "4"])
-    back = spark.read.parquet(out)
-    assert back.count() > 0
-    # curated output keeps full rows + provenance columns
-    assert {"doc_id", "text", "content_hash", "shard"} <= set(back.columns)
-    # dedup held: content hashes are unique
-    assert back.count() == back.select("content_hash").distinct().count()
-    # idempotent: re-run rebuilds identical membership
-    from pyspark.sql import functions as F
-
-    first = {(r.doc_id, r.shard) for r in back.select("doc_id", "shard").collect()}
-    cli_main(["curate-export", docs, out, "--min-tokens", "24", "--n-shards", "4"])
-    again = {
-        (r.doc_id, r.shard)
-        for r in spark.read.parquet(out).select("doc_id", "shard").collect()
-    }
-    assert first == again
-
-
 def test_cli_wds_export_and_semantic_dedup_and_vacuum(spark, tmp_path, monkeypatch, capsys):
     import os
     import tarfile

@@ -24,7 +24,6 @@ def test_full_funnel_on_real_tables(spark, tmp_path):
         embeddings=emb,
         out_path=str(tmp_path / "shards"),
         n_shards=4,
-        semantic_threshold=0.95,
     )
     funnel = out["funnel"]
     stages = [s["stage"] for s in funnel]
@@ -82,13 +81,43 @@ def test_cli_curate_full(spark, tmp_path, monkeypatch, capsys):
     printed = capsys.readouterr().out
     assert "quality_gate" in printed and "near_dedup" in printed
     assert "span_removal" not in printed  # opt-in stage stays off
-    assert spark.read.parquet(out).count() > 0
+    back = spark.read.parquet(out)
+    assert back.count() > 0
+    # idempotent: a re-run rebuilds the identical doc_id -> shard membership
+    shard_of = lambda df: {  # noqa: E731
+        (r.doc_id, r.shard) for r in df.select("doc_id", "shard").collect()
+    }
+    first = shard_of(back)
+    cli_main(["curate-full", docs, out, "--n-shards", "2"])
+    capsys.readouterr()
+    assert shard_of(spark.read.parquet(out)) == first
 
     out2 = str(tmp_path / "out2")
     cli_main(["curate-full", docs, out2, "--n-shards", "2", "--remove-spans"])
     printed2 = capsys.readouterr().out
     assert "span_removal" in printed2
     assert spark.read.parquet(out2).count() > 0
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_registered_funnel_equals_job_funnel(spark, sf):
+    """The registered ``curate_funnel_counts`` query (the one the DuckDB
+    oracle checks) and the job report the same funnel on the same input,
+    so the oracle certifies what the job computes."""
+    from airflow_dags_spark.plans.registry import QUERIES, load_all
+
+    load_all()
+    sf_dir = f"{SF_DIR.rsplit('/', 1)[0]}/{sf}"
+    cols = ("stage", "rows_in", "rows_out", "dropped")
+    registered = [
+        tuple(r[c] for c in cols)
+        for r in QUERIES["curate_funnel_counts"](spark, sf_dir).collect()
+    ]
+    job = curate_full(spark, read_table(spark, sf_dir, "documents"))
+    assert sorted(registered) == sorted(
+        tuple(s[c] for c in cols) for s in job["funnel"]
+    )
+    assert len(registered) == 3
 
 
 def test_funnel_is_single_pass(spark):
@@ -139,7 +168,6 @@ def test_span_removal_stage_rewrites_and_accounts(spark):
         min_tokens=5,
         jaccard_threshold=0.9,
         remove_spans=True,
-        span_n_shingle=8,
         span_min_run=1,
     )
     by = {s["stage"]: s for s in out["funnel"]}
@@ -176,7 +204,6 @@ def test_span_removal_composes_with_semantic_stage(spark, tmp_path):
         out_path=str(tmp_path / "shards"),
         n_shards=2,
         remove_spans=True,
-        semantic_threshold=0.95,
     )
     stages = [s["stage"] for s in out["funnel"]]
     assert stages == [
