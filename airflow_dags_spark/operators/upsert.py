@@ -69,6 +69,7 @@ from typing import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, DataFrameWriter, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import NullType
 
 from airflow_dags_spark.operators import commit
 from airflow_dags_spark.sources.tables import read_parquet, table_exists
@@ -164,12 +165,17 @@ class ParquetTable:
         return commit.exists(self.spark, self.path)
 
     def read(self) -> DataFrame:
+        """The table; a partition column whose only value is null (Spark
+        infers it as ``void``, which no writer accepts as a partition
+        column) reads back as string, so the verbs can rewrite it."""
         try:
-            return read_parquet(self.spark, self.path)
+            df = read_parquet(self.spark, self.path)
         except AnalysisException:
             if not commit.recover(self.spark, self.path):
                 raise
-            return read_parquet(self.spark, self.path)
+            df = read_parquet(self.spark, self.path)
+        void = [p for p in self.partition_by if isinstance(df.schema[p].dataType, NullType)]
+        return df.withColumns({p: F.col(p).cast("string") for p in void}) if void else df
 
     def _writer(self, df: DataFrame, mode: str) -> DataFrameWriter:
         writer = df.write.mode(mode)

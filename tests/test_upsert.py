@@ -367,6 +367,22 @@ def test_merge_into_null_or_empty_partition_keeps_every_row(spark, tmp_path):
     assert {(r["k"], r["part"]) for r in t.read().collect()} == {(2, "a")}
 
 
+def test_rewrite_when_only_the_null_partition_is_left(spark, tmp_path):
+    """A table whose only partition is the null one infers that column as
+    ``void``, which no writer takes as a partition column: the verbs must
+    still rewrite it (a property-test example: merge, delete every other
+    partition, then delete the last key)."""
+    t = ParquetTable(spark, str(tmp_path / "t"), "k", partition_by=["part"])
+    schema = "k int, v int, part string"
+    t.merge_upsert(spark.createDataFrame([(1, 0, "a"), (4, 1, None)], schema), ["k"])
+    t.delete_where(F.col("v") < 1)
+    assert dict(t.read().dtypes)["part"] == "string"
+    t.merge_upsert(spark.createDataFrame([(4, 2, ""), (5, 3, None)], schema), ["k"])
+    assert {(r["k"], r["v"], r["part"]) for r in t.read().collect()} == {(4, 2, None), (5, 3, None)}
+    t.delete_keys(spark.createDataFrame([(4,), (5,)], "k int"))
+    assert t.read().collect() == []
+
+
 # ---------------------------------------------------------------------------
 # one MERGE algebra: the registered K3/K4/K5/K7 queries run it
 # ---------------------------------------------------------------------------
